@@ -592,25 +592,6 @@ def elevation_stats_udf(geojson: pd.Series) -> pd.DataFrame:
                                        "max_elevation"])
 
 
-@F.pandas_udf(StringType())
-def geometry_collection_udf(geoms: pd.Series) -> pd.Series:
-    """array<geojson string> → canonical GeometryCollection string.
-    Null-safe: Spark evaluates UDFs on every row even under a ``when``
-    guard, so null arrays must pass through as null."""
-    return geoms.map(lambda arr: None if arr is None else json.dumps(
-        geometry_collection([json.loads(g) for g in arr]),
-        separators=(",", ":"), sort_keys=True))
-
-
-@F.pandas_udf(StringType())
-def representative_point_udf(geoms: pd.Series) -> pd.Series:
-    """array<geojson string> → Point at the A5 representative position
-    (null-safe like geometry_collection_udf)."""
-    return geoms.map(lambda arr: None if arr is None else json.dumps(
-        {"coordinates": representative_point([json.loads(g) for g in arr]),
-         "type": "Point"}, separators=(",", ":"), sort_keys=True))
-
-
 _ELEV_METRICS_TYPE = StructType([
     StructField("inclined_length_m", DoubleType()),
     StructField("ascent_m", DoubleType()),

@@ -55,7 +55,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     ``edges``: DataFrame with ``src``/``dst`` columns (isolated vertices may
     be passed as self-loops).  Returns ``(vertex, component)`` where
     ``component`` is the minimum vertex id in the component — typed like
-    the input ids (long for integral inputs, string otherwise).
+    the input ids (long for integral inputs, string otherwise).  Raises
+    ``RuntimeError`` when labels still change in round ``max_iterations``:
+    a path of n vertices needs n rounds, n - 1 to propagate and one to
+    see no change.
 
     Replaces the reference's recursive per-seed ``visitObject`` walk
     (SkiAreaClusteringService.ts:705-779) with whole-frontier iteration:
@@ -78,8 +81,12 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                            F.col(dst).cast("long").alias("b"))
         vocab = None
     else:
-        e = edges.select(F.col(src).cast("string").alias("sa"),
-                         F.col(dst).cast("string").alias("sb"))
+        # one cut feeds both ``sym`` and ``vocab``, so the caller's edge
+        # plan runs once
+        e = truncate_lineage(
+            edges.select(F.col(src).cast("string").alias("sa"),
+                         F.col(dst).cast("string").alias("sb")),
+            eager=False, reliable=reliable)
         ids = e.select(F.xxhash64("sa").alias("a"), F.xxhash64("sb").alias("b"))
         vocab = (e.select(F.xxhash64("sa").alias("vid"),
                           F.col("sa").alias("vertex"))
@@ -136,6 +143,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iterations} "
+            "iterations; its labels would split components")
 
     if numeric:
         return labels.select(F.col("v").alias("vertex"),

@@ -1,5 +1,5 @@
 """Ski-area clustering (SURVEY.md §2.9) — the reference's PostGIS-backed
-recursive clustering service re-expressed as checkpointed DataFrame passes.
+recursive clustering service, run region by region.
 
 Reference semantics (src/clustering/SkiAreaClusteringService.ts:337-447):
  1. site ski areas get geometry + activities from their members
@@ -18,13 +18,22 @@ Reference semantics (src/clustering/SkiAreaClusteringService.ts:337-447):
     OSM ski areas without members are removed
 10. ski areas still on a placeholder geometry are removed
 
-The per-seed recursion (visitObject, :705-779) becomes per-activity
-connected components over the 500 m spatial graph: every "claim" pass is
-one grid-bucketed distance self-join + label propagation instead of one
-SQL round-trip per object.  A lazy lineage cut between passes
-(``operators.barrier.truncate_lineage`` — reliable ``checkpoint()`` on a
-cluster when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set) keeps plans
-bounded.
+Every interaction in passes 2–8 is within 500 m of an object or goes
+through site membership, so clustering splits into independent *regions*
+and runs in three steps:
+
+1. one grid-cell distance self-join over objects and ski areas
+   (``proximity_pairs``) measures every pair within 500 m once: its exact
+   ``min_distance_km`` and whether the object is covered by the polygon;
+2. one ``connected_components`` call over those pairs, the object → site
+   ski-area membership edges and a self-loop per vertex gives every object
+   and ski area its region;
+3. one ``groupBy(region).applyInPandas`` runs passes 1–8 and the pass 9/10
+   clean-up as plain Python over the region's rows (``cluster_region``).
+   The per-seed recursion (visitObject, :705-779) becomes per-activity
+   union-find over the region's pair lists, so a region costs O(pairs).
+
+Statistics (pass 9) and the write-back to the layers stay DataFrame joins.
 
 Documented deviations from the sequential reference (the integration
 suite's scenarios still hold): contested transitive claims resolve to the
@@ -32,41 +41,48 @@ lexicographically-smallest ski-area id instead of iteration order, and
 generated ski-area ids are content hashes of the member set instead of
 random UUIDs (deterministic across runs — a distributed-engine
 requirement).
-
-At 100 TB scale: all passes shuffle on grid cells / object ids; the only
-iterative piece is CC with its bounded rounds; per-ski-area python work
-(geometry collections) runs in Arrow-batched UDFs over member arrays.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
-import os
+from collections import defaultdict
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, StringType
+from pyspark.sql.types import (BooleanType, DoubleType, LongType,
+                               StringType, StructField, StructType)
 
 from ..functions import geometry as geo
-from ..functions.geometry import (geometry_collection_udf,
-                                  representative_point_udf,
-                                  geometry_length_km_udf)
 from ..operators.barrier import truncate_lineage
 from ..operators.graph import connected_components
 from .formatters import STATION_ARRAY_DDL
 from .statistics import ski_area_statistics
 
-def _cut(df: DataFrame) -> DataFrame:
-    return truncate_lineage(df, eager=False)
-
-
 MAX_DISTANCE_KM = 0.5       # SkiAreaClusteringService.ts:66
 MERGE_DISTANCE_KM = 0.25    # :826
 STATION_DISTANCE_KM = 0.03  # LiftStationAssociator.ts:12
 ALL_ACTIVITIES = ("downhill", "nordic")
+
+# Columns of the working tables: ``prepare_objects`` rows and ski areas.
+OBJECT_COLUMNS = (
+    "id", "obj_type", "geometry", "activities", "ski_areas",
+    "is_in_ski_area_site", "difficulty", "snowmaking", "snowfarming",
+    "lift_type", "spot_type", "is_basis_for_new_ski_area",
+    "is_in_ski_area_polygon")
+SKI_AREA_COLUMNS = (
+    "id", "name", "sources", "activities", "status", "websites",
+    "wikidata_id", "run_convention", "geometry", "is_polygon", "source")
+# ``cluster_region`` adds these; ``kind`` tells objects from ski areas.
+STATION_COLUMNS = ("associated_lift_id", "inferred_position")
+WALK_COLUMNS = (("kind",) + OBJECT_COLUMNS + STATION_COLUMNS
+                + tuple(c for c in SKI_AREA_COLUMNS if c not in OBJECT_COLUMNS)
+                + ("n_members",))
 
 
 def _act_array(*acts: str) -> Column:
@@ -150,7 +166,7 @@ def prepare_objects(runs: DataFrame, lifts: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# spatial candidate joins (grid cells → exact predicate)
+# the pair table: one grid join (grid cells → exact distance)
 # ---------------------------------------------------------------------------
 
 def _cover_udf(cell_deg: float, pad_cells: int, radius_km: float = 0.0):
@@ -188,237 +204,469 @@ def _cover_udf(cell_deg: float, pad_cells: int, radius_km: float = 0.0):
     return _udf
 
 
-# Skew guard for the cell equi-join: a mega-resort (tens of thousands of
-# objects sharing one ~0.45 km grid cell) makes that cell's candidate set
-# quadratic, and an unsalted equi-join emits ALL of it from a single join
-# task (measured A/B, local[32]: the serial task becomes the bottleneck
-# past ~16k objects/cell — 24k: 377 s unsalted vs 324 s salted and the
-# gap widens quadratically; on a real cluster the same task also writes
-# the entire pair stream to one node's shuffle disk).  Cells where either
-# side exceeds HOT_CELL_ROWS are 2-D salted: each side splits into
-# HOT_CELL_SALTS hash buckets and is replicated across the other side's
-# buckets, so the hot cell's work spreads over SALTS² tasks at a
-# SALTS× replication cost paid ONLY inside hot cells.  Hot cells are
-# detected from a fixed-seed 5% row sample so the (Python) covering-cells
-# UDF does not pay a full second pass; results are identical either way
-# (the dedup + exact predicate sit downstream of the join).
-#
-# Threshold sits at the MEASURED local[32] crossover (16k objects/cell:
-# salting break-even; 8k: salting ~34% slower; 24k: salting 14% faster and
-# the gap grows quadratically).  Below the crossover the SALTS× replication
-# tax outweighs the serial-task win on a single node; the
-# shuffle-disk-funneling argument for salting earlier on a real cluster is
-# plausible but unmeasured, so it does not move the default — tune via
-# OPENSKIDATA_HOT_CELL_ROWS per deployment instead.
-HOT_CELL_ROWS = int(os.environ.get("OPENSKIDATA_HOT_CELL_ROWS", "16000"))
-HOT_CELL_SALTS = 8
-HOT_SAMPLE = 0.05
+def measure_pair(ga: dict, kind_a: str, gb: dict, kind_b: str
+                 ) -> tuple[float, bool]:
+    """(min_distance_km, covered) of two nodes of the pair table.
+    ``covered`` is ST_CoveredBy(object, polygon ski area) for an object
+    paired with a ``polygon`` node; covering implies distance 0."""
+    d = geo.min_distance_km(ga, gb)
+    covered = d == 0.0 and (
+        (kind_a == "object" and kind_b == "polygon"
+         and geo.covered_by(ga, gb))
+        or (kind_b == "object" and kind_a == "polygon"
+            and geo.covered_by(gb, ga)))
+    return d, covered
 
 
-def _pairs(left: DataFrame, right: DataFrame, radius_km: float,
-           predicate) -> DataFrame:
-    """Candidate (lid, lgeom) × (rid, rgeom) pairs via cell equi-join +
-    exact geometry predicate.  ``left``/``right`` must have columns
-    (lid, lgeom) / (rid, rgeom)."""
-    cell = max(radius_km / geo.KM_PER_DEG_LAT, 0.002)
-    pad = int(math.ceil(radius_km / (geo.KM_PER_DEG_LAT * cell)))
-    lx = left.withColumn(
-        "__cell", F.explode(_cover_udf(cell, pad, radius_km)("lgeom")))
-    rx = right.withColumn("__cell", F.explode(_cover_udf(cell, 0)("rgeom")))
-
-    sampled_threshold = HOT_CELL_ROWS * HOT_SAMPLE
-    hot = (left.sample(HOT_SAMPLE, seed=7)
-           .withColumn("__cell",
-                       F.explode(_cover_udf(cell, pad, radius_km)("lgeom")))
-           .groupBy("__cell").count()
-           .filter(F.col("count") > sampled_threshold).select("__cell")
-           .unionByName(
-               right.sample(HOT_SAMPLE, seed=7)
-               .withColumn("__cell", F.explode(_cover_udf(cell, 0)("rgeom")))
-               .groupBy("__cell").count()
-               .filter(F.col("count") > sampled_threshold).select("__cell"))
-           .distinct().withColumn("__hot", F.lit(True)))
-    n_s = F.lit(HOT_CELL_SALTS)
-    salts = F.sequence(F.lit(0), n_s - 1)
-    one = F.array(F.lit(0))
-    lx = (lx.join(F.broadcast(hot), "__cell", "left")
-          .withColumn("__sl", F.when(F.col("__hot").isNotNull(),
-                                     F.pmod(F.xxhash64("lid"), n_s))
-                      .otherwise(F.lit(0)))
-          .withColumn("__sr", F.explode(
-              F.when(F.col("__hot").isNotNull(), salts).otherwise(one)))
-          .drop("__hot"))
-    rx = (rx.join(F.broadcast(hot), "__cell", "left")
-          .withColumn("__sr", F.when(F.col("__hot").isNotNull(),
-                                     F.pmod(F.xxhash64("rid"), n_s))
-                      .otherwise(F.lit(0)))
-          .withColumn("__sl", F.explode(
-              F.when(F.col("__hot").isNotNull(), salts).otherwise(one)))
-          .drop("__hot"))
-    cand = (lx.join(rx, ["__cell", "__sl", "__sr"])
-            .drop("__cell", "__sl", "__sr")
-            .dropDuplicates(["lid", "rid"]))
-
-    @F.pandas_udf(BooleanType())
-    def pred(g1: pd.Series, g2: pd.Series) -> pd.Series:
-        return pd.Series([predicate(json.loads(a), json.loads(b))
-                          for a, b in zip(g1, g2)])
-
-    return cand.filter(pred(F.col("lgeom"), F.col("rgeom")))
+_PAIR_TYPE = StructType([StructField("distance_km", DoubleType()),
+                         StructField("covered", BooleanType())])
 
 
-def dwithin_pairs(left: DataFrame, right: DataFrame,
-                  radius_km: float) -> DataFrame:
-    return _pairs(left, right, radius_km,
-                  lambda a, b: geo.dwithin(a, b, radius_km))
+@F.pandas_udf(_PAIR_TYPE)
+def _measure_udf(ga: pd.Series, ka: pd.Series, gb: pd.Series,
+                 kb: pd.Series) -> pd.DataFrame:
+    return pd.DataFrame(
+        [measure_pair(json.loads(a), x, json.loads(b), y)
+         for a, x, b, y in zip(ga, ka, gb, kb)],
+        columns=["distance_km", "covered"])
 
 
-def covered_by_pairs(objects: DataFrame, polygons: DataFrame) -> DataFrame:
-    """(lid = object) covered by (rid = polygon)."""
-    return _pairs(objects, polygons, 0.01,
-                  lambda a, b: geo.covered_by(a, b))
+def proximity_pairs(nodes: DataFrame) -> DataFrame:
+    """Every pair of ``nodes`` (id, geometry, kind) within MAX_DISTANCE_KM,
+    once with ``a < b``: (a, b, distance_km, covered).  ``kind`` is
+    ``object``, ``polygon`` (a polygon ski area) or ``ski_area``.
+
+    Candidates come from a cell equi-join — the left side padded by the
+    radius — and the exact predicate runs on candidates only.  A hot cell
+    (a mega-resort) is left to AQE's skew join."""
+    cell = MAX_DISTANCE_KM / geo.KM_PER_DEG_LAT
+    pad = int(math.ceil(MAX_DISTANCE_KM / (geo.KM_PER_DEG_LAT * cell)))
+    left = nodes.select(
+        F.col("id").alias("a"), F.col("geometry").alias("ga"),
+        F.col("kind").alias("ka"),
+        F.explode(_cover_udf(cell, pad, MAX_DISTANCE_KM)("geometry"))
+        .alias("cell"))
+    right = nodes.select(
+        F.col("id").alias("b"), F.col("geometry").alias("gb"),
+        F.col("kind").alias("kb"),
+        F.explode(_cover_udf(cell, 0)("geometry")).alias("cell"))
+    cand = (left.join(right, "cell").filter(F.col("a") < F.col("b"))
+            .drop("cell").dropDuplicates(["a", "b"]))
+    return (cand.select("a", "b", _measure_udf("ga", "ka", "gb", "kb")
+                        .alias("m"))
+            .select("a", "b", "m.distance_km", "m.covered")
+            .filter(F.col("distance_km") <= MAX_DISTANCE_KM))
 
 
-def _slim(df: DataFrame, prefix: str) -> DataFrame:
-    return df.select(F.col("id").alias(f"{prefix}id"),
-                     F.col("geometry").alias(f"{prefix}geom"),
-                     F.col("activities").alias(f"{prefix}acts"))
+# ---------------------------------------------------------------------------
+# the per-region walk (plain Python over row dicts)
+# ---------------------------------------------------------------------------
+
+def _dumps(obj) -> str:
+    return json.dumps(obj, separators=(",", ":"), sort_keys=True)
 
 
-def _activity_compatible(lacts: str, racts: str) -> Column:
+def _collection(geoms: list[str]) -> str:
+    """GeometryCollection of member geometry strings, in the given order."""
+    return _dumps(geo.geometry_collection([json.loads(g) for g in geoms]))
+
+
+def _placeholder(geom: str) -> bool:
+    """Python twin of ``_is_placeholder``: integer 360, 360 coordinates."""
+    if "360" not in geom:
+        return False
+    c = json.loads(geom).get("coordinates")
+    return (isinstance(c, list) and len(c) >= 2
+            and all(type(v) is int and v == 360 for v in c[:2]))
+
+
+def _compatible(a: list, b: list) -> bool:
     """Shared activity, treating an empty ski-area activity set as
     wildcard (activitiesForClustering, :617-620)."""
-    return (F.arrays_overlap(F.col(lacts), F.col(racts))
-            | (F.size(F.col(lacts)) == 0) | (F.size(F.col(racts)) == 0))
+    return not a or not b or bool(set(a) & set(b))
 
 
-# ---------------------------------------------------------------------------
-# membership bookkeeping
-# ---------------------------------------------------------------------------
-
-def _assign(objs: DataFrame, assignments: DataFrame,
-            mark_polygon: bool = False) -> DataFrame:
-    """Add (object_id → ski_area_id) assignments to objs.ski_areas."""
-    adds = (assignments.groupBy("object_id")
-            .agg(F.array_sort(F.collect_set("ski_area_id")).alias("__new")))
-    out = (objs.join(adds, objs["id"] == adds["object_id"], "left")
-           .withColumn("ski_areas",
-                       F.when(F.col("__new").isNotNull(),
-                              F.array_sort(F.array_union("ski_areas", "__new")))
-                        .otherwise(F.col("ski_areas"))))
-    if mark_polygon:
-        out = out.withColumn(
-            "is_in_ski_area_polygon",
-            F.col("is_in_ski_area_polygon") | F.col("__new").isNotNull())
-    return out.drop("__new", "object_id")
+def _source_key(src: dict) -> tuple:
+    # Spark's struct ordering: field by field, nulls first
+    return tuple((src[k] is not None, src[k]) for k in ("type", "id"))
 
 
-def _derive_activities(sas: DataFrame, objs: DataFrame) -> DataFrame:
-    """Ski areas with no activities inherit the union of member activities
-    ∩ {downhill, nordic} (getActivitiesBasedOnRunsAndLifts)."""
-    member_acts = (
-        objs.select(F.explode("ski_areas").alias("said"),
-                    F.explode_outer("activities").alias("act"))
-        .filter(F.col("act").isin(*ALL_ACTIVITIES))
-        .groupBy("said")
-        .agg(F.array_sort(F.collect_set("act")).alias("__macts")))
-    return (sas.join(member_acts, sas["id"] == member_acts["said"], "left")
-            .withColumn("activities",
-                        F.when((F.size("activities") == 0)
-                               & F.col("__macts").isNotNull(),
-                               F.col("__macts"))
-                         .otherwise(F.col("activities")))
-            .drop("said", "__macts"))
+def generated_id(member_ids: list[str]) -> str:
+    """``gen_`` + 28 hex digits of sha256 over Spark's
+    ``cast(array<string> as string)`` rendering of the sorted member ids."""
+    text = "[" + ", ".join(sorted(set(member_ids))) + "]"
+    return "gen_" + hashlib.sha256(text.encode()).hexdigest()[:28]
 
 
-def _member_geometry(sas: DataFrame, objs: DataFrame,
-                     only_placeholder: bool = True) -> DataFrame:
-    """Replace (placeholder) ski-area geometry with the member collection."""
-    geoms = (objs.select(F.explode("ski_areas").alias("said"), "geometry")
-             .groupBy("said")
-             .agg(geometry_collection_udf(
-                 F.array_sort(F.collect_list("geometry"))).alias("__mgeom")))
-    cond = F.col("__mgeom").isNotNull()
-    if only_placeholder:
-        cond = cond & _is_placeholder(F.col("geometry"))
-    return (sas.join(geoms, sas["id"] == geoms["said"], "left")
-            .withColumn("geometry", F.when(cond, F.col("__mgeom"))
-                                     .otherwise(F.col("geometry")))
-            .withColumn("is_polygon",
-                        F.when(cond, F.lit(False)).otherwise(F.col("is_polygon")))
-            .drop("said", "__mgeom"))
+def _find(parent: dict, v: str) -> str:
+    root = v
+    while parent[root] != root:
+        root = parent[root]
+    while parent[v] != root:
+        parent[v], v = root, parent[v]
+    return root
 
 
-# ---------------------------------------------------------------------------
-# transitive expansion (passes 3/5/6) as per-activity connected components
-# ---------------------------------------------------------------------------
+def _union(parent: dict, a: str, b: str) -> None:
+    ra, rb = _find(parent, a), _find(parent, b)
+    if ra != rb:
+        parent[max(ra, rb)] = min(ra, rb)
 
-def _transitive_claim(sas: DataFrame, objs: DataFrame, source: str) -> DataFrame:
-    """Objects in no ski area join the nearest-by-500m-chain ski area of
-    ``source`` sharing an activity; returns (object_id, ski_area_id)."""
-    seeds_base = sas.filter(F.col("source") == source) \
-                    .filter(~_is_placeholder(F.col("geometry")))
-    unassigned = objs.filter(F.size("ski_areas") == 0) \
-                     .filter(F.size("activities") > 0)
-    # Derived seed geometry: own geometry ∪ current members (visitObject
-    # searches from the member union, :738-743).
-    member_geoms = (objs.select(F.explode("ski_areas").alias("said"), "geometry")
-                    .groupBy("said")
-                    .agg(F.collect_list("geometry").alias("__mg")))
-    seeds = (seeds_base.join(member_geoms,
-                             seeds_base["id"] == member_geoms["said"], "left")
-             .withColumn("geometry", F.when(
-                 F.col("__mg").isNotNull(),
-                 geometry_collection_udf(F.array_sort(F.array_union(
-                     F.array("geometry"), "__mg"))))
-                 .otherwise(F.col("geometry")))
-             .drop("said", "__mg"))
 
-    # One CC over the union of the per-activity graphs: vertices are
-    # "activity|id" so downhill and nordic chains never mix (the
-    # activity-narrowing of visitObject's traversal), yet a single label
-    # propagation covers both — half the iterative jobs.
-    def act_nodes(act):
-        act_seeds = seeds.filter(
-            F.array_contains("activities", act) | (F.size("activities") == 0))
-        act_objs = unassigned.filter(F.array_contains("activities", act))
-        return (_slim(act_seeds, "l").select("lid", "lgeom")
-                .unionByName(_slim(act_objs, "l").select("lid", "lgeom"))
-                .withColumn("__act", F.lit(act)))
+class _Region:
+    """One region's working tables, mutated pass by pass."""
 
-    nodes = act_nodes(ALL_ACTIVITIES[0])
-    for act in ALL_ACTIVITIES[1:]:
-        nodes = nodes.unionByName(act_nodes(act))
-    # distance pairs computed once on distinct geometries, then re-keyed
-    # per activity (both endpoints must carry the same activity).
-    geoms = nodes.select("lid", "lgeom").distinct()
-    right = geoms.select(F.col("lid").alias("rid"),
-                         F.col("lgeom").alias("rgeom"))
-    prs = dwithin_pairs(geoms, right, MAX_DISTANCE_KM) \
-        .select(F.col("lid").alias("a"), F.col("rid").alias("b"))
-    tagged_a = nodes.select(F.col("lid").alias("a"), F.col("__act").alias("act_a"))
-    tagged_b = nodes.select(F.col("lid").alias("b"), F.col("__act").alias("act_b"))
-    edges = (prs.join(tagged_a, "a").join(tagged_b, "b")
-             .filter(F.col("act_a") == F.col("act_b"))
-             .select(F.concat_ws("|", "act_a", "a").alias("src"),
-                     F.concat_ws("|", "act_b", "b").alias("dst")))
-    comps = connected_components(edges)
-    comps = comps.select(
-        F.split_part(F.col("vertex"), F.lit("|"), F.lit(2)).alias("vid"),
-        "component")
+    def __init__(self, objects, ski_areas, pairs):
+        self.objs = sorted(({**o, "associated_lift_id": None,
+                             "inferred_position": None} for o in objects),
+                           key=lambda o: o["id"])
+        self.sas = sorted((dict(s) for s in ski_areas),
+                          key=lambda s: s["id"])
+        self.obj = {o["id"]: o for o in self.objs}
+        self.nbrs = defaultdict(list)
+        self.dist = {}
+        self.covered = set()     # (object id, polygon ski-area id)
+        for a, b, d, covered in sorted(pairs):
+            self.nbrs[a].append((b, d))
+            self.nbrs[b].append((a, d))
+            self.dist[a, b] = self.dist[b, a] = d
+            if covered:
+                self.covered.add((a, b) if a in self.obj else (b, a))
+        self._shapes = {}
 
-    seed_ids = seeds.select(F.col("id").alias("vid"),
-                            F.lit(True).alias("is_seed"))
-    labeled = comps.join(seed_ids, "vid", "left")
-    # component → claiming seed (min seed id, deterministic)
-    claims = (labeled.filter(F.col("is_seed"))
-              .groupBy("component")
-              .agg(F.min("vid").alias("ski_area_id")))
-    obj_ids = unassigned.select(F.col("id").alias("vid"))
-    return (labeled.join(obj_ids, "vid")
-            .join(claims, "component")
-            .select(F.col("vid").alias("object_id"), "ski_area_id")
-            .distinct())
+    def shape(self, geom: str) -> dict:
+        if geom not in self._shapes:
+            self._shapes[geom] = json.loads(geom)
+        return self._shapes[geom]
+
+    def members(self) -> dict[str, list[dict]]:
+        out = defaultdict(list)
+        for o in self.objs:
+            for sid in o["ski_areas"]:
+                out[sid].append(o)
+        return out
+
+    def assign(self, new: dict[str, set], polygon: bool = False) -> None:
+        for oid, sids in new.items():
+            o = self.obj[oid]
+            o["ski_areas"] = sorted(set(o["ski_areas"]) | sids)
+            if polygon:
+                o["is_in_ski_area_polygon"] = True
+
+    def derive_activities(self) -> None:
+        """Ski areas with no activities inherit the union of member
+        activities ∩ {downhill, nordic} (getActivitiesBasedOnRunsAndLifts)."""
+        members = self.members()
+        for s in self.sas:
+            if not s["activities"]:
+                acts = sorted({a for m in members[s["id"]]
+                               for a in m["activities"]
+                               if a in ALL_ACTIVITIES})
+                if acts:
+                    s["activities"] = acts
+
+    def site_geometry(self) -> None:
+        """Pass 1: placeholder geometries become the member collection."""
+        self.derive_activities()
+        members = self.members()
+        for s in self.sas:
+            ms = members[s["id"]]
+            if ms and _placeholder(s["geometry"]):
+                s["geometry"] = _collection(sorted(m["geometry"] for m in ms))
+                s["is_polygon"] = False
+
+    def polygon_claims(self) -> None:
+        """Pass 2: OSM polygons claim covered objects, then go when they
+        have no run or lift, or when over half of their members' length
+        is in a site relation (:654-700)."""
+        polys = {s["id"]: s for s in self.sas
+                 if s["is_polygon"] and s["source"] == "openstreetmap"}
+        contained = defaultdict(list)
+        for oid, sid in sorted(self.covered):
+            if sid in polys and _compatible(self.obj[oid]["activities"],
+                                            polys[sid]["activities"]):
+                contained[sid].append(self.obj[oid])
+        dropped = set()
+        for sid in polys:
+            lengths = [(o["is_in_ski_area_site"],
+                        geo.geometry_length_km(self.shape(o["geometry"])))
+                       for o in contained[sid]
+                       if o["obj_type"] in ("run", "lift")]
+            total = sum(length for _, length in lengths)
+            site = sum(length for in_site, length in lengths if in_site)
+            if not lengths or (total > 0 and site / total > 0.5):
+                dropped.add(sid)
+        self.sas = [s for s in self.sas if s["id"] not in dropped]
+        new = defaultdict(set)
+        for sid, objs in contained.items():
+            if sid not in dropped:
+                for o in objs:
+                    new[o["id"]].add(sid)
+        self.assign(new, polygon=True)
+        self.derive_activities()
+
+    def transitive_claims(self, source: str) -> None:
+        """Passes 3/5: objects in no ski area join the ski areas of
+        ``source`` they chain to within 500 m over a shared activity; a
+        component with several seeds goes to the smallest seed id.
+
+        A seed searches from its own geometry plus its members
+        (visitObject, :738-743): that GeometryCollection is measured with
+        ``geo.dwithin`` against each candidate near one of its parts."""
+        members = self.members()
+        seeds = {s["id"]: s for s in self.sas
+                 if s["source"] == source and not _placeholder(s["geometry"])}
+        unassigned = {o["id"]: o for o in self.objs
+                      if not o["ski_areas"] and o["activities"]}
+        search, parts_of = {}, defaultdict(list)
+        for sid, s in seeds.items():
+            ms = members[sid]
+            search[sid] = s["geometry"]
+            if ms:
+                search[sid] = _collection(sorted(
+                    {s["geometry"], *(m["geometry"] for m in ms)}))
+            for part in (sid, *(m["id"] for m in ms)):
+                parts_of[part].append(sid)
+
+        def linked(sid: str, v: str) -> bool:
+            if not members[sid] and not members[v]:
+                # plain geometries on both sides: the pair table has it
+                return self.dist.get((sid, v), math.inf) <= MAX_DISTANCE_KM
+            other = search[v] if v in search else unassigned[v]["geometry"]
+            return geo.dwithin(self.shape(search[sid]), self.shape(other),
+                               MAX_DISTANCE_KM)
+
+        # Each seed's links, measured once: geometry does not depend on
+        # the activity, and a link counts in some activity's graph exactly
+        # when the two sides are activity-compatible.  Candidacy is
+        # symmetric, so a seed pair is measured from its smaller id.
+        links = defaultdict(set)
+        for sid, s in seeds.items():
+            near = set()
+            for part in (sid, *(m["id"] for m in members[sid])):
+                near.add(part)
+                near.update(v for v, d in self.nbrs[part]
+                            if d <= MAX_DISTANCE_KM)
+            others = {s2 for v in near for s2 in parts_of.get(v, ())
+                      if s2 > sid}
+            for v in sorted(others | (near & unassigned.keys())):
+                acts = (seeds[v] if v in seeds else unassigned[v])["activities"]
+                if _compatible(s["activities"], acts) and linked(sid, v):
+                    links[sid].add(v)
+
+        new = defaultdict(set)
+        for act in ALL_ACTIVITIES:
+            act_seeds = sorted(sid for sid, s in seeds.items()
+                               if act in s["activities"] or not s["activities"])
+            act_objs = {oid for oid, o in unassigned.items()
+                        if act in o["activities"]}
+            parent = {v: v for v in (*act_seeds, *act_objs)}
+            for oid in sorted(act_objs):
+                for v, d in self.nbrs[oid]:
+                    if d <= MAX_DISTANCE_KM and v in act_objs:
+                        _union(parent, oid, v)
+            for sid in act_seeds:
+                for v in links[sid]:
+                    if v in parent:
+                        _union(parent, sid, v)
+            claimer = {}
+            for sid in act_seeds:
+                claimer.setdefault(_find(parent, sid), sid)
+            for oid in act_objs:
+                root = _find(parent, oid)
+                if root in claimer:
+                    new[oid].add(claimer[root])
+        self.assign(new)
+        self.derive_activities()
+
+    def merge_skimap(self) -> None:
+        """Pass 4: Skimap.org areas within 250 m of an object of another
+        source's ski area merge into it and disappear (A4 merge,
+        MergeSkiAreaObjects.ts:8-100)."""
+        by_id = {s["id"]: s for s in self.sas}
+        merges = defaultdict(set)
+        for sm in self.sas:
+            if sm["source"] != "skimap.org":
+                continue
+            for v, d in self.nbrs[sm["id"]]:
+                o = self.obj.get(v)
+                if (o is None or d > MERGE_DISTANCE_KM
+                        or not _compatible(sm["activities"], o["activities"])):
+                    continue
+                for tid in o["ski_areas"]:
+                    target = by_id.get(tid)
+                    if target is not None and target["source"] not in (
+                            None, "skimap.org"):
+                        merges[tid].add(sm["id"])
+        for tid, sm_ids in merges.items():
+            target = by_id[tid]
+            sms = [by_id[i] for i in sm_ids]
+            names = [s["name"] for s in sms if s["name"] is not None]
+            if target["name"] is None and names:
+                target["name"] = min(names)
+            sources = {_source_key(x): x for x in target["sources"]}
+            for s in sms:
+                sources.update((_source_key(x), x) for x in s["sources"])
+            target["sources"] = [sources[k] for k in sorted(sources)]
+            target["activities"] = sorted(
+                {*target["activities"], *(a for s in sms
+                                          for a in s["activities"])})
+            # website preference (MergeSkiAreaObjects.ts:84-100): an OSM
+            # target keeps its own websites — Skimap.org URLs are usually
+            # near-duplicates; union only when the target has none.
+            if not target["websites"]:
+                target["websites"] = sorted({w for s in sms
+                                             for w in s["websites"]})
+        merged = set().union(*merges.values())
+        self.sas = [s for s in self.sas if s["id"] not in merged]
+
+    def generate(self) -> None:
+        """Pass 6: components of unassigned objects sharing an activity
+        within 500 m become generated ski areas when a basis run seeds them
+        (:903-1032); downhill drops when the cluster has no lift."""
+        # an object without positions is within 500 m of nothing, itself
+        # included, so it joins no component
+        unassigned = {
+            o["id"]: o for o in self.objs
+            if not o["ski_areas"] and o["activities"]
+            and next(geo.iter_positions(self.shape(o["geometry"])), None)
+            is not None}
+        parent = {oid: oid for oid in unassigned}
+        for oid, o in unassigned.items():
+            acts = set(o["activities"])
+            for v, d in self.nbrs[oid]:
+                if (d <= MAX_DISTANCE_KM and v in unassigned
+                        and acts & set(unassigned[v]["activities"])):
+                    _union(parent, oid, v)
+        comps = defaultdict(list)
+        for oid in sorted(unassigned):
+            comps[_find(parent, oid)].append(unassigned[oid])
+        new = defaultdict(set)
+        for ms in comps.values():
+            basis = [m for m in ms if m["is_basis_for_new_ski_area"]]
+            acts = sorted({a for m in basis for a in m["activities"]})
+            if not any(m["obj_type"] == "lift" for m in ms):
+                acts = [a for a in acts if a != "downhill"]
+            if not basis or not acts:
+                continue
+            sid = generated_id([m["id"] for m in ms])
+            assigned = [m for m in ms if set(m["activities"]) & set(acts)]
+            self.sas.append({
+                "id": sid, "name": None, "sources": [], "activities": acts,
+                "status": "operating", "websites": [], "wikidata_id": None,
+                "run_convention": "europe",
+                "geometry": _collection(sorted(m["geometry"]
+                                               for m in assigned)),
+                "is_polygon": False, "source": "openstreetmap"})
+            for m in assigned:
+                new[m["id"]].add(sid)
+        self.assign(new)
+
+    def associate_stations(self) -> None:
+        """Pass 8 (LiftStationAssociator.ts:97-153): each lift station
+        snaps to the nearest lift within 30 m (ties: a shared ski area,
+        then lift id); its position comes from its pre-snap elevation vs
+        the lift's range (:37-54, :186-214).  Orphans go (:88-94)."""
+        kept = []
+        for o in self.objs:
+            if o["spot_type"] != "lift_station":
+                kept.append(o)
+                continue
+            cands = []
+            for lid, d in self.nbrs[o["id"]]:
+                lift = self.obj.get(lid)
+                if (d <= STATION_DISTANCE_KM and lift is not None
+                        and lift["obj_type"] == "lift"):
+                    shares = bool(set(o["ski_areas"]) & set(lift["ski_areas"]))
+                    cands.append((d, not shares, lid))
+            if not cands:
+                continue
+            lid = min(cands)[2]
+            line = self.shape(self.obj[lid]["geometry"])
+            point = self.shape(o["geometry"])["coordinates"]
+            o["inferred_position"] = geo.infer_station_position(
+                point[2] if len(point) >= 3 else None, line)
+            o["geometry"] = _dumps({
+                "coordinates": geo.snap_point_to_line(point, line),
+                "type": "Point"})
+            o["associated_lift_id"] = lid
+            kept.append(o)
+        self.objs = kept
+
+    def finish(self) -> None:
+        """Passes 9/10: count members; OSM ski areas without members
+        (:1192-1197) and placeholder geometries (:1244-1271) go; other
+        non-polygon areas move to the members' representative point (A5)."""
+        members = self.members()
+        kept = []
+        for s in self.sas:
+            ms = members[s["id"]]
+            s["n_members"] = len(ms)
+            if not ms and s["source"] in (None, "openstreetmap"):
+                continue
+            if _placeholder(s["geometry"]):
+                continue
+            if not s["is_polygon"] and ms:
+                s["geometry"] = _dumps({
+                    "coordinates": geo.representative_point(
+                        [json.loads(g) for g in sorted(m["geometry"]
+                                                       for m in ms)]),
+                    "type": "Point"})
+            kept.append(s)
+        self.sas = kept
+
+
+def cluster_region(objects, ski_areas, pairs) -> tuple[list, list]:
+    """Passes 1–8 and the pass 9/10 clean-up over one region's rows.
+
+    ``objects`` are dicts with the ``OBJECT_COLUMNS`` of
+    ``prepare_objects``, ``ski_areas`` dicts with ``SKI_AREA_COLUMNS``
+    and ``pairs`` the region's ``(a, b, distance_km, covered)`` rows of
+    ``proximity_pairs``.  Returns ``(objects, ski_areas)``: the objects
+    that stay, with ``associated_lift_id`` and ``inferred_position`` added,
+    and the ski areas that stay, with ``n_members`` added.  Rows are walked
+    in id order, so the result does not depend on input order."""
+    region = _Region(objects, ski_areas, pairs)
+    region.site_geometry()
+    region.polygon_claims()
+    region.transitive_claims("openstreetmap")
+    region.merge_skimap()
+    region.transitive_claims("skimap.org")
+    region.generate()
+    region.associate_stations()
+    region.finish()
+    return region.objs, region.sas
+
+
+def _plain(v):
+    """Arrow-to-pandas values back to Python lists, dicts and scalars."""
+    if isinstance(v, np.ndarray):
+        return [_plain(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _plain(x) for k, x in v.items()}
+    if isinstance(v, np.generic):
+        return v.item()
+    return v
+
+
+def _records(rows: pd.DataFrame, columns) -> list[dict]:
+    return [dict(zip(columns, map(_plain, vals)))
+            for vals in rows[list(columns)].itertuples(index=False, name=None)]
+
+
+def _walk_group(rows: pd.DataFrame) -> pd.DataFrame:
+    """``applyInPandas`` body: one region's tagged rows → walked rows."""
+    kind = rows["kind"]
+    pairs = rows[kind == "pair"]
+    objs, sas = cluster_region(
+        _records(rows[kind == "object"], OBJECT_COLUMNS),
+        _records(rows[kind == "ski_area"], SKI_AREA_COLUMNS),
+        zip(pairs["id"], pairs["other"], pairs["distance_km"].map(float),
+            pairs["covered"].map(bool)))
+    out = ([{"kind": "object", **o} for o in objs]
+           + [{"kind": "ski_area", **s} for s in sas])
+    return pd.DataFrame({c: pd.Series([r.get(c) for r in out], dtype=object)
+                         for c in WALK_COLUMNS})
 
 
 # ---------------------------------------------------------------------------
@@ -433,167 +681,65 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
     layers.  ``ski_areas.ski_areas``-style membership lives on the objects
     (ids of their ski areas), exactly like the reference's working table.
     """
-    objs = prepare_objects(runs, lifts, spots).transform(_cut)
-    sas = (ski_areas.select(
+    objs = prepare_objects(runs, lifts, spots)
+    sas = ski_areas.select(
         "id", "name", "sources", "activities", "status", "websites",
         "wikidata_id", "run_convention", "geometry",
         F.get_json_object("geometry", "$.type").isin("Polygon", "MultiPolygon")
             .alias("is_polygon"),
         # null-safe first-source probe (ANSI: [0] on empty would throw)
         F.get(F.col("sources"), 0)["type"].alias("source"))
-        .transform(_cut))
 
-    # Pass 1 — site ski areas: geometry + activities from members.
-    sas = _derive_activities(sas, objs)
-    sas = _member_geometry(sas, objs, only_placeholder=True)
-    sas = sas.transform(_cut)
+    # Step 1: the pair table.  Placeholder sites have no place yet; they
+    # reach their members through membership edges.
+    nodes = objs.select("id", "geometry", F.lit("object").alias("kind")) \
+        .unionByName(sas.filter(~_is_placeholder(F.col("geometry"))).select(
+            "id", "geometry",
+            F.when(F.col("is_polygon"), "polygon").otherwise("ski_area")
+            .alias("kind")))
+    pairs = truncate_lineage(proximity_pairs(nodes))
 
-    # Pass 2 — OSM polygon ski areas claim contained objects.
-    polys = sas.filter(F.col("is_polygon") & (F.col("source") == "openstreetmap"))
-    contained = covered_by_pairs(
-        _slim(objs, "l"), _slim(polys, "r")) \
-        .filter(_activity_compatible("lacts", "racts")) \
-        .select(F.col("lid").alias("object_id"),
-                F.col("rid").alias("ski_area_id"))
-    contained = contained.transform(_cut)
+    # Step 2: regions = components of pairs + site membership + self-loops.
+    # Vertices are hashed to longs: a region label only has to be shared,
+    # and a hash collision merely merges two regions.
+    edges = (pairs.select(F.xxhash64("a").alias("src"),
+                          F.xxhash64("b").alias("dst"))
+             .unionByName(objs.select("id", F.explode("ski_areas").alias("sa"))
+                          .select(F.xxhash64("id").alias("src"),
+                                  F.xxhash64("sa").alias("dst")))
+             .unionByName(objs.select(F.xxhash64("id").alias("src"),
+                                      F.xxhash64("id").alias("dst")))
+             .unionByName(sas.select(F.xxhash64("id").alias("src"),
+                                     F.xxhash64("id").alias("dst"))))
+    regions = connected_components(edges)
 
-    # removal rules: no members, or >50% of member length in a site.
-    member_lengths = (
-        contained.join(objs.select(F.col("id").alias("object_id"),
-                                   "obj_type", "is_in_ski_area_site",
-                                   geometry_length_km_udf("geometry")
-                                   .alias("__len")),
-                       "object_id")
-        .filter(F.col("obj_type").isin("run", "lift"))
-        .groupBy("ski_area_id")
-        .agg(F.sum("__len").alias("total_len"),
-             F.sum(F.when(F.col("is_in_ski_area_site"), F.col("__len"))
-                   .otherwise(0.0)).alias("site_len"),
-             F.count("*").alias("n_members")))
-    removed_polys = member_lengths.filter(
-        (F.col("total_len") > 0)
-        & (F.col("site_len") / F.col("total_len") > 0.5)) \
-        .select(F.col("ski_area_id").alias("id"))
-    empty_polys = polys.join(
-        member_lengths.select("ski_area_id"),
-        polys["id"] == F.col("ski_area_id"), "left_anti").select("id")
-    dropped = removed_polys.unionByName(empty_polys).transform(_cut)
-
-    sas = sas.join(dropped, "id", "left_anti").transform(_cut)
-    contained_kept = contained.join(
-        dropped, contained["ski_area_id"] == dropped["id"], "left_anti")
-    objs = _assign(objs, contained_kept, mark_polygon=True)
-    sas = _derive_activities(sas, objs).transform(_cut)
-    objs = objs.transform(_cut)
-
-    # Pass 3 — transitive expansion of OSM ski areas.
-    claims = _transitive_claim(sas, objs, "openstreetmap")
-    objs = _assign(objs, claims).transform(_cut)
-    sas = _derive_activities(sas, objs).transform(_cut)
-
-    # Pass 4 — merge Skimap.org areas into nearby OSM areas (250 m to any
-    # object of the OSM area, activity compatible).
-    skimap = sas.filter(F.col("source") == "skimap.org")
-    near = dwithin_pairs(_slim(skimap, "l"), _slim(objs, "r"),
-                         MERGE_DISTANCE_KM) \
-        .filter(_activity_compatible("lacts", "racts"))
-    targets = (near.join(objs.select(F.col("id").alias("rid"),
-                                     F.explode("ski_areas").alias("target_id")),
-                         "rid")
-               .select(F.col("lid").alias("skimap_id"), "target_id")
-               .distinct())
-    # target must have a different source
-    t_sa = sas.select(F.col("id").alias("target_id"),
-                      F.col("source").alias("target_source"))
-    merges = (targets.join(t_sa, "target_id")
-              .filter(F.col("target_source") != "skimap.org")
-              .drop("target_source")
-              .transform(_cut))
-
-    merged_props = (
-        merges.join(skimap.select(F.col("id").alias("skimap_id"),
-                                  F.col("name").alias("sm_name"),
-                                  F.col("sources").alias("sm_sources"),
-                                  F.col("activities").alias("sm_acts"),
-                                  F.col("websites").alias("sm_sites")),
-                    "skimap_id")
-        .groupBy("target_id")
-        .agg(F.min("sm_name").alias("__sm_name"),
-             F.array_sort(F.array_distinct(F.flatten(
-                 F.collect_list("sm_sources")))).alias("__sm_sources"),
-             F.array_sort(F.array_distinct(F.flatten(
-                 F.collect_list("sm_acts")))).alias("__sm_acts"),
-             F.array_sort(F.array_distinct(F.flatten(
-                 F.collect_list("sm_sites")))).alias("__sm_sites")))
-    sas = (sas.join(merged_props, sas["id"] == merged_props["target_id"], "left")
-           # A4 merge (MergeSkiAreaObjects.ts:8-100): keep target name,
-           # union sources/activities/websites.
-           .withColumn("name", F.coalesce("name", "__sm_name"))
-           .withColumn("sources", F.when(
-               F.col("__sm_sources").isNotNull(),
-               F.array_sort(F.array_union("sources", "__sm_sources")))
-               .otherwise(F.col("sources")))
-           .withColumn("activities", F.when(
-               F.col("__sm_acts").isNotNull(),
-               F.array_sort(F.array_union("activities", "__sm_acts")))
-               .otherwise(F.col("activities")))
-           # website preference (MergeSkiAreaObjects.ts:84-100): when the
-           # OSM-sourced target has its own websites, keep ONLY those —
-           # Skimap.org URLs are usually near-duplicates that can't be
-           # string-deduped; union only when the target has none.
-           .withColumn("websites", F.when(
-               F.col("__sm_sites").isNotNull() & (F.size("websites") == 0),
-               F.array_sort(F.array_union("websites", "__sm_sites")))
-               .otherwise(F.col("websites")))
-           .drop("target_id", "__sm_name", "__sm_sources", "__sm_acts",
-                 "__sm_sites"))
-    sas = sas.join(merges.select(F.col("skimap_id").alias("id")).distinct(),
-                   "id", "left_anti").transform(_cut)
-
-    # Pass 5 — transitive expansion of remaining Skimap.org ski areas.
-    claims = _transitive_claim(sas, objs, "skimap.org")
-    objs = _assign(objs, claims).transform(_cut)
-    sas = _derive_activities(sas, objs).transform(_cut)
-
-    # Pass 6 — generate ski areas from still-unassigned runs.
-    gen_sas, gen_assign = _generate_ski_areas(objs)
-    if gen_sas is not None:
-        sas = sas.unionByName(gen_sas).transform(_cut)
-        objs = _assign(objs, gen_assign).transform(_cut)
-
-    # Pass 8 — lift stations ↔ lifts (J5/W1 argmin within 30 m).
-    objs, station_assoc = _associate_stations(objs)
-
-    # Pass 9/10 — augment + cleanup.
-    member_counts = (objs.select(F.explode("ski_areas").alias("said"))
-                     .groupBy("said").agg(F.count("*").alias("n_members")))
-    sas = (sas.join(member_counts, sas["id"] == F.col("said"), "left")
-           .withColumn("n_members", F.coalesce("n_members", F.lit(0)))
-           .drop("said"))
-    # OSM ski areas without members removed (:1192-1197); placeholder
-    # geometries removed (:1244-1271).
-    sas = sas.filter(~((F.col("source") == "openstreetmap")
-                       & (F.col("n_members") == 0)))
-    sas = sas.filter(~_is_placeholder(F.col("geometry")))
-
-    # representative point for non-polygon ski areas (A5)
-    member_geoms = (objs.select(F.explode("ski_areas").alias("said"), "geometry")
-                    .groupBy("said")
-                    .agg(F.array_sort(F.collect_list("geometry")).alias("__mg")))
-    sas = (sas.join(member_geoms, sas["id"] == F.col("said"), "left")
-           .withColumn("geometry", F.when(
-               (~F.col("is_polygon")) & F.col("__mg").isNotNull(),
-               representative_point_udf(F.col("__mg")))
-               .otherwise(F.col("geometry")))
-           .drop("said", "__mg"))
+    # Step 3: passes 1–10 per region.
+    tagged = (objs.withColumn("kind", F.lit("object"))
+              .unionByName(sas.withColumn("kind", F.lit("ski_area")),
+                           allowMissingColumns=True)
+              .unionByName(pairs.select(
+                  F.col("a").alias("id"), F.col("b").alias("other"),
+                  "distance_km", "covered", F.lit("pair").alias("kind")),
+                  allowMissingColumns=True))
+    rows = (tagged.join(regions, F.xxhash64("id") == regions["vertex"])
+            .withColumnRenamed("component", "region"))
+    types = {f.name: f.dataType for f in (*objs.schema, *sas.schema)}
+    types.update(kind=StringType(), associated_lift_id=StringType(),
+                 inferred_position=StringType(), n_members=LongType())
+    walked = truncate_lineage(rows.groupBy("region").applyInPandas(
+        _walk_group, StructType([StructField(c, types[c])
+                                 for c in WALK_COLUMNS])))
+    objs = (walked.filter(F.col("kind") == "object")
+            .select(*OBJECT_COLUMNS, *STATION_COLUMNS))
+    sas = (walked.filter(F.col("kind") == "ski_area")
+           .select(*SKI_AREA_COLUMNS, "n_members"))
 
     stats = ski_area_statistics(
         objs.filter(F.col("obj_type") == "run"),
         objs.filter(F.col("obj_type") == "lift")
-            .withColumn("status", F.lit("operating")).withColumn(
-                "lift_type", F.col("lift_type")))
+            .withColumn("status", F.lit("operating")))
     sas = (sas.join(stats, sas["id"] == stats["ski_area_id"], "left")
-           .drop("ski_area_id").transform(_cut))
+           .drop("ski_area_id"))
 
     # write memberships back to the layers
     def apply_membership(layer: DataFrame) -> DataFrame:
@@ -608,11 +754,12 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
     # Station write-back (J5/W3): spots get snapped geometry + liftId +
     # inferred position, orphans drop; lifts get the stations[] array of
     # station features (FeatureExporter.ts:95-114).
+    station_assoc = objs.filter(F.col("associated_lift_id").isNotNull())
     spots_out = (apply_membership(spots).join(
         station_assoc.select(
-            "station_id",
-            F.col("lift_id").alias("__alift"),
-            F.col("snapped_geometry").alias("__snapg"),
+            F.col("id").alias("station_id"),
+            F.col("associated_lift_id").alias("__alift"),
+            F.col("geometry").alias("__snapg"),
             F.col("inferred_position").alias("__ipos")),
         F.col("id") == F.col("station_id"), "left")
         .filter((F.col("spot_type") != "lift_station")
@@ -643,165 +790,5 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
         "runs": apply_membership(runs),
         "lifts": lifts_out,
         "spots": spots_out,
-        "objects": objs,
+        "objects": objs.drop("inferred_position"),
     }
-
-
-def _generate_ski_areas(objs: DataFrame):
-    """Pass 6: CC over unassigned activity-sharing objects within 500 m;
-    components seeded by a basis run become generated ski areas
-    (:903-1032).  Downhill drops when the cluster has no lift."""
-    unassigned = objs.filter(F.size("ski_areas") == 0) \
-                     .filter(F.size("activities") > 0)
-    nodes = _slim(unassigned, "l").select("lid", "lgeom", "lacts")
-    right = nodes.select(F.col("lid").alias("rid"),
-                         F.col("lgeom").alias("rgeom"),
-                         F.col("lacts").alias("racts"))
-    prs = (dwithin_pairs(nodes.select("lid", "lgeom"),
-                         right.select("rid", "rgeom"), MAX_DISTANCE_KM)
-           .join(nodes.select("lid", "lacts"), "lid")
-           .join(right.select("rid", "racts"), "rid")
-           .filter(F.arrays_overlap("lacts", "racts"))
-           .select(F.col("lid").alias("src"), F.col("rid").alias("dst")))
-    comps = connected_components(prs)
-    members = (unassigned.join(comps, unassigned["id"] == comps["vertex"])
-               .drop("vertex").transform(_cut))
-
-    per_comp = members.groupBy("component").agg(
-        F.max(F.when(F.col("is_basis_for_new_ski_area"), 1).otherwise(0))
-            .alias("has_basis"),
-        F.max(F.when(F.col("obj_type") == "lift", 1).otherwise(0))
-            .alias("has_lift"),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list(
-            F.when(F.col("is_basis_for_new_ski_area"), F.col("activities"))
-             .otherwise(_act_array()))))).alias("basis_acts"),
-        F.array_sort(F.collect_set("id")).alias("member_ids"),
-    ).filter(F.col("has_basis") == 1)
-
-    # downhill requires a lift (:961-976)
-    acts = F.when(F.col("has_lift") == 0,
-                  F.array_remove("basis_acts", "downhill")) \
-            .otherwise(F.col("basis_acts"))
-    per_comp = (per_comp.withColumn("activities", acts)
-                .filter(F.size("activities") > 0)
-                .withColumn("id", F.concat(
-                    F.lit("gen_"),
-                    F.substring(F.sha2(F.concat_ws("|", F.col("member_ids")
-                                                   .cast("string")), 256),
-                                1, 28))))
-    if per_comp.isEmpty():
-        return None, None
-
-    # members keep only objects sharing a surviving activity
-    assigns = (members.join(
-        per_comp.select("component", F.col("id").alias("__sa_id"),
-                        F.col("activities").alias("__sa_acts")),
-        "component")
-        .filter(F.arrays_overlap("activities", "__sa_acts"))
-        .select(F.col("id").alias("object_id"),
-                F.col("__sa_id").alias("ski_area_id")))
-
-    member_geoms = (assigns.join(
-        objs.select(F.col("id").alias("object_id"), "geometry"), "object_id")
-        .groupBy("ski_area_id")
-        .agg(geometry_collection_udf(F.array_sort(F.collect_list("geometry")))
-             .alias("geometry")))
-    gen = (per_comp.select("id", "activities")
-           .join(member_geoms.withColumnRenamed("ski_area_id", "__gid"),
-                 F.col("id") == F.col("__gid"))
-           .drop("__gid"))
-    empty_sources = F.array().cast(
-        "array<struct<type:string,id:string>>")
-    gen_sas = gen.select(
-        "id",
-        F.lit(None).cast("string").alias("name"),
-        empty_sources.alias("sources"),
-        "activities",
-        F.lit("operating").alias("status"),
-        F.array().cast("array<string>").alias("websites"),
-        F.lit(None).cast("string").alias("wikidata_id"),
-        F.lit("europe").alias("run_convention"),
-        "geometry",
-        F.lit(False).alias("is_polygon"),
-        F.lit("openstreetmap").alias("source"),
-    )
-    return gen_sas, assigns
-
-
-def _associate_stations(objs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Pass 8 (LiftStationAssociator.ts:97-153): each lift_station spot
-    associates to the argmin-distance lift within 30 m (ties broken by a
-    shared ski area, then lift id).
-
-    Returns ``(objs, assoc)``:
-    - ``objs`` with stations snapped to the lift line, an
-      ``associated_lift_id`` column, and orphaned stations (no lift within
-      30 m) removed (ref :88-94).
-    - ``assoc`` = (station_id, lift_id, snapped_geometry,
-      inferred_position) for the layer write-back — position inferred from
-      the station's PRE-snap elevation vs the lift's elevation range
-      (ref :37-54, :186-214).
-    """
-    stations = objs.filter(F.col("spot_type") == "lift_station")
-    lifts = objs.filter(F.col("obj_type") == "lift")
-    cands = dwithin_pairs(
-        stations.select(F.col("id").alias("lid"),
-                        F.col("geometry").alias("lgeom"),
-                        F.col("ski_areas").alias("lsa")),
-        lifts.select(F.col("id").alias("rid"),
-                     F.col("geometry").alias("rgeom"),
-                     F.col("ski_areas").alias("rsa")),
-        STATION_DISTANCE_KM)
-
-    @F.pandas_udf(DoubleType())
-    def dist(g1: pd.Series, g2: pd.Series) -> pd.Series:
-        return pd.Series([geo.min_distance_km(json.loads(a), json.loads(b))
-                          for a, b in zip(g1, g2)])
-
-    @F.pandas_udf(StringType())
-    def snap(sg: pd.Series, lg: pd.Series) -> pd.Series:
-        out = []
-        for a, b in zip(sg, lg):
-            pt = json.loads(a)["coordinates"]
-            snapped = geo.snap_point_to_line(pt, json.loads(b))
-            out.append(json.dumps({"coordinates": snapped, "type": "Point"},
-                                  separators=(",", ":"), sort_keys=True))
-        return pd.Series(out)
-
-    @F.pandas_udf(StringType())
-    def infer_pos(sg: pd.Series, lg: pd.Series) -> pd.Series:
-        out = []
-        for a, b in zip(sg, lg):
-            c = json.loads(a)["coordinates"]
-            elev = c[2] if len(c) >= 3 else None
-            out.append(geo.infer_station_position(elev, json.loads(b)))
-        return pd.Series(out)
-
-    ranked = (cands.withColumn("distance_km", dist("lgeom", "rgeom"))
-              .withColumn("shares_ski_area",
-                          F.arrays_overlap("lsa", "rsa").cast("int"))
-              .withColumn("__rn", F.row_number().over(
-                  Window.partitionBy("lid")
-                  .orderBy(F.col("distance_km").asc(),
-                           F.col("shares_ski_area").desc(),
-                           F.col("rid").asc())))
-              .filter(F.col("__rn") == 1))
-    assoc = (ranked.select(
-        F.col("lid").alias("station_id"),
-        F.col("rid").alias("lift_id"),
-        snap("lgeom", "rgeom").alias("snapped_geometry"),
-        infer_pos("lgeom", "rgeom").alias("inferred_position"))
-        .transform(_cut))
-
-    out = (objs.join(assoc, objs["id"] == assoc["station_id"], "left")
-           # orphaned stations removed (ref :88-94)
-           .filter((F.col("spot_type").isNull())
-                   | (F.col("spot_type") != "lift_station")
-                   | F.col("station_id").isNotNull())
-           .withColumn("geometry",
-                       F.coalesce("snapped_geometry", "geometry"))
-           .withColumn("associated_lift_id", F.col("lift_id"))
-           .drop("station_id", "lift_id", "snapped_geometry",
-                 "inferred_position")
-           .transform(_cut))
-    return out, assoc

@@ -96,6 +96,7 @@ def prepare(spark: SparkSession,
                            "spots_elevation")
 
     out = cluster_ski_areas(ski_areas, runs, lifts, spots)
+    del out["objects"]      # clustering's working table; no sink reads it
     out = attach_viewport_hints(out)
     return {k: checkpoint(v, f"output_{k}") for k, v in out.items()}
 

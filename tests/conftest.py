@@ -35,7 +35,6 @@ FULL_ONLY_MODULES = {
     "test_tokenizer_ops.py",          # 159 s  BPE learner bit-equality
     "test_plan_audits.py",            # 151 s  plan-shape pins
     "test_run_normalization.py",      # 126 s  geometry normalization
-    "test_clustering.py",             # 120 s  clustering passes
     "test_differential_training.py",  # 108 s  trainer differentials
     "test_streaming_semantics.py",    # 101 s  micro-batch replay
     "test_cli.py",                    #  80 s  CLI end-to-end
@@ -49,7 +48,6 @@ FULL_ONLY_MODULES = {
     "test_recall.py",                 #  30 s  ANN/LSH recall pins
     "test_enrichment.py",             #  26 s
     "test_geopackage_behaviors.py",   #  22 s
-    "test_graph.py",                  #  22 s
     "test_bm25.py",                   #  21 s
     "test_bloom.py",                  #  21 s
     "test_mapbox_behaviors.py",       #  19 s

@@ -271,70 +271,6 @@ def vocab_probe(sizes=(1_000_000, 2_500_000, 5_000_000),
                   f"task peak {peak_gib:.2f} GiB", flush=True)
 
 
-def skew_probe() -> None:
-    """Adversarial spatial skew: one mega-resort holding ~50% of all
-    objects inside a single ~0.45 km grid cell (SURVEY §7 hard part (d)).
-
-    Times the clustering dwithin self-join with the hot-cell salting
-    enabled (production default) and disabled, at growing hot-cell
-    sizes.  Representative run (local[32], 8g heap, 2026-08):
-
-        hot cell   pairs    unsalted   salted (threshold 8000, S=8)
-        8,000      52.8M    49.5s      66.5s   (below crossover)
-        16,000     127M     181s       181s    (crossover)
-        24,000     202M     377s       324s    (salted wins, gap grows
-                                                quadratically with cell
-                                                size; the unsalted serial
-                                                join task is the bound)
-
-    On a real cluster the unsalted path additionally funnels the whole
-    pair stream through ONE node's shuffle disk, so the threshold is set
-    at the measured local crossover, not above it.
-    """
-    import json as _json
-    import time as _time
-
-    from pyspark.sql import SparkSession, functions as F
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    from openskidata_processor_spark.pipeline import clustering as cl
-
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.driver.memory", "8g")
-             .config("spark.sql.shuffle.partitions", "64").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-
-    def corpus(n_hot, n_spread):
-        rows = []
-        for i in range(n_hot):       # all inside one ~0.0045° cell
-            rows.append((f"h{i}", _json.dumps(
-                {"type": "Point",
-                 "coordinates": [10.0 + (i % 64) * 0.00006,
-                                 47.0 + (i // 64) * 0.00006]})))
-        for i in range(n_spread):    # background: one object per cell
-            rows.append((f"s{i}", _json.dumps(
-                {"type": "Point",
-                 "coordinates": [20.0 + (i % 300) * 0.02,
-                                 40.0 + (i // 300) * 0.02]})))
-        return spark.createDataFrame(rows, "lid string, lgeom string")
-
-    saved = cl.HOT_CELL_ROWS
-    for n in (8000, 16000, 24000):
-        left = corpus(n, n).cache()
-        left.count()
-        right = left.select(F.col("lid").alias("rid"),
-                            F.col("lgeom").alias("rgeom"))
-        for mode, thresh in (("salted", saved), ("unsalted", 10**9)):
-            cl.HOT_CELL_ROWS = thresh
-            t0 = _time.perf_counter()
-            c = cl.dwithin_pairs(left, right, cl.MAX_DISTANCE_KM).count()
-            print(f"{mode} hot={n}: pairs={c}, "
-                  f"{round(_time.perf_counter() - t0, 1)}s", flush=True)
-        left.unpersist()
-    cl.HOT_CELL_ROWS = saved
-
-
 def hot_bucket_probe() -> None:
     """Adversarial length skew for ``length_bucket_batches``: one
     token-length bucket (a truncation-cap length) holding ~50% of a
@@ -546,9 +482,6 @@ def main() -> None:
         vocab_probe(tuple(rest) if rest else (1_000_000, 2_500_000,
                                               5_000_000),
                     tuple(tr) if tr else ("bpe", "wp"))
-        return
-    if "--skew" in sys.argv:
-        skew_probe()
         return
     if "--hot-bucket" in sys.argv:
         hot_bucket_probe()

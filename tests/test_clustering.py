@@ -146,6 +146,15 @@ RUN_ROWS = [
     # lift base, crossing on the run) associate to it — spots join areas
     # but never found them (:2877)
     ({"piste:type": "downhill", "name": "SA1 run"}, line(80.0, 47.0, 47.002)),
+    # SF1 (lon 82, ways 40/41/42): site whose two members lie 2.3 km
+    # apart; a lone run 300 m from the far member joins the site area,
+    # so both members must share one region with the site
+    ({"piste:type": "downhill", "name": "SF1 member A"},
+     line(82.0, 47.0, 47.002)),
+    ({"piste:type": "downhill", "name": "SF1 member B"},
+     line(82.03, 47.0, 47.002)),
+    ({"piste:type": "downhill", "name": "SF1 near"},
+     line(82.034, 47.0, 47.002)),
 ]
 
 LIFT_ROWS = [
@@ -265,7 +274,10 @@ def cluster_inputs(spark):
           [{"type": "way", "ref": 35, "role": ""}]),
          (907, {"site": "piste", "name": "SC3 site"},
           [{"type": "way", "ref": 36, "role": ""},
-           {"type": "way", "ref": 37, "role": ""}])],
+           {"type": "way", "ref": 37, "role": ""}]),
+         (908, {"site": "piste", "name": "SF1 site"},
+          [{"type": "way", "ref": 40, "role": ""},
+           {"type": "way", "ref": 41, "role": ""}])],
         "site_id long, tags map<string,string>, "
         "members array<struct<type:string, ref:long, role:string>>")
     site_areas = fmt.format_ski_areas_sites(sites)
@@ -462,45 +474,24 @@ class TestHighLatitudeGrid:
     """Regression: the grid candidate join must size its longitude pad by
     cos(lat) — a fixed equatorial pad drops true pairs above ~61°N."""
 
-    def test_dwithin_pairs_at_high_latitude(self, spark):
-        from openskidata_processor_spark.pipeline.clustering import dwithin_pairs
+    def test_proximity_pairs_at_high_latitude(self, spark):
+        import math
+
+        from openskidata_processor_spark.pipeline.clustering import \
+            proximity_pairs
         from openskidata_processor_spark.functions import geometry as geo
 
-        cases = []
+        rows = []
         for i, lat in enumerate([61.0, 67.0, 70.0, 78.0]):
-            # Two points `radius*0.9` km apart in pure longitude at `lat`.
-            dlon = 0.45 / (geo.KM_PER_DEG_LAT *
-                           __import__("math").cos(__import__("math").radians(lat)))
-            cases.append((f"a{i}", point(10.0, lat), f"b{i}",
-                          point(10.0 + dlon, lat)))
-        left = spark.createDataFrame(
-            [(a, ga) for a, ga, _, _ in cases], "lid string, lgeom string")
-        right = spark.createDataFrame(
-            [(b, gb) for _, _, b, gb in cases], "rid string, rgeom string")
-        got = {(r.lid, r.rid)
-               for r in dwithin_pairs(left, right, 0.5).select("lid", "rid").collect()}
+            # Two points `radius*0.9` km apart in pure longitude at `lat`;
+            # the bands lie degrees apart, so no pair crosses them.
+            dlon = 0.45 / (geo.KM_PER_DEG_LAT * math.cos(math.radians(lat)))
+            rows += [(f"a{i}", point(10.0, lat), "object"),
+                     (f"b{i}", point(10.0 + dlon, lat), "object")]
+        nodes = spark.createDataFrame(rows,
+                                      "id string, geometry string, kind string")
+        got = {(r.a, r.b) for r in proximity_pairs(nodes).collect()}
         assert got == {(f"a{i}", f"b{i}") for i in range(4)}
-
-
-def test_hot_cell_salting_preserves_results(spark, monkeypatch):
-    """The 2-D salted hot-cell path must return exactly the unsalted
-    dwithin pair set (salting only re-partitions the candidate join)."""
-    from openskidata_processor_spark.pipeline import clustering as cl
-
-    rows = [(f"p{i:02d}", json.dumps(
-        {"type": "Point",
-         "coordinates": [10.0 + (i % 8) * 0.0003,
-                         47.0 + (i // 8) * 0.0003]})) for i in range(64)]
-    left = spark.createDataFrame(rows, "lid string, lgeom string")
-    right = left.toDF("rid", "rgeom")
-    base = {(r.lid, r.rid)
-            for r in cl.dwithin_pairs(left, right, 0.5).collect()}
-    monkeypatch.setattr(cl, "HOT_CELL_ROWS", 4)
-    monkeypatch.setattr(cl, "HOT_SAMPLE", 1.0)
-    salted = {(r.lid, r.rid)
-              for r in cl.dwithin_pairs(left, right, 0.5).collect()}
-    assert len(base) == 64 * 64   # the whole block is within 500 m
-    assert salted == base
 
 
 def test_covered_by_edge_crossing():
@@ -784,6 +775,14 @@ class TestSitePisteKeepRules:
         run = layer_by_name(clustered["runs"], "SC2 member")
         assert list(run.ski_areas) == [sa.id]
 
+    def test_site_with_distant_members_claims_near_far_member(self,
+                                                              clustered):
+        sa = next(r for r in clustered["ski_areas"]
+                  if (r.name or "") == "SF1 site")
+        for nm in ("SF1 member A", "SF1 member B", "SF1 near"):
+            run = layer_by_name(clustered["runs"], nm)
+            assert list(run.ski_areas) == [sa.id], nm
+
     def test_site_extends_to_nearby_polygon_run(self, clustered):
         sa = next(r for r in clustered["ski_areas"]
                   if (r.name or "") == "SC3 site")
@@ -807,3 +806,139 @@ def test_spots_associate_to_generated_area(clustered):
     lift = layer_by_name(clustered["lifts"], "SA1 lift")
     assert list(lift.ski_areas) == [gen_id]
     assert station.lift_id == lift.id
+
+
+# ---------------------------------------------------------------------------
+# the per-region walk, without Spark
+# ---------------------------------------------------------------------------
+
+def _obj(oid, geometry, obj_type="run", activities=("downhill",),
+         ski_areas=(), spot_type=None):
+    return {"id": oid, "obj_type": obj_type, "geometry": geometry,
+            "activities": list(activities), "ski_areas": list(ski_areas),
+            "is_in_ski_area_site": bool(ski_areas), "difficulty": None,
+            "snowmaking": None, "snowfarming": None, "lift_type": None,
+            "spot_type": spot_type,
+            "is_basis_for_new_ski_area": obj_type == "run" and not ski_areas,
+            "is_in_ski_area_polygon": False}
+
+
+def _sa(sid, geometry, source="openstreetmap", activities=()):
+    return {"id": sid, "name": sid, "sources": [{"type": source, "id": sid}],
+            "activities": list(activities), "status": "operating",
+            "websites": [], "wikidata_id": None, "run_convention": "europe",
+            "geometry": geometry,
+            "is_polygon": json.loads(geometry)["type"] == "Polygon",
+            "source": source}
+
+
+def _pairs(objects, ski_areas):
+    """All-pairs twin of ``proximity_pairs`` for a handful of rows."""
+    import itertools
+
+    from openskidata_processor_spark.pipeline import clustering as cl
+    nodes = sorted(
+        [(o["id"], o["geometry"], "object") for o in objects]
+        + [(s["id"], s["geometry"], "polygon" if s["is_polygon"] else
+            "ski_area") for s in ski_areas if not cl._placeholder(s["geometry"])])
+    out = []
+    for (a, ga, ka), (b, gb, kb) in itertools.combinations(nodes, 2):
+        d, covered = cl.measure_pair(json.loads(ga), ka, json.loads(gb), kb)
+        if d <= cl.MAX_DISTANCE_KM:
+            out.append((a, b, d, covered))
+    return out
+
+
+def _regions(objects, ski_areas, pairs, membership=True):
+    """Region label per vertex from the edges ``cluster_ski_areas`` links:
+    pairs, object → site ski area membership, self-loops."""
+    from openskidata_processor_spark.pipeline.clustering import _find, _union
+    parent = {v["id"]: v["id"] for v in (*objects, *ski_areas)}
+    for a, b, _, _ in pairs:
+        _union(parent, a, b)
+    for o in objects if membership else ():
+        for sid in o["ski_areas"]:
+            _union(parent, o["id"], sid)
+    return {v: _find(parent, v) for v in parent}
+
+
+def _walk(objects, ski_areas):
+    from openskidata_processor_spark.pipeline.clustering import cluster_region
+    objs, sas = cluster_region(objects, ski_areas,
+                               _pairs(objects, ski_areas))
+    return ({o["id"]: o["ski_areas"] for o in objs},
+            {s["id"]: s for s in sas})
+
+
+class TestRegionWalk:
+    """``cluster_region`` on hand-built rows: the per-region Python walk
+    behind ``cluster_ski_areas``."""
+
+    def test_contested_claim_goes_to_smallest_seed_id(self):
+        # the contested run is 150 m from sa-b's member and 300 m from
+        # sa-a's: one component, claimed by the smaller id
+        objects = [_obj("r-b", line(10.009, 47.004, 47.006)),
+                   _obj("r-a", line(10.017, 47.004, 47.006)),
+                   _obj("r-c", line(10.012, 47.004, 47.006))]
+        ski_areas = [_sa("sa-b", polygon(10.0, 47.0, 10.01, 47.01)),
+                     _sa("sa-a", polygon(10.016, 47.0, 10.026, 47.01))]
+        members, _ = _walk(objects, ski_areas)
+        assert members == {"r-b": ["sa-b"], "r-a": ["sa-a"],
+                           "r-c": ["sa-a"]}
+
+    def test_site_members_far_apart_stay_one_region(self):
+        # members 2.3 km apart: only the membership edges join them
+        site = _sa("site-1", '{"coordinates":[360,360,1],"type":"Point"}')
+        objects = [_obj("m-1", line(20.0, 47.0, 47.002),
+                        ski_areas=["site-1"]),
+                   _obj("m-2", line(20.03, 47.0, 47.002),
+                        ski_areas=["site-1"]),
+                   _obj("near", line(20.034, 47.0, 47.002))]
+        pairs = _pairs(objects, [site])
+        regions = _regions(objects, [site], pairs)
+        assert len({regions[v] for v in ("site-1", "m-1", "m-2", "near")}) == 1
+        by_pairs = _regions(objects, [site], pairs, membership=False)
+        assert by_pairs["m-1"] != by_pairs["m-2"]
+        members, sas = _walk(objects, [site])
+        assert members == {"m-1": ["site-1"], "m-2": ["site-1"],
+                           "near": ["site-1"]}
+        assert sas["site-1"]["n_members"] == 3
+
+    def test_generated_id_matches_spark_sha2(self):
+        # gen_ + the first 28 hex digits Spark computes for these members
+        # with sha2(concat_ws('|', cast(array_sort(ids) as string)), 256)
+        objects = [_obj("run-1", line(30.0, 47.0, 47.002)),
+                   _obj("run-2", line(30.0, 47.003, 47.005)),
+                   _obj("lift-1", line(30.001, 47.0, 47.002),
+                        obj_type="lift")]
+        members, sas = _walk(objects, [])
+        gen = "gen_da1a0400e4a355424fd6cfe3d35f"
+        assert list(sas) == [gen]
+        assert members == {o["id"]: [gen] for o in objects}
+
+    def test_distant_copies_cluster_as_each_alone(self):
+        def resort(p, lon):
+            objects = [
+                _obj(f"{p}run-in", line(lon + 0.005, 47.005, 47.007)),
+                _obj(f"{p}lift-in", line(lon + 0.006, 47.005, 47.007),
+                     obj_type="lift"),
+                _obj(f"{p}run-out", line(lon + 0.005, 47.011, 47.013)),
+                _obj(f"{p}station", point(lon + 0.0061, 47.005),
+                     obj_type="spot", spot_type="lift_station"),
+                _obj(f"{p}nordic", line(lon + 0.05, 47.0, 47.002),
+                     activities=("nordic",))]
+            ski_areas = [
+                _sa(f"{p}poly", polygon(lon, 47.0, lon + 0.01, 47.01)),
+                _sa(f"{p}skimap", point(lon + 0.005, 47.006),
+                    source="skimap.org", activities=("downhill",))]
+            return objects, ski_areas
+
+        a, b = resort("A-", 40.0), resort("B-", 45.0)
+        alone = [_walk(*a), _walk(*b)]
+        together = _walk(a[0] + b[0], a[1] + b[1])
+        assert together == ({**alone[0][0], **alone[1][0]},
+                            {**alone[0][1], **alone[1][1]})
+        members, sas = together
+        assert members["A-run-out"] == ["A-poly"]       # transitive claim
+        assert "A-skimap" not in sas                     # merged into A-poly
+        assert members["A-nordic"][0].startswith("gen_")

@@ -27,6 +27,21 @@ def test_connected_components_chain_converges(spark):
     assert len(out) == 13
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    """A path of 6 vertices needs 6 rounds: 5 to carry the minimum label
+    to its far end and one to see no change.  A cap of 6 converges on its
+    last round; a cap of 5 must raise instead of returning split labels."""
+    import pytest
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                  "src long, dst long")
+    out = {r.vertex: r.component for r in
+           connected_components(edges, max_iterations=6).collect()}
+    assert out == dict.fromkeys(range(6), 0)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iterations=5)
+
+
 def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     """Cluster-durable mode: same answers with a reliable ``checkpoint()``
     barrier (survives executor loss at 100 TB, unlike localCheckpoint)."""
