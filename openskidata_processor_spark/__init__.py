@@ -1,21 +1,21 @@
-"""openskidata_processor_spark — a PySpark-native analytics engine.
+"""openskidata_processor_spark — the openskidata-processor pipeline on Spark.
 
-A from-scratch, Spark-first re-expression of the query and data-processing
-capabilities of the reference pipeline ``russellporter/openskidata-processor``
-(studied read-only at /root/reference; see SURVEY.md for the operator
-inventory).  Architecture is idiomatic PySpark: declarative DataFrame plans
-optimized by Catalyst, geometry as a numpy/pandas-UDF kernel, spatial joins as
-grid-bucketed equi-joins, iterative graph operators (run-topology
-normalization, ski-area clustering) as DataFrame label propagation.
+A from-scratch, Spark-first re-expression of the batch ETL of the reference
+pipeline ``russellporter/openskidata-processor`` (see SURVEY.md for its
+operator inventory): download, format, normalize, enrich, cluster and write.
+Geometry is a numpy/pandas-UDF kernel, clustering's spatial join is a
+grid-bucketed equi-join, and the iterative graph steps (run-topology
+normalization, ski-area regions) are DataFrame label propagation.
 
 Subpackages
 -----------
-sources    : table/GeoJSON readers (bronze ingest)
-functions  : column-level function library (OSM tags, geometry, text, vectors)
-operators  : reusable DataFrame macros (spatial join, top-k, dedup, sessionize)
-plans      : the analytics query catalog run by the correctness harness
-streaming  : Structured Streaming operators
-pipeline   : the domain ETL (formatters, normalization, clustering, statistics)
+sources    : landing-file readers, OSM assembly, downloads and the
+             elevation / geocode / snow-cover cache producers
+functions  : column-level function library (OSM tags, geometry, hashing)
+operators  : connected components, lineage cuts, priority reducers
+pipeline   : the domain ETL (formatters, normalization, enrichment,
+             clustering, statistics, Mapbox projections, prepare)
+sinks      : GeoJSON, CSV and GeoPackage writers, output merge and tiles
 """
 
 __version__ = "0.1.0"

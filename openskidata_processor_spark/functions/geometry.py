@@ -2,14 +2,9 @@
 
 Design (SURVEY.md §2.8, §4.3): the container has no shapely/geos, so the
 kernel is implemented from published geometry algorithms (haversine, ray
-casting, point-segment projection) in numpy and exposed to Spark two ways:
-
-1. **Catalyst expressions** where the math is elementary (haversine distance,
-   grid-cell ids) — these stay JVM-side in whole-stage codegen and are the
-   hot path for the grid-bucketed spatial join.
-2. **Arrow-batched pandas UDFs** over GeoJSON-string columns for the
-   predicates that genuinely need per-geometry iteration (point-in-polygon
-   with holes, interior points, sampling along lines).
+casting, point-segment projection) in numpy and exposed to Spark as
+Arrow-batched pandas UDFs over GeoJSON-string columns (point-in-polygon
+with holes, interior points, sampling along lines).
 
 Reference parity targets: length/centroid/contains/dwithin/along/interior
 point per ``src/transforms/GeoTransforms.ts`` and the PostGIS predicates in
@@ -25,36 +20,11 @@ from typing import Any, Iterable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StringType
 
 EARTH_RADIUS_KM = 6371.0
 KM_PER_DEG_LAT = 111.32
-
-
-# ---------------------------------------------------------------------------
-# Catalyst-expression geometry (JVM-side, no UDF)
-# ---------------------------------------------------------------------------
-
-def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    """Great-circle distance in km as a pure Catalyst expression.
-
-    2R·asin(√(sin²(Δφ/2) + cosφ1·cosφ2·sin²(Δλ/2))) — written with the exact
-    same operation order as the SQL oracle so both engines agree bit-for-bit
-    modulo libm ulps.
-    """
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1) / 2.0
-    dlon = F.radians(lon2 - lon1) / 2.0
-    a = F.sin(dlat) * F.sin(dlat) + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon) * F.sin(dlon)
-    return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
-
-
-def grid_cell(lon: Column, lat: Column, cell_deg: float) -> tuple[Column, Column]:
-    """Integer (cell_x, cell_y) ids on a fixed lon/lat grid."""
-    return (F.floor(lon / F.lit(cell_deg)).cast("long"),
-            F.floor(lat / F.lit(cell_deg)).cast("long"))
 
 
 # ---------------------------------------------------------------------------
@@ -408,17 +378,6 @@ def covering_cells(geom: dict[str, Any], cell_deg: float) -> list[tuple[int, int
 # ---------------------------------------------------------------------------
 # pandas-UDF bindings (Arrow-batched)
 # ---------------------------------------------------------------------------
-
-def make_point_in_polygon_udf(polygon: list[list[list[float]]]):
-    """Vectorized membership test of (x, y) points vs a fixed polygon."""
-
-    @F.pandas_udf(BooleanType())
-    def _udf(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series([point_in_polygon(float(a), float(b), polygon)
-                          for a, b in zip(x, y)])
-
-    return _udf
-
 
 @F.pandas_udf(DoubleType())
 def geometry_length_km_udf(geojson: pd.Series) -> pd.Series:

@@ -14,7 +14,7 @@ Scale design:
   canonical label).  **Integral vertices skip all of that**: the ids are
   already shuffle-efficient longs and the numeric min IS the canonical
   label, so the numeric path runs zero extra joins (auto-detected from the
-  edge dtypes — the dedup group-resolution path);
+  edge dtypes);
 - each iteration is one shuffle (edge join + min aggregation);
 - convergence is detected with a single scalar action per iteration: the
   label sum strictly decreases iff any label changed (labels only move
@@ -23,7 +23,7 @@ Scale design:
   round once and the next round reads the cache instead of recomputing the
   whole join chain (without this the work per round grows linearly between
   lineage cuts);
-- a lineage cut every few iterations keeps plans bounded
+- a lineage cut every ``CHECKPOINT_INTERVAL`` iterations keeps plans bounded
   (``operators.barrier.truncate_lineage`` — ``localCheckpoint`` locally,
   reliable ``checkpoint()`` when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set
   or ``reliable=True``, so executor loss on a cluster is survivable); AQE
@@ -43,12 +43,13 @@ from .barrier import truncate_lineage
 
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
+# rounds between lineage cuts; the rounds in between are persisted
+CHECKPOINT_INTERVAL = 3
+
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_iterations: int = 50,
-                         checkpoint_interval: int = 3,
                          reliable: bool | None = None,
-                         shortcut: bool = False,
                          stats: dict | None = None) -> DataFrame:
     """Connected components of an undirected graph.
 
@@ -63,15 +64,6 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     Replaces the reference's recursive per-seed ``visitObject`` walk
     (SkiAreaClusteringService.ts:705-779) with whole-frontier iteration:
     every vertex propagates in parallel each round.
-
-    ``shortcut=True`` adds pointer doubling (``c ← min(c, label(c))``)
-    each round: one extra join per round buys O(log diameter) instead of
-    O(diameter) convergence.  Off by default — the engine's graphs (run
-    chains, resort clusters, dedup groups) have single-digit diameters
-    where measured round savings (~1) don't repay the per-round join;
-    flip it for genuinely long-chain graphs (measured A/B at sf0.1:
-    default wins by ~1s on both CC catalog queries, shortcut wins once
-    diameter ≫ rounds-to-converge).
     """
     dtypes = dict(edges.dtypes)
     numeric = dtypes[src] in _INTEGRAL and dtypes[dst] in _INTEGRAL
@@ -111,17 +103,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         new_labels = (
             labels.join(nbr, labels["v"] == nbr["a"], "left")
             .select(labels["v"], F.least(labels["c"], F.col("nc")).alias("c")))
-        if shortcut:
-            # pointer doubling: c ← min(c, label(c)) reaches 2^i hops by
-            # round i — O(log diameter) rounds for long chains.
-            lut = new_labels.select(F.col("v").alias("lv"),
-                                    F.col("c").alias("lc"))
-            new_labels = (
-                new_labels.join(lut, new_labels["c"] == lut["lv"], "left")
-                .select(new_labels["v"],
-                        F.least(new_labels["c"], F.col("lc")).alias("c")))
         we_persisted = False
-        if (i + 1) % checkpoint_interval == 0:
+        if (i + 1) % CHECKPOINT_INTERVAL == 0:
             new_labels = truncate_lineage(new_labels, reliable=reliable)
         else:
             # lazy cache: the convergence action below materializes this

@@ -2,8 +2,8 @@
 
 The reference merges N property values by a fixed priority list: easiest
 difficulty wins (``RunJoining.ts:168-177``), "operating" status wins
-(``:189-196``), tri-state booleans reduce true > false > null (``:198-208``),
-oneway is AND-with-null-skip (``:65-76``).
+(``:189-196``) and tri-state booleans reduce true > false > null
+(``:198-208``).
 
 In Spark these become plain aggregations: map the value to its priority
 index, take ``min``, map back — all inside a hash aggregate (partial +
@@ -40,8 +40,3 @@ def tristate_or_agg(col: Column) -> Column:
              .when(idx == 1, F.lit(False))
              .otherwise(F.lit(None).cast("boolean")))
 
-
-def and_skip_null_agg(col: Column) -> Column:
-    """AND over non-null values; null iff all inputs null (A1 oneway)."""
-    return F.when(F.count(F.when(col.isNotNull(), 1)) > 0,
-                  F.min(F.when(col.isNotNull(), col)))

@@ -52,18 +52,15 @@ def prepare(spark: SparkSession,
             path = os.path.join(checkpoint_dir, name)
             df.write.mode("overwrite").parquet(path)
             return spark.read.parquet(path)
-        # EAGER lineage cut — reverted to the r11 behavior (r13, VERDICT
-        # r12 item 1).  The r12 lazy barrier saved ~9 driver-sequenced
-        # jobs but event-log CPU attribution shows the phase-frame work
+        # EAGER lineage cut.  A lazy barrier saves a few driver-sequenced
+        # jobs, but event-log CPU attribution shows the phase-frame work
         # then runs ~2.8× (10.4 s CPU as 4 eager checkpoint jobs vs
         # +29.1 s CPU inside the racing consumer stages): clustering's
         # independent AQE leaf stages each recompute the un-materialized
-        # phase frame.  On an idle local[32] the duplicates back-fill
-        # (wall floors measured equal, ~95-97 s both arms), but at full
-        # utilization — a loaded host or a real cluster — the +25% CPU
-        # is wall, which matches the driver's r12 e2e_prepare_50
-        # 91 → 117 s reading.  Total work is what matters at 100 TB:
-        # eager computes each phase exactly once.
+        # phase frame.  On an idle host the duplicates back-fill (wall
+        # floors measured equal), but at full utilization — a loaded host
+        # or a real cluster — the extra CPU is wall time.  Eager computes
+        # each phase exactly once.
         return truncate_lineage(df)
 
     site_areas = fmt.format_ski_areas_sites(sites)

@@ -1,9 +1,9 @@
-"""SparkSession construction tuned for this engine.
+"""SparkSession construction for the pipeline, its CLI and its tests.
 
-Local test runs use ``local[$SPARK_GRAFT_CPUS]``; at cluster scale the same
-configs apply (AQE, adaptive coalesce, skew-join handling).  All queries in
-``plans`` also defensively pin the runtime-settable session confs they depend
-on (timezone) because the correctness driver supplies its own session.
+Local runs use ``local[$SPARK_GRAFT_CPUS]``; at cluster scale the same
+configs apply (AQE, adaptive coalesce, skew-join handling).  The session
+pins the confs output semantics depend on (UTC timezone, ANSI mode) and
+ships the package to the executors so pandas UDFs import from any cwd.
 """
 
 from __future__ import annotations
@@ -35,8 +35,7 @@ def get_spark(app_name: str = "openskidata-spark", cpus: int | str | None = None
     spark = builder.getOrCreate()
     # Every session this package creates must be able to run its own
     # pandas UDFs from ANY cwd (operator-level API users, tests run from
-    # outside the repo, cluster executors): ship the package zip here,
-    # not only on the catalog path (prep_session).
+    # outside the repo, cluster executors): ship the package zip here.
     ship_package(spark)
     return spark
 
@@ -71,20 +70,3 @@ def ship_package(spark: SparkSession) -> None:
     sc.addPyFile(zpath)
     _SHIPPED.add(key)
 
-
-def prep_session(spark: SparkSession) -> SparkSession:
-    """Pin runtime-settable confs that query semantics depend on.
-
-    Called at the top of every catalog query because the harness may hand us
-    an arbitrarily-configured session.  Only runtime-mutable confs here.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # ANSI mode is the tested default (Spark 4); pin it so semantics don't
-    # silently shift if the harness hands over a legacy-configured session.
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    # Parquet timestamps without the UTC flag must read as TIMESTAMP (LTZ),
-    # not TIMESTAMP_NTZ: `unix_micros`/`withWatermark` reject NTZ, and with
-    # the session tz pinned UTC the instant semantics are identical.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ship_package(spark)
-    return spark

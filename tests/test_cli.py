@@ -250,23 +250,3 @@ class TestLandingAndPrepareCLI:
         assert calls["args"] == ("/tmp/landing", (45.0, 5.0, 48.0, 12.0),
                                  "https://overpass-api.de/api/interpreter")
         assert "input_runs" in capsys.readouterr().out
-
-
-def test_bench_query_lists_are_registered():
-    """Every name in bench.py's BENCH_QUERIES/EXTENDED_QUERIES must be a
-    registered catalog query — a typo'd or renamed entry would
-    otherwise surface only as a silent ERR string in the recorded
-    bench artifact."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod", os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    from openskidata_processor_spark.plans import QUERIES
-
-    unknown = [n for n in bench.BENCH_QUERIES + bench.EXTENDED_QUERIES
-               if n not in QUERIES]
-    assert not unknown, unknown

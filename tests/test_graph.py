@@ -63,21 +63,6 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
         os.environ.pop("SPARK_GRAFT_CHECKPOINT_DIR", None)
 
 
-def test_materialize_is_lazy(spark):
-    """The shared-subplan barrier must not trigger a job at call time
-    (round-2's eager localCheckpoint serialized materialization and caused
-    2-5x bench variance)."""
-    from openskidata_processor_spark.operators.barrier import materialize
-
-    status = spark.sparkContext.statusTracker()
-    before = len(status.getJobIdsForGroup(None) or [])
-    df = materialize(spark.range(1000).selectExpr("id", "id * 2 as two"))
-    after = len(status.getJobIdsForGroup(None) or [])
-    assert after == before  # no job ran at barrier-creation time
-    assert df.count() == 1000
-    df.unpersist()
-
-
 def test_connected_components_numeric_fast_path(spark):
     """Integral vertex ids take the no-hash path: output columns are
     longs and the component is the numeric minimum (not a string min)."""
@@ -107,15 +92,3 @@ def test_connected_components_numeric_matches_string_semantics(spark):
         s_groups.setdefault(r.component, set()).add(int(r.vertex))
     assert sorted(map(sorted, num_groups.values())) == \
         sorted(map(sorted, s_groups.values()))
-
-
-def test_connected_components_shortcut_same_result(spark):
-    """Pointer-doubling mode returns identical components on a chain."""
-    chain = [(i, i + 1) for i in range(12)]
-    base = {(r.vertex, r.component) for r in connected_components(
-        spark.createDataFrame(chain, "src long, dst long")).collect()}
-    fast = {(r.vertex, r.component) for r in connected_components(
-        spark.createDataFrame(chain, "src long, dst long"),
-        shortcut=True).collect()}
-    assert base == fast
-    assert all(c == 0 for _, c in base)

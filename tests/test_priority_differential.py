@@ -1,10 +1,10 @@
 """Differential fuzz: the A1 priority-reducer aggregates vs a Python model.
 
-The run-merge semantics (RunJoining.ts:65-208) reduce N overlapping
+The run-merge semantics (RunJoining.ts:168-208) reduce N overlapping
 segments' properties by fixed priority lists: easiest difficulty wins,
-"operating" status wins, tri-state booleans reduce true > false > null,
-oneway is AND-with-null-skip.  The Spark implementation folds these into
-hash aggregates (operators/priority.py) so the reduce is map-side partial —
+"operating" status wins, tri-state booleans reduce true > false > null.
+The Spark implementation folds these into hash aggregates
+(operators/priority.py) so the reduce is map-side partial —
 this module checks that partial+final aggregation over randomly-partitioned
 random groups agrees with a direct sequential Python evaluation, for
 hundreds of groups in one job.
@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openskidata_processor_spark.operators.priority import (
-    and_skip_null_agg, priority_merge_agg, tristate_or_agg)
+    priority_merge_agg, tristate_or_agg)
 
 DIFFICULTY = ["novice", "easy", "intermediate", "advanced", "expert",
               "freeride", "extreme"]
@@ -38,11 +38,6 @@ def model_tristate(vals):
     return None
 
 
-def model_and_skip_null(vals):
-    known = [v for v in vals if v is not None]
-    return min(known) if known else None  # AND == min over booleans
-
-
 N_GROUPS = 300
 
 
@@ -55,31 +50,27 @@ def groups(spark):
         diffs = [rnd.choice(DIFFICULTY + [None, "bogus"]) for _ in range(n)]
         stats = [rnd.choice(STATUS + [None, "x"]) for _ in range(n)]
         tris = [rnd.choice([True, False, None]) for _ in range(n)]
-        ones = [rnd.choice([True, False, None]) for _ in range(n)]
-        rows += [(g, d, s, t, o)
-                 for d, s, t, o in zip(diffs, stats, tris, ones)]
+        rows += [(g, d, s, t) for d, s, t in zip(diffs, stats, tris)]
         expected[g] = (model_priority(diffs, DIFFICULTY),
                        model_priority(stats, STATUS),
-                       model_tristate(tris),
-                       model_and_skip_null(ones))
+                       model_tristate(tris))
     df = spark.createDataFrame(
         rows, "g int, difficulty string, status string, "
-              "gladed boolean, oneway boolean")
+              "gladed boolean")
     return df, expected
 
 
 @pytest.mark.parametrize("n_parts", [1, 13])
 def test_reducers_match_python_model(groups, n_parts):
     df, expected = groups
-    got = {r["g"]: (r["d"], r["s"], r["t"], r["o"])
+    got = {r["g"]: (r["d"], r["s"], r["t"])
            for r in df.repartition(n_parts)
                       .groupBy("g")
                       .agg(priority_merge_agg(F.col("difficulty"),
                                               DIFFICULTY).alias("d"),
                            priority_merge_agg(F.col("status"),
                                               STATUS).alias("s"),
-                           tristate_or_agg(F.col("gladed")).alias("t"),
-                           and_skip_null_agg(F.col("oneway")).alias("o"))
+                           tristate_or_agg(F.col("gladed")).alias("t"))
                       .collect()}
     assert len(got) == N_GROUPS
     for g, exp in expected.items():

@@ -76,7 +76,7 @@ class TestGeoJSON:
         assert dist_ids == small_ids == big_ids and len(dist_ids) == 2
 
     def test_read_heterogeneous_fc_multiline_parity(self, spark, tmp_path):
-        """Regression (ADVICE r3): the executor-side multiLine path must
+        """Regression: the executor-side multiLine path must
         not run schema inference — a FeatureCollection mixing Point and
         Polygon (conflicting coordinate nesting) with null-valued
         properties must come back structurally identical to the driver
@@ -111,36 +111,6 @@ class TestGeoJSON:
         want = sorted(feats, key=lambda x: x["properties"]["id"])
         assert small == want
         assert big == want  # nulls kept, nesting intact, no coercion
-
-
-class TestPartitionedParquet:
-    def test_layout_pruning_and_file_bounds(self, spark, tmp_path):
-        from openskidata_processor_spark.sinks import parquet as pq
-        from pyspark.sql import functions as F
-        df = spark.range(1000).select(
-            (F.col("id") % 4).cast("string").alias("country"),
-            F.col("id").alias("k"),
-            (F.col("id") * 2).alias("v"))
-        path = str(tmp_path / "lake")
-        pq.write_partitioned(df, path, ["country"], sort_cols=["k"],
-                             max_records_per_file=100)
-        back = pq.read_pruned(spark, path)
-        assert back.count() == 1000
-        # partition pruning reaches the scan: only country=2 files read
-        pruned = back.filter(F.col("country") == "2")
-        assert pruned.count() == 250
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan
-        import glob
-        files2 = glob.glob(f"{path}/country=2/*.parquet")
-        # 250 rows under maxRecordsPerFile=100 → ≥3 splittable files
-        assert len(files2) >= 3
-        # within-file ordering (row-group stats selectivity): each file
-        # individually sorted by k
-        import pyarrow.parquet as papq
-        for f in files2:
-            ks = papq.read_table(f, columns=["k"]).column("k").to_pylist()
-            assert ks == sorted(ks)
 
 
 class TestCSV:
