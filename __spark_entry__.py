@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query smoke check at sf0.001.
-``queries()``   — the catalog from openskidata_processor_spark.plans
+``queries()``   — the catalog from training_catalog.plans
                   (one entry per SURVEY.md §2 operator class + the
                   training-data-pipeline operators).
 ``oracle_sql()``— matching DuckDB SQL for every exactly-reproducible query;
@@ -22,7 +22,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from openskidata_processor_spark.plans import ORACLES, QUERIES  # noqa: E402
+from training_catalog.plans import ORACLES, QUERIES  # noqa: E402
 
 # The correctness driver snapshots the FIRST 50 entries of ``queries()``
 # in iteration order.  This curated window puts exactly 50 oracle-backed

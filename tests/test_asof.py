@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime
 
-from openskidata_processor_spark.operators.asof import asof_join
+from training_catalog.operators.asof import asof_join
 
 
 def _frames(spark):

@@ -13,9 +13,8 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.operators import dedup as dd
-from openskidata_processor_spark.operators.barrier import (materialize_now,
-                                                           spread_input)
+from training_catalog.operators import dedup as dd
+from training_catalog.operators.barrier import materialize_now, spread_input
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 

@@ -10,7 +10,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.operators.bloom import (
+from training_catalog.operators.bloom import (
     bloom_semi_join, build_bloom_bits, might_contain, size_bits)
 
 
@@ -69,7 +69,7 @@ def test_bloom_decontaminate_plan_prefilters_before_join(spark):
     a BROADCAST of the fixed benchmark shingles (the training side is
     never shuffled), and the scan stays pruned to doc_id+text."""
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     plan = (QUERIES["bloom_decontaminate"](spark, SF_SMOKE)
             ._jdf.queryExecution().executedPlan().toString())
@@ -103,7 +103,7 @@ def test_bloom_prunes_verify_shuffle_volume(spark):
     of the rows the bloom-free exact join shuffles, while admitting
     every true match (no false negatives — the exactness contract)."""
     from conftest import SF_SMOKE, SF_T2
-    from openskidata_processor_spark.plans.hygiene import _bloom_shingles
+    from training_catalog.plans.hygiene import _bloom_shingles
 
     bench_sh = (_bloom_shingles(
         spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))

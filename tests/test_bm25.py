@@ -12,7 +12,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.operators.bm25 import bm25_topk
+from training_catalog.operators.bm25 import bm25_topk
 
 
 @pytest.fixture(scope="module")

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.pipeline.curation import curate
+from training_catalog.pipeline.curation import curate
 
 GOOD = ("the quick brown fox jumps over the lazy dog and runs far "
         "beyond the quiet green hills toward a bright new morning")

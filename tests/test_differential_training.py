@@ -13,7 +13,7 @@ import string
 import duckdb
 import pytest
 
-from openskidata_processor_spark.plans import ORACLES
+from training_catalog.plans import ORACLES
 
 WORDS = ["alpha", "beta", "gamma", "delta", "zug", "год", "x1",
          "the", "of", "and", "", "a", "Ωmega", "beta"]
@@ -55,7 +55,7 @@ def _compare(spark, rows):
 
 @pytest.mark.parametrize("seed", [11, 23, 37])
 def test_lm_perplexity_fuzz(spark, seed):
-    from openskidata_processor_spark.operators.lm_score import \
+    from training_catalog.operators.lm_score import \
         bigram_logprob
     rows = _random_docs(seed, 40)
     sdf, con = _compare(spark, rows)
@@ -68,7 +68,7 @@ def test_lm_perplexity_fuzz(spark, seed):
 
 @pytest.mark.parametrize("seed", [5, 17])
 def test_dup_ngram_fuzz(spark, seed):
-    from openskidata_processor_spark.operators.dupstats import \
+    from training_catalog.operators.dupstats import \
         dup_ngram_stats
     rows = _random_docs(seed, 40)
     sdf, con = _compare(spark, rows)
@@ -82,7 +82,7 @@ def test_dup_ngram_fuzz(spark, seed):
 def test_dsir_fuzz(spark, seed):
     from pyspark.sql import functions as F
 
-    from openskidata_processor_spark.operators.dsir import dsir_select
+    from training_catalog.operators.dsir import dsir_select
     rows = _random_docs(seed, 40)
     sdf, con = _compare(spark, rows)
     got = sorted(map(tuple,
@@ -96,7 +96,7 @@ def test_dsir_fuzz(spark, seed):
 
 @pytest.mark.parametrize("seed", [3, 41])
 def test_curate_fuzz(spark, seed):
-    from openskidata_processor_spark.pipeline.curation import curate
+    from training_catalog.pipeline.curation import curate
     rows = _random_docs(seed, 60)
     sdf, con = _compare(spark, rows)
     got = sorted(map(tuple, curate(sdf).collect()))
@@ -115,7 +115,7 @@ def test_curate_fuzz(spark, seed):
 def _run_query(spark, tmp_path, table, rows, schema, columns, qname):
     import pandas as pd
 
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     spark.createDataFrame(rows, schema).write.mode("overwrite") \
         .parquet(str(tmp_path / f"{table}.parquet"))
@@ -293,7 +293,7 @@ def _stream_src(spark, tmp_path, rows, n_files=3):
 def test_stream_curate_fuzz(spark, tmp_path, seed):
     import pandas as pd
 
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.streaming.documents import \
         streaming_curation_stats
 
     rows = _random_docs(seed, 60)
@@ -312,7 +312,7 @@ def test_stream_curate_fuzz(spark, tmp_path, seed):
 def test_stream_winnow_fuzz(spark, tmp_path, seed):
     import pandas as pd
 
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.streaming.documents import \
         streaming_winnow_pairs
 
     rows = _random_docs(seed, 45)

@@ -63,6 +63,21 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
         os.environ.pop("SPARK_GRAFT_CHECKPOINT_DIR", None)
 
 
+def test_materialize_is_lazy(spark):
+    """The shared-subplan barrier must not trigger a job at call time
+    (round-2's eager localCheckpoint serialized materialization and caused
+    2-5x bench variance)."""
+    from training_catalog.operators.barrier import materialize
+
+    status = spark.sparkContext.statusTracker()
+    before = len(status.getJobIdsForGroup(None) or [])
+    df = materialize(spark.range(1000).selectExpr("id", "id * 2 as two"))
+    after = len(status.getJobIdsForGroup(None) or [])
+    assert after == before  # no job ran at barrier-creation time
+    assert df.count() == 1000
+    df.unpersist()
+
+
 def test_connected_components_numeric_fast_path(spark):
     """Integral vertex ids take the no-hash path: output columns are
     longs and the component is the numeric minimum (not a string min)."""

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.functions import pii as P
-from openskidata_processor_spark.operators.packing import pack_sequences
+from training_catalog.functions import pii as P
+from training_catalog.operators.packing import pack_sequences
 
 # ---------------------------------------------------------------------------
 # PII redaction
@@ -99,7 +99,7 @@ def test_pack_order_is_by_order_col_not_input_order(spark):
 
 def test_dedup_passages_keep_first(spark):
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
     out = QUERIES["dedup_passages"](spark, SF_SMOKE)
     rows = out.collect()
     assert all(0 <= r.n_kept <= r.n_passages for r in rows)
@@ -111,7 +111,7 @@ def test_dedup_passages_keep_first(spark):
 
 def test_shard_assignment_is_stable_partition(spark):
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
     a = QUERIES["shard_assignment"](spark, SF_SMOKE).collect()
     b = QUERIES["shard_assignment"](spark, SF_SMOKE).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -125,7 +125,7 @@ def test_shard_assignment_is_stable_partition(spark):
 
 def test_contamination_excludes_benchmark_side(spark):
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
     out = QUERIES["contamination_ngram"](spark, SF_SMOKE).collect()
     assert all(r.doc_id % 29 != 0 for r in out)
     assert all(r.n_shared_shingles >= 1 and r.n_bench_docs >= 1 for r in out)
@@ -139,7 +139,7 @@ def test_contamination_excludes_benchmark_side(spark):
 def test_dup_ngram_stats_hand_case(spark):
     """Shared 5-gram counts for both holders, unique doc scores 0, short
     doc reports 0 shingles with dup_frac 0."""
-    from openskidata_processor_spark.operators.dupstats import \
+    from training_catalog.operators.dupstats import \
         dup_ngram_stats
     shared = "alpha beta gamma delta epsilon"
     docs = spark.createDataFrame(
@@ -155,7 +155,7 @@ def test_dup_ngram_stats_hand_case(spark):
 
 
 def test_dup_ngram_identical_docs_fully_duplicated(spark):
-    from openskidata_processor_spark.operators.dupstats import \
+    from training_catalog.operators.dupstats import \
         dup_ngram_stats
     text = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame([(1, text), (2, text)],
@@ -168,7 +168,7 @@ def test_dup_ngram_identical_docs_fully_duplicated(spark):
 def test_dup_ngram_repeated_shingle_in_one_doc_not_dup(spark):
     """A shingle repeated only WITHIN one document is not cross-doc
     duplication (distinct-per-doc posting)."""
-    from openskidata_processor_spark.operators.dupstats import \
+    from training_catalog.operators.dupstats import \
         dup_ngram_stats
     docs = spark.createDataFrame(
         [(1, "a b c d e a b c d e")], "doc_id long, text string")
@@ -182,7 +182,7 @@ def test_dup_ngram_repeated_shingle_in_one_doc_not_dup(spark):
 
 
 def _spans(spark, tmp_path, rows):
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     spark.createDataFrame(rows, "doc_id long, text string") \
         .write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
@@ -232,7 +232,7 @@ def test_semantic_decontamination_verdicts_and_ties(spark, tmp_path):
     """Max cosine against the broadcast benchmark slice: an aligned
     vector is contaminated, an orthogonal one is not; an exact tie
     between two benchmark vectors resolves to the SMALLEST bench id."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     e = [1.0, 0.0, 0.0, 0.0]
     o = [0.0, 1.0, 0.0, 0.0]
@@ -257,7 +257,7 @@ def test_winnow_guarantee_shared_run_detected(spark, tmp_path):
     """The winnowing guarantee: a shared run of ≥ W+K−1 = 11 words
     always yields ≥ 1 shared selected fingerprint, while docs with no
     shared k-gram never pair."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     run = " ".join(f"c{i}" for i in range(11))          # exactly W+K−1
     rows = [(1, " ".join(f"a{i}" for i in range(7)) + " " + run),
@@ -276,7 +276,7 @@ def test_winnow_rightmost_tie_and_density(spark, tmp_path):
     """An exact self-repeat selects IDENTICAL fingerprint sets for both
     docs (n_shared = the doc's full selection), and the selection is a
     strict subset of all k-gram hashes (winnowing actually thins)."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     text = " ".join(f"w{i % 13}" for i in range(40))    # repetitive soup
     rows = [(10, text), (11, text)]
@@ -297,7 +297,7 @@ def test_winnow_pos_base_guard_raises_loudly(spark):
     Exercised with a tiny base so the test corpus stays small."""
     import pytest
 
-    from openskidata_processor_spark.plans.training import \
+    from training_catalog.plans.training import \
         winnow_fingerprints
 
     df = spark.createDataFrame(
@@ -311,7 +311,7 @@ def test_winnow_long_doc_beyond_old_16bit_bound(spark, tmp_path):
     """Docs past 2^16 k-grams fingerprint correctly under the 2^23 pos
     base: a 12-word run shared between a ~66k-word doc (positions past
     the old 65,536 wrap point) and a short doc still pairs."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     run = " ".join(f"c{i}" for i in range(12))
     big = " ".join(f"u{i}" for i in range(66_000)) + " " + run
@@ -330,7 +330,7 @@ def test_length_bucket_batches_coordinates(spark, tmp_path):
     the expected order in Python."""
     import hashlib
 
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     rows = [(i, " ".join("tok" for _ in range(5 + (i % 3) * 16)))
             for i in range(40)]
@@ -358,7 +358,7 @@ def test_length_bucket_two_phase_equals_single_window(spark, tmp_path):
     one-window-per-bucket plan — including on a corpus where one bucket
     holds ~¾ of the docs (the hot-bucket shape the two-phase plan
     exists for) and salts with ties across the prefix boundary."""
-    from openskidata_processor_spark.plans.hygiene import (
+    from training_catalog.plans.hygiene import (
         _batch_coords, _batch_coords_single_window, _bucketed_docs)
 
     # 300 docs at one cap length (one hot bucket) + 100 spread docs
@@ -380,7 +380,7 @@ def test_curriculum_stages_quartiles_and_ties(spark, tmp_path):
     and ties land in the LOWER stage: on 8 docs with known scores the
     stages split 2/2/2/2, and a corpus where half the docs tie on one
     score keeps every tied doc in the same stage."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     # scores are monotone in text length here: k 'a' words, len = 2k-1,
     # tok = k ≤ 64, non_punct = len → q = k*1e6 div 64 — strictly
@@ -407,8 +407,8 @@ def test_chunk_documents_coverage_and_overlap(spark, tmp_path):
     token is covered, consecutive chunks overlap by C−S, the tail chunk
     may be short but never empty, a short doc yields exactly one chunk,
     and a token-less doc yields none."""
-    from openskidata_processor_spark.plans import QUERIES
-    from openskidata_processor_spark.plans.hygiene import (
+    from training_catalog.plans import QUERIES
+    from training_catalog.plans.hygiene import (
         _CHUNK_STRIDE, _CHUNK_TOKENS)
 
     rows = [(1, " ".join(f"w{i}" for i in range(100))),   # multi-chunk
@@ -439,8 +439,8 @@ def test_line_dedup_removes_boilerplate_and_reassembles(spark, tmp_path):
     lines rebuilds to the empty string."""
     import hashlib
 
-    from openskidata_processor_spark.plans import QUERIES
-    from openskidata_processor_spark.plans.hygiene import _LINE_WORDS
+    from training_catalog.plans import QUERIES
+    from training_catalog.plans.hygiene import _LINE_WORDS
 
     assert _LINE_WORDS == 8
     boiler = ["page 3 of 7 click here to close",
@@ -484,7 +484,7 @@ def test_line_dedup_removes_boilerplate_and_reassembles(spark, tmp_path):
 def _quality_rows(spark, tmp_path, query, docs):
     """Run a quality catalog query over crafted docs, one source per
     doc so the per-source rollup yields one row per vector."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     rows = [(i, text, "en", src, len(text))
             for i, (src, text) in enumerate(docs)]
@@ -658,7 +658,7 @@ def test_gopher_repetition_matches_first_principles(spark, tmp_path):
     import duckdb
 
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     rows = duckdb.sql(
         f"SELECT source, text FROM "

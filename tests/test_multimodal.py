@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.operators import multimodal as mm
+from training_catalog.operators import multimodal as mm
 from test_terrain import encode_png
 
 
@@ -112,7 +112,7 @@ def test_sample_frames_y4m_real_demux(spark):
 def test_wav_codec_identity():
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_wav_pcm16, encode_wav_pcm16)
     s = (np.arange(257, dtype=np.int64) * 997 % 65536 - 32768).astype(
         np.int16)
@@ -126,7 +126,7 @@ def test_wav_decode_skips_unknown_chunks():
 
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_wav_pcm16, encode_wav_pcm16)
     s = np.array([1, -2, 3], dtype=np.int16)
     b = encode_wav_pcm16(s, 8000)
@@ -140,7 +140,7 @@ def test_wav_decode_skips_unknown_chunks():
 def test_wav_decode_rejects_garbage():
     import pytest
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_wav_pcm16)
     with pytest.raises(ValueError):
         decode_wav_pcm16(b"not audio at all")
@@ -149,7 +149,7 @@ def test_wav_decode_rejects_garbage():
 
 
 def test_audio_features_bad_payload_surfaces_as_row(spark):
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         audio_features)
     df = spark.createDataFrame([(1, bytearray(b"garbage"))],
                                "id long, payload binary")
@@ -160,7 +160,7 @@ def test_audio_features_bad_payload_surfaces_as_row(spark):
 def test_y4m_codec_identity():
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_y4m, encode_y4m)
     fr = (np.arange(3 * 3 * 4 * 6) * 13 % 256).astype(np.uint8).reshape(
         3, 3, 4, 6)
@@ -173,7 +173,7 @@ def test_y4m_decode_rejects_malformed():
     import numpy as np
     import pytest
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_y4m, encode_y4m)
     with pytest.raises(ValueError):
         decode_y4m(b"AVI nope")
@@ -192,7 +192,7 @@ def test_y4m_decode_rejects_malformed():
 def test_y4m_decode_skips_unknown_header_params():
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import decode_y4m
+    from training_catalog.operators.multimodal import decode_y4m
     fr = bytes(range(12))
     payload = (b"YUV4MPEG2 W2 H2 F30000:1001 Ip A128:117 C444 Xcustom\n"
                b"FRAME\n" + fr)
@@ -204,7 +204,7 @@ def test_y4m_decode_skips_unknown_header_params():
 def test_video_frame_stats_sampling(spark):
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         encode_y4m, video_frame_stats)
     fr = np.stack([np.full((3, 2, 2), v, dtype=np.uint8)
                    for v in (10, 20, 30, 40, 50)])
@@ -221,7 +221,7 @@ def test_video_frame_stats_sampling(spark):
 
 
 def _png_df(spark, imgs):
-    from openskidata_processor_spark.operators.multimodal import \
+    from training_catalog.operators.multimodal import \
         encode_png_rgb
     rows = [(i, bytearray(encode_png_rgb(arr))) for i, arr in imgs]
     return spark.createDataFrame(rows, "id long, payload binary")
@@ -232,7 +232,7 @@ def test_perceptual_hash_invariant_to_tiny_noise(spark):
     a structurally different image lands far away."""
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_images, perceptual_hash, phash_pairs)
     base = np.zeros((32, 32, 3), dtype=np.uint8)
     base[:, 16:] = 200          # left dark / right bright
@@ -257,7 +257,7 @@ def test_phash_pairs_pigeonhole_across_blocks(spark):
     # block 2 (hi 0-15); block 3 untouched
     lo_b = lo_a ^ (1 << 2) ^ (1 << 20)
     hi_b = hi_a ^ (1 << 3)
-    from openskidata_processor_spark.operators.multimodal import \
+    from training_catalog.operators.multimodal import \
         phash_pairs
     hashes = spark.createDataFrame(
         [(1, hi_a, lo_a), (2, hi_b, lo_b), (3, ~0 & 0x7FFFFFFF, 0)],
@@ -268,7 +268,7 @@ def test_phash_pairs_pigeonhole_across_blocks(spark):
 
 
 def test_phash_undecodable_assets_drop(spark):
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         decode_images, perceptual_hash)
     df = spark.createDataFrame([(1, bytearray(b"not a png"))],
                                "id long, payload binary")
@@ -280,7 +280,7 @@ def test_audio_fingerprint_noise_invariance_and_dropout(spark):
     identically; a reshaped burst lands elsewhere; garbage drops."""
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         audio_fingerprint, encode_wav_pcm16)
     n = 160
     base = np.zeros(n, dtype=np.int16)
@@ -308,7 +308,7 @@ def test_energy_bits_exact_past_int64():
     (and flips the verdict) while exact Python-int math stays right."""
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import \
+    from training_catalog.operators.multimodal import \
         _energy_bits
 
     n = 2**32
@@ -331,7 +331,7 @@ def test_multimodal_near_dup_groups_cross_modality_closure(spark, tmp_path):
     {0,1} and {2,3} (Hamming 1), audio links {1,2} (Hamming 1), video
     links {0,3} (exact) — no single modality connects the block, but the
     union does.  A partial 2-doc block groups on its image edge alone."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     spark.createDataFrame([(i,) for i in range(6)], "doc_id long") \
         .write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
@@ -347,7 +347,7 @@ def test_video_fingerprint_temporal_pooling(spark):
     different spatial layout changes it; junk drops."""
     import numpy as np
 
-    from openskidata_processor_spark.operators.multimodal import (
+    from training_catalog.operators.multimodal import (
         encode_y4m, video_fingerprint)
     rng = np.random.default_rng(3)
     f1 = rng.integers(0, 255, (3, 3, 8, 16), dtype=np.uint8)

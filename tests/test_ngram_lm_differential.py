@@ -30,7 +30,7 @@ from collections import Counter
 import duckdb
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.plans import QUERIES
+from training_catalog.plans import QUERIES
 
 
 def _texts(limit=None):

@@ -14,7 +14,7 @@ import duckdb
 import pytest
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.plans import ORACLES, QUERIES
+from training_catalog.plans import ORACLES, QUERIES
 
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
@@ -124,7 +124,7 @@ def test_every_query_runs(spark):
 def test_sql_views_surface(spark):
     """register_views exposes the full star schema to spark.sql under the
     oracle table names."""
-    from openskidata_processor_spark.sources.tables import register_views
+    from training_catalog.sources.tables import register_views
     register_views(spark, SF_SMOKE)
     out = spark.sql(
         "SELECT r_name, count(*) AS n FROM region "

@@ -24,7 +24,7 @@ import duckdb
 import pytest
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.plans import ORACLES
+from training_catalog.plans import ORACLES
 
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.plans import QUERIES
+from training_catalog.plans import QUERIES
 
 # stream_* queries execute at call time (availableNow drain) — their plan
 # is the drained memory table, not the pipeline; audited separately.
@@ -49,7 +49,7 @@ def test_projection_reaches_scan(spark):
 def test_filter_pushdown_reaches_scan(spark):
     """A plain column predicate must appear in PushedFilters at the
     parquet scan, not only as a post-scan Filter."""
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.sources.tables import load_table
     df = (load_table(spark, SF_SMOKE, "part")
           .filter(F.col("p_size") >= 25).select("p_partkey", "p_size"))
     plan = _plan(df)
@@ -336,9 +336,9 @@ def test_ppl_bucket_percentile_input_is_bounded(spark):
     buffer at scale) fails this audit instead of shipping."""
     import re
 
-    from openskidata_processor_spark.operators.lm_score import (
+    from training_catalog.operators.lm_score import (
         bigram_logprob)
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.sources.tables import load_table
 
     plan = _plan(QUERIES["ppl_bucket_docs"](spark, SF_SMOKE))
     assert re.search(r"percentile\(avg_logp", plan), plan

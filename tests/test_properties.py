@@ -89,6 +89,48 @@ def test_terrain_decode_inverse_property(r, g, b):
         r * 256 + g + b / 256.0 - 32768
 
 
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.integers(-32768, 32767), min_size=0, max_size=512),
+       st.sampled_from([8000, 16000, 44100]))
+def test_wav_codec_roundtrip_property(samples, rate):
+    """WAV encode→decode is the identity for any int16 sample buffer."""
+    from training_catalog.operators.multimodal import (
+        decode_wav_pcm16, encode_wav_pcm16)
+    s = np.array(samples, dtype=np.int16)
+    out_rate, out = decode_wav_pcm16(encode_wav_pcm16(s, rate))
+    assert out_rate == rate
+    assert np.array_equal(out, s)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.integers(1, 40), min_size=1, max_size=60),
+       st.integers(10, 100))
+def test_next_fit_packing_invariants(weights, budget):
+    """Next-fit invariants on the OPERATOR's own recurrence (the exact
+    function pack_sequences runs per shard): bin ids are contiguous and
+    monotone in scan order; a bin only exceeds the budget when it holds a
+    single oversized document; a new bin opens only because the previous
+    could not take the document."""
+    from training_catalog.operators.packing import next_fit_bins
+    bins = next_fit_bins(weights, budget)
+    assert bins[0] == 0
+    # monotone, steps of ≤ 1
+    for a, b in zip(bins, bins[1:]):
+        assert b in (a, a + 1)
+    fills = {}
+    for w, b in zip(weights, bins):
+        fills[b] = fills.get(b, 0) + w
+    for b, f in fills.items():
+        members = [w for w, bb in zip(weights, bins) if bb == b]
+        assert f <= budget or len(members) == 1
+    # a new bin opens only because the previous could not take the doc
+    for i in range(1, len(weights)):
+        if bins[i] != bins[i - 1]:
+            prev_fill = sum(w for w, b in zip(weights[:i], bins[:i])
+                            if b == bins[i - 1])
+            assert prev_fill + weights[i] > budget
+
+
 # ---------------------------------------------------------------------------
 # Geometry kernels (functions/geometry.py) — the pure-Python cores the
 # Arrow-batched spatial stages call.
@@ -264,3 +306,31 @@ def test_enhance_photon_total_and_consistent(code, state, county, city):
                      if r["iso"] == riso)
         assert out["region"] == entry["name"]
         assert entry["name"] in (state, county)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(st.tuples(st.integers(0, 2 ** 62), st.integers(1, 2 ** 31)),
+             min_size=1, max_size=16),
+    st.integers(1, 2 ** 40),
+)
+def test_energy_bits_matches_exact_rational(windows, n):
+    """The audio fingerprint's window compare must equal exact rational
+    arithmetic (sa/nw > st/n) at ANY magnitude — including far past the
+    int64 product range where the pre-fix numpy path silently wrapped."""
+    from fractions import Fraction
+
+    import numpy as np
+
+    from training_catalog.operators.multimodal import \
+        _energy_bits
+
+    sa = np.array([w[0] for w in windows], dtype=np.int64)
+    nw = np.array([w[1] for w in windows], dtype=np.int64)
+    stot = int(sa.sum())
+    got = _energy_bits(sa, nw, stot, n)
+    want = 0
+    for k, (a, w) in enumerate(windows):
+        if Fraction(a, w) > Fraction(stot, n):
+            want |= 1 << k
+    assert got == want

@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.operators.range_join import range_join
+from training_catalog.operators.range_join import range_join
 
 
 @pytest.fixture()

@@ -15,8 +15,8 @@ deterministic assertions, not flaky statistics.
 import pytest
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.operators import dedup, similarity
-from openskidata_processor_spark.sources.tables import load_table
+from training_catalog.operators import dedup, similarity
+from training_catalog.sources.tables import load_table
 
 from conftest import SF_T2
 
@@ -95,7 +95,7 @@ def test_simhash_blocking_is_lossless(spark):
     blocks).  This is SimHash's own contract; see test_simhash_cross_metric
     for how that contract relates to Jaccard similarity."""
     docs = _docs(spark)
-    from openskidata_processor_spark.functions.text import (word_shingles,
+    from training_catalog.functions.text import (word_shingles,
                                                             words)
     feats = docs.select(
         F.col("doc_id").alias("id"),
@@ -209,7 +209,7 @@ def test_embedding_dedup_lsh_recall(spark):
         v = c + 0.22 * rng.randn(64)
         rows.append((i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    from openskidata_processor_spark.functions.vectors import as_double, cosine
+    from training_catalog.functions.vectors import as_double, cosine
     a = emb.select(F.col("vec_id").alias("id_a"),
                    F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"),
@@ -234,7 +234,7 @@ def test_embedding_dedup_lsh_precision_random(spark):
     """On the uncorrelated embeddings table the exact-verify step still
     guarantees every reported pair is a true > 0.4 pair."""
     emb = load_table(spark, SF_T2, "embeddings")
-    from openskidata_processor_spark.functions.vectors import as_double, cosine
+    from training_catalog.functions.vectors import as_double, cosine
     a = emb.select(F.col("vec_id").alias("id_a"),
                    F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"),

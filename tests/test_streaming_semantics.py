@@ -9,7 +9,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from openskidata_processor_spark.streaming.events import (
+from training_catalog.streaming.events import (
     windowed_event_counts_append)
 
 UTC_TS = pa.timestamp("us", tz="UTC")
@@ -218,8 +218,8 @@ def test_streaming_curation_multi_batch_dedup_state(spark, tmp_path):
     union."""
     import duckdb
 
-    from openskidata_processor_spark.plans import ORACLES
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.plans import ORACLES
+    from training_catalog.streaming.documents import \
         streaming_curation_stats
 
     good = ("plenty of perfectly ordinary words stacked together here "
@@ -269,8 +269,8 @@ def test_streaming_curation_forced_multi_batch(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from openskidata_processor_spark.plans import ORACLES
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.plans import ORACLES
+    from training_catalog.streaming.documents import \
         streaming_curation_stats
 
     good = ("plenty of perfectly ordinary words stacked together here "
@@ -327,8 +327,8 @@ def test_streaming_winnow_cross_batch_pair_discovery(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from openskidata_processor_spark.plans import ORACLES
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.plans import ORACLES
+    from training_catalog.streaming.documents import \
         streaming_winnow_pairs
 
     run = " ".join(f"c{i}" for i in range(12))
@@ -367,7 +367,7 @@ def test_streaming_winnow_state_base_survives_calls(spark, tmp_path):
     from the checkpoint and returns the same ledger, and a third drain
     after RE-DELIVERING an already-fingerprinted doc_id (new file, same
     id) anti-joins it out — no duplicate pair rows, ever."""
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.streaming.documents import \
         streaming_winnow_pairs
 
     run = " ".join(f"c{i}" for i in range(12))
@@ -408,7 +408,7 @@ def test_state_base_pinned_to_one_source(spark, tmp_path):
     instead of resuming (ADVICE r8: one-source-per-state_base)."""
     import pytest
 
-    from openskidata_processor_spark.streaming.documents import (
+    from training_catalog.streaming.documents import (
         streaming_curation_stats, streaming_minhash_pairs,
         streaming_winnow_pairs)
 
@@ -437,7 +437,7 @@ def test_streaming_curation_state_base_dedups_across_calls(spark,
     """``state_base`` makes the digest state a standing dedup ledger
     across CALLS: re-delivered content in a later drain counts as docs
     seen but dedups against the persisted digests — n_kept unchanged."""
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.streaming.documents import \
         streaming_curation_stats
 
     # doc_ids chosen % 29 != 0 (pool, not benchmark); 64 plain words
@@ -476,9 +476,9 @@ def test_streaming_minhash_equals_batch_across_batches(spark, tmp_path):
     postings), exact-Jaccard verification uses the standing shingle
     state, re-delivered doc ids no-op, and the drained ledger equals
     the batch minhash_dedup_pairs output exactly."""
-    from openskidata_processor_spark.operators.dedup import \
+    from training_catalog.operators.dedup import \
         minhash_dedup_pairs
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.streaming.documents import \
         streaming_minhash_pairs
 
     base = " ".join(f"t{i}" for i in range(30))
@@ -533,7 +533,7 @@ def test_sessions_tws_equals_v1(spark):
     applyInPandasWithState operator's sessionization — the contract
     that gates the API migration."""
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.streaming.events import (
+    from training_catalog.streaming.events import (
         stateful_user_sessions, stateful_user_sessions_tws)
 
     got = sorted(map(tuple,
@@ -551,9 +551,9 @@ def test_streaming_ivf_index_equals_batch_assignment(spark, tmp_path):
     consistent with the postings."""
     import numpy as np
 
-    from openskidata_processor_spark.operators.similarity import (
+    from training_catalog.operators.similarity import (
         _ivf_cells_udf, _train_ivf_centroids)
-    from openskidata_processor_spark.streaming.embeddings import (
+    from training_catalog.streaming.embeddings import (
         streaming_ivf_index)
     from pyspark.sql import functions as F
 
@@ -638,9 +638,9 @@ def test_streaming_ivf_4096_cells_broadcast_model(spark, tmp_path):
 
     import numpy as np
 
-    from openskidata_processor_spark.operators.similarity import (
+    from training_catalog.operators.similarity import (
         _ivf_cells_udf)
-    from openskidata_processor_spark.streaming.embeddings import (
+    from training_catalog.streaming.embeddings import (
         streaming_ivf_index)
     from pyspark.sql import functions as F
 
@@ -684,8 +684,8 @@ def test_streaming_vocab_pair_stats_forced_multi_batch(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from openskidata_processor_spark.plans import ORACLES
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.plans import ORACLES
+    from training_catalog.streaming.documents import \
         streaming_vocab_pair_stats
 
     b1 = [(1, "s1", "banana bandana", "en", 14)]
@@ -722,7 +722,7 @@ def test_streaming_vocab_state_base_pinned_and_reusable(spark, tmp_path):
     a different source directory."""
     import pytest as _pytest
 
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.streaming.documents import \
         streaming_vocab_pair_stats
 
     d = tmp_path / "src_a"
@@ -753,8 +753,8 @@ def test_streaming_gopher_quality_forced_multi_batch(spark, tmp_path):
     import duckdb
     import pandas as pd
 
-    from openskidata_processor_spark.plans import ORACLES
-    from openskidata_processor_spark.streaming.documents import \
+    from training_catalog.plans import ORACLES
+    from training_catalog.streaming.documents import \
         streaming_gopher_quality
 
     stops = ["that", "have", "with"]     # 4-char stops: mean len 4.0

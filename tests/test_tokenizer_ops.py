@@ -20,10 +20,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.operators.bpe import (
+from training_catalog.operators.bpe import (
     chars, encode_words, encode_words_udf, learn_bpe, learn_bpe_batched,
     learn_bpe_local, merge_pair, merge_pairs_multi, word_vocab)
-from openskidata_processor_spark.plans import QUERIES
+from training_catalog.plans import QUERIES
 
 
 # --- pure-Python Sennrich reference -----------------------------------------
@@ -88,7 +88,7 @@ def _docs_df(spark, texts):
 # --- learner vs reference ----------------------------------------------------
 
 def test_learn_matches_reference_on_smoke(spark):
-    from openskidata_processor_spark.plans.tokenizer import _BPE_MERGES
+    from training_catalog.plans.tokenizer import _BPE_MERGES
 
     expected, _ = ref_bpe(_py_vocab(_smoke_texts()), _BPE_MERGES)
     got = [(r["merge_rank"], r["left"], r["right"], r["merged"],
@@ -280,7 +280,7 @@ def _simulate_batched(vocab: dict[str, int], n_merges: int,
     exactly the learn_bpe_batched loop (top-K by (cnt desc, l, r),
     prefix selection, apply-all, recount) without Spark — lets the fuzz
     cover hundreds of corpora in seconds."""
-    from openskidata_processor_spark.operators.bpe import _select_batch
+    from training_catalog.operators.bpe import _select_batch
 
     words = {w: list(w) for w in vocab}
     merges = []
@@ -344,7 +344,7 @@ def test_select_batch_coincident_pair_guard():
     the first merge.  Liveness of "cd" is decidable from the merge
     history (char seeding: live multi-char symbols ⊆ learned merged
     strings), with a visible-row backstop for wrong histories."""
-    from openskidata_processor_spark.operators.bpe import _select_batch
+    from training_catalog.operators.bpe import _select_batch
 
     rows = [{"l": "c", "r": "d", "cnt": 10},
             {"l": "x", "r": "y", "cnt": 8},
@@ -376,7 +376,7 @@ def test_select_batch_unsorted_rows_raise_value_error():
     behavior.  Pin both the raise and its assert-independence."""
     import pytest
 
-    from openskidata_processor_spark.operators.bpe import _select_batch
+    from training_catalog.operators.bpe import _select_batch
 
     unsorted = [{"l": "x", "r": "y", "cnt": 8},
                 {"l": "c", "r": "d", "cnt": 10}]   # cnt ascending: bad
@@ -394,7 +394,7 @@ def test_select_batch_unsorted_rows_raise_value_error():
     import ast
     import inspect
     import textwrap
-    import openskidata_processor_spark.operators.bpe as bpe_mod
+    import training_catalog.operators.bpe as bpe_mod
     tree = ast.parse(textwrap.dedent(
         inspect.getsource(bpe_mod._select_batch)))
     assert not any(isinstance(n, ast.Assert) for n in ast.walk(tree)), \
@@ -405,7 +405,7 @@ def test_select_batch_visibility_floor():
     """Strict top-K: unseen pairs (≤ floor) cannot gain count once the
     coincident guard passes, so candidates strictly above the floor
     certify; candidates at the floor do not."""
-    from openskidata_processor_spark.operators.bpe import _select_batch
+    from training_catalog.operators.bpe import _select_batch
 
     rows = [{"l": "c", "r": "d", "cnt": 10},
             {"l": "x", "r": "y", "cnt": 8},
@@ -452,7 +452,7 @@ def test_local_learner_fuzz(spark, seed):
 def test_bpe_learn_deep_catalog_entry(spark):
     """The catalog query returns the 64-deep merge table, identical to
     the reference, as a single-task DataFrame."""
-    from openskidata_processor_spark.plans.tokenizer import _BPE_DEEP_MERGES
+    from training_catalog.plans.tokenizer import _BPE_DEEP_MERGES
 
     expected, _ = ref_bpe(_py_vocab(_smoke_texts()), _BPE_DEEP_MERGES)
     rows = QUERIES["bpe_learn_deep"](spark, SF_SMOKE).collect()
@@ -551,7 +551,7 @@ def test_pmi_lift_self_consistent(spark):
 # --- BPE train-then-apply stats -------------------------------------------
 
 def test_encode_stats_matches_reference(spark):
-    from openskidata_processor_spark.plans.tokenizer import _BPE_ENC_MERGES
+    from training_catalog.plans.tokenizer import _BPE_ENC_MERGES
 
     con = duckdb.connect()
     docs = con.sql(
@@ -585,7 +585,7 @@ def test_training_pipeline_matches_reference(spark):
     import hashlib
     import re
 
-    from openskidata_processor_spark.plans.tokenizer import (
+    from training_catalog.plans.tokenizer import (
         _BPE_ENC_MERGES, _PIPE_MIN_TOKENS, _SPLIT_TRAIN_PCT,
         _SPLIT_VALID_PCT)
 
@@ -660,7 +660,7 @@ def test_merge_fold_property_batch(spark):
 def test_record_task_peak_env_gate(tmp_path, monkeypatch):
     """operators/probe.py: inert without the env var; with it, appends
     a '<tag> <VmHWM-kB>' line readable by the --vocab probe."""
-    from openskidata_processor_spark.operators.probe import (
+    from training_catalog.operators.probe import (
         record_task_peak)
 
     monkeypatch.delenv("SPARK_GRAFT_TRAINER_PROBE", raising=False)
@@ -691,7 +691,7 @@ def test_sbo_score_hand_computed_backoff_vectors(spark, tmp_path):
       "c c d"  -> unigram backoff  ln(0.16 * 1/6) = -3.6243
       "d d z"  -> w3 OOV, zero scored positions -> doc filtered out
     """
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     docs = [(0, "a b c a b d"),      # bucket 31 -> train
             (1, "a b c "),           # bucket 97 -> held out

@@ -11,13 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.operators.merge import merge_upsert
-from openskidata_processor_spark.operators.quantiles import exact_quantiles
-from openskidata_processor_spark.operators.sampling import (
+from training_catalog.operators.merge import merge_upsert
+from training_catalog.operators.quantiles import exact_quantiles
+from training_catalog.operators.sampling import (
     hash_sample, stratified_hash_sample)
-from openskidata_processor_spark.operators.tfidf import (
+from training_catalog.operators.tfidf import (
     term_frequencies, tfidf)
-from openskidata_processor_spark.sources.tables import load_table
+from training_catalog.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # merge_upsert
@@ -150,7 +150,7 @@ def _skewed_docs(spark):
 
 
 def test_cap_per_group_equals_single_window(spark):
-    from openskidata_processor_spark.operators.sampling import cap_per_group
+    from training_catalog.operators.sampling import cap_per_group
     df = _skewed_docs(spark)
     two = sorted((r.id, r.src) for r in
                  cap_per_group(df, "id", "src", 25).collect())
@@ -160,7 +160,7 @@ def test_cap_per_group_equals_single_window(spark):
 
 
 def test_cap_per_group_respects_cap_and_keeps_small_groups(spark):
-    from openskidata_processor_spark.operators.sampling import cap_per_group
+    from training_catalog.operators.sampling import cap_per_group
     df = _skewed_docs(spark)
     counts = {r.src: r.n for r in
               cap_per_group(df, "id", "src", 25)
@@ -176,7 +176,7 @@ def test_cap_per_group_respects_cap_and_keeps_small_groups(spark):
 
 
 def test_cap_per_group_stable_under_repartitioning(spark):
-    from openskidata_processor_spark.operators.sampling import cap_per_group
+    from training_catalog.operators.sampling import cap_per_group
     df = _skewed_docs(spark)
     a = sorted(r.id for r in cap_per_group(df, "id", "src", 10).collect())
     b = sorted(r.id for r in
@@ -185,7 +185,7 @@ def test_cap_per_group_stable_under_repartitioning(spark):
 
 
 def test_cap_per_group_rejects_bad_cap(spark):
-    from openskidata_processor_spark.operators.sampling import cap_per_group
+    from training_catalog.operators.sampling import cap_per_group
     with pytest.raises(ValueError):
         cap_per_group(spark.range(5), "id", "id", 0)
 
@@ -271,7 +271,7 @@ def test_tfidf_log_ranks_rare_terms_higher(spark):
 # ---------------------------------------------------------------------------
 
 def test_sketch_doc_stats_error_bounds(spark):
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
     approx = {r.lang: r for r in
               QUERIES["sketch_doc_stats"](spark, SF_SMOKE).collect()}
     docs = load_table(spark, SF_SMOKE, "documents")
@@ -298,7 +298,7 @@ def test_sketch_doc_stats_error_bounds(spark):
 
 
 def test_temperature_mixture_upsamples_small_sources(spark):
-    from openskidata_processor_spark.operators.sampling import (
+    from training_catalog.operators.sampling import (
         temperature_mixture_sample)
     # big source: 2000 docs x 100 chars; small: 125 docs x 100 chars
     rows = ([(i, "big", 100) for i in range(2000)]
@@ -319,7 +319,7 @@ def test_temperature_mixture_upsamples_small_sources(spark):
 def test_temperature_mixture_deterministic_and_exact_alpha_only(spark):
     import pytest
 
-    from openskidata_processor_spark.operators.sampling import (
+    from training_catalog.operators.sampling import (
         temperature_mixture_sample)
     df = spark.createDataFrame([(i, "s", 10) for i in range(50)],
                                "doc_id long, source string, w long")
@@ -334,7 +334,7 @@ def test_temperature_mixture_deterministic_and_exact_alpha_only(spark):
 
 
 def test_temperature_mixture_repeat_produces_epochs(spark):
-    from openskidata_processor_spark.operators.sampling import (
+    from training_catalog.operators.sampling import (
         temperature_mixture_repeat)
     rows = ([(i, "big", 100) for i in range(2000)]
             + [(10_000 + i, "small", 100) for i in range(50)])
@@ -365,7 +365,7 @@ def test_space_saving_bound_under_eviction(spark):
     """capacity 8 on a skewed 30-term stream forces evictions; every
     reported term must satisfy estimate - error <= true <= estimate, and
     the guaranteed heavy hitter (count > N/capacity) must be present."""
-    from openskidata_processor_spark.operators.heavyhitters import (
+    from training_catalog.operators.heavyhitters import (
         space_saving_topk, term_counts)
     rows = []
     for i in range(30):
@@ -386,9 +386,9 @@ def test_space_saving_bound_under_eviction(spark):
 def test_space_saving_exact_when_capacity_covers_vocab(spark):
     """With capacity >= vocabulary size no counter ever evicts: the
     sketch degenerates to exact counts with zero error."""
-    from openskidata_processor_spark.operators.heavyhitters import (
+    from training_catalog.operators.heavyhitters import (
         space_saving_topk, top_terms)
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.sources.tables import load_table
     docs = load_table(spark, SF_SMOKE, "documents")
     exact = [(r.term, r.n) for r in top_terms(docs, "text", 25).collect()]
     sketch = [(r.term, r.estimate, r.error)
@@ -405,8 +405,8 @@ def test_space_saving_exact_when_capacity_covers_vocab(spark):
 def test_kmeans_partitioning_independence(spark):
     """Centroid quantization makes the fit independent of partitioning
     (partial-sum order must not leak into assignments)."""
-    from openskidata_processor_spark.operators.kmeans import kmeans_fit
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.operators.kmeans import kmeans_fit
+    from training_catalog.sources.tables import load_table
     emb = load_table(spark, SF_SMOKE, "embeddings")
     c1, a1 = kmeans_fit(emb, k=4, n_iter=2)
     c2, a2 = kmeans_fit(emb.repartition(13, "label"), k=4, n_iter=2)
@@ -421,7 +421,7 @@ def test_kmeans_partitioning_independence(spark):
 def test_kmeans_converges_on_separated_blobs(spark):
     """Three far-apart blobs: every blob lands in exactly one cluster and
     inertia is the tight within-blob spread, not cross-blob distance."""
-    from openskidata_processor_spark.operators.kmeans import kmeans_fit
+    from training_catalog.operators.kmeans import kmeans_fit
     rows = []
     for b, center in enumerate([0.0, 100.0, 200.0]):
         for i in range(20):
@@ -442,7 +442,7 @@ def test_kmeans_converges_on_separated_blobs(spark):
 def test_kmeans_empty_cluster_keeps_centroid(spark):
     """k exceeding the number of distinct points: surplus clusters go
     empty and keep their (rounded) init centroid without crashing."""
-    from openskidata_processor_spark.operators.kmeans import kmeans_fit
+    from training_catalog.operators.kmeans import kmeans_fit
     rows = [(i, [float(i >= 2) * 50.0, 0.0]) for i in range(4)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents, assign = kmeans_fit(df, k=3, n_iter=2)
@@ -457,7 +457,7 @@ def test_kmeans_fewer_rows_than_k_clamps(spark):
     counts/nonempty mask mismatch; empty input raises a clear error."""
     import pytest as _pytest
 
-    from openskidata_processor_spark.operators.kmeans import kmeans_fit
+    from training_catalog.operators.kmeans import kmeans_fit
     df = spark.createDataFrame(
         [(0, [0.0, 0.0]), (1, [10.0, 10.0])],
         "vec_id long, embedding array<double>")
@@ -474,7 +474,7 @@ def test_kmeans_fewer_rows_than_k_clamps(spark):
 def test_near_dup_groups_keep_best_quality(spark):
     """quality_col switches the canonical representative from min-id to
     highest-quality (ties -> smallest id); singletons always keep."""
-    from openskidata_processor_spark.operators.dedup import near_dup_groups
+    from training_catalog.operators.dedup import near_dup_groups
     docs = spark.createDataFrame(
         [(1, 0.2), (2, 0.9), (3, 0.9), (4, 0.5), (10, 0.1)],
         "doc_id long, quality double")
@@ -503,7 +503,7 @@ def test_near_dup_groups_keep_best_quality(spark):
 def test_semdedup_exact_twin_keeps_smaller_id(spark):
     """A planted exact duplicate ties on d2, so the smaller id survives;
     a below-threshold vector in the same cluster always keeps."""
-    from openskidata_processor_spark.operators.semdedup import semdedup
+    from training_catalog.operators.semdedup import semdedup
     # single cluster (k=1): pair of exact twins + one orthogonal vector
     rows = [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -515,7 +515,7 @@ def test_semdedup_exact_twin_keeps_smaller_id(spark):
 def test_semdedup_prefers_centroid_proximity(spark):
     """Among an above-threshold pair with different d2, the vector closer
     to the centroid is the one kept (not the smaller id)."""
-    from openskidata_processor_spark.operators.semdedup import semdedup
+    from training_catalog.operators.semdedup import semdedup
     # same direction, different magnitude: cosine = 1.0; centroid of the
     # cluster sits near the point mass, so the outlier magnitude (id 0!)
     # is farther and must be dropped despite its smaller id
@@ -533,9 +533,9 @@ def test_semdedup_matches_bruteforce_reference(spark):
     """Differential check on the real corpus: the distributed
     applyInPandas prune equals a single-process numpy reimplementation of
     the rule over the same kmeans fit."""
-    from openskidata_processor_spark.operators.kmeans import kmeans_fit
-    from openskidata_processor_spark.operators.semdedup import semdedup
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.operators.kmeans import kmeans_fit
+    from training_catalog.operators.semdedup import semdedup
+    from training_catalog.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     tau, decimals = 0.30, 6
@@ -569,8 +569,8 @@ def test_semdedup_matches_bruteforce_reference(spark):
 def test_semdedup_partitioning_independence(spark):
     """Input partitioning must not leak into the verdicts (the groupBy
     re-collects clusters; the rank rule is a total order)."""
-    from openskidata_processor_spark.operators.semdedup import semdedup
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.operators.semdedup import semdedup
+    from training_catalog.sources.tables import load_table
     emb = load_table(spark, SF_SMOKE, "embeddings")
     a = sorted(map(tuple, semdedup(emb, k=4, n_iter=2,
                                    tau=0.30).collect()))
@@ -587,7 +587,7 @@ def test_semdedup_partitioning_independence(spark):
 def test_bigram_logprob_hand_computed(spark):
     """Self-trained model on a 2-live-doc corpus, checked against the
     closed-form add-1/2 probabilities; the token-less doc drops out."""
-    from openskidata_processor_spark.operators.lm_score import \
+    from training_catalog.operators.lm_score import \
         bigram_logprob
     docs = spark.createDataFrame(
         [(1, "a b a b"), (2, "A b!"), (3, "  ...  ")],
@@ -608,7 +608,7 @@ def test_bigram_logprob_foreign_model_smooths_unseen(spark):
     """Scoring against a model trained on OTHER docs: an unseen bigram
     under a seen context gets the add-k floor, an unseen context falls to
     the uniform 1/V floor."""
-    from openskidata_processor_spark.operators.lm_score import \
+    from training_catalog.operators.lm_score import \
         bigram_logprob
     model = spark.createDataFrame([(10, "a b"), (11, "a b")],
                                   "doc_id long, text string")
@@ -629,7 +629,7 @@ def test_bigram_logprob_foreign_model_smooths_unseen(spark):
 def test_bigram_logprob_flags_atypical_doc(spark):
     """The quality-filter property: a doc of corpus-typical bigrams
     scores higher than an outlier of unique words."""
-    from openskidata_processor_spark.operators.lm_score import \
+    from training_catalog.operators.lm_score import \
         bigram_logprob
     rows = [(i, "the cat sat on the mat") for i in range(20)]
     rows.append((99, "zyxw qvjk plmn"))
@@ -649,7 +649,7 @@ def test_logreg_one_step_hand_computed(spark):
     """One GD step on a 2-point separable set: w1 = round(-lr/N ·
     Σ x̃(0.5−y), 6) = [1, 0] at lr=2, and the scores fall on the right
     sides of 0.5."""
-    from openskidata_processor_spark.operators.logreg import (logreg_fit,
+    from training_catalog.operators.logreg import (logreg_fit,
                                                               logreg_score)
     df = spark.createDataFrame([(0, [1.0], 1.0), (1, [-1.0], 0.0)],
                                "vec_id long, embedding array<double>, "
@@ -664,8 +664,8 @@ def test_logreg_one_step_hand_computed(spark):
 def test_logreg_partitioning_independence(spark):
     """Sorted partial-gradient merge + per-step quantization: the fit is
     identical under any input partitioning."""
-    from openskidata_processor_spark.operators.logreg import logreg_fit
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.operators.logreg import logreg_fit
+    from training_catalog.sources.tables import load_table
     emb = load_table(spark, SF_SMOKE, "embeddings")
     y = F.col("label") == 0
     w1 = logreg_fit(emb, y, n_iter=3, lr=20.0)
@@ -676,9 +676,9 @@ def test_logreg_partitioning_independence(spark):
 def test_logreg_separates_classes(spark):
     """The catalog fit (10 steps, lr=20) must rank the positive class
     measurably above the rest — the quality-filter property."""
-    from openskidata_processor_spark.operators.logreg import (logreg_fit,
+    from training_catalog.operators.logreg import (logreg_fit,
                                                               logreg_score)
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.sources.tables import load_table
     emb = load_table(spark, SF_SMOKE, "embeddings")
     w = logreg_fit(emb, F.col("label") == 0, n_iter=10, lr=20.0)
     scored = logreg_score(emb, w).join(emb.select("vec_id", "label"),
@@ -689,7 +689,7 @@ def test_logreg_separates_classes(spark):
 
 
 def test_logreg_empty_input_raises(spark):
-    from openskidata_processor_spark.operators.logreg import logreg_fit
+    from training_catalog.operators.logreg import logreg_fit
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<double>, y double")
     with pytest.raises(ValueError, match="empty"):
@@ -704,8 +704,8 @@ def test_logreg_empty_input_raises(spark):
 def test_dsir_enriches_target_slice(spark):
     """The selection property: the kept set is measurably enriched in
     the target language vs the corpus baseline."""
-    from openskidata_processor_spark.operators.dsir import dsir_select
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.operators.dsir import dsir_select
+    from training_catalog.sources.tables import load_table
     docs = load_table(spark, SF_SMOKE, "documents")
     out = dsir_select(docs, F.col("lang") == "en", k=100)
     joined = out.filter("kept").join(docs.select("doc_id", "lang"),
@@ -722,7 +722,7 @@ def test_dsir_uniform_target_scores_are_pure_gumbel(spark):
     """target = whole corpus ⇒ p_target ≡ p_raw ⇒ logw is exactly 0 for
     every document, so scores depend only on doc_id (the md5 Gumbel),
     not on text content."""
-    from openskidata_processor_spark.operators.dsir import dsir_select
+    from training_catalog.operators.dsir import dsir_select
     a = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "delta epsilon zeta")],
         "doc_id long, text string")
@@ -737,8 +737,8 @@ def test_dsir_uniform_target_scores_are_pure_gumbel(spark):
 
 
 def test_dsir_partitioning_independence(spark):
-    from openskidata_processor_spark.operators.dsir import dsir_select
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.operators.dsir import dsir_select
+    from training_catalog.sources.tables import load_table
     docs = load_table(spark, SF_SMOKE, "documents")
     t = F.col("lang") == "en"
     a = sorted(map(tuple, dsir_select(docs, t, k=50).collect()))
@@ -756,7 +756,7 @@ def test_dsir_partitioning_independence(spark):
 def test_centroid_outliers_hand_case(spark):
     """Centroid of {(0,0),(2,0),(0,2),(10,10)} is (3,3); d2 =
     {18,10,10,98}, mean 34 — at 21/20× only the far vector flags."""
-    from openskidata_processor_spark.operators.centroids import (
+    from training_catalog.operators.centroids import (
         centroid_outliers, group_centroids)
     df = spark.createDataFrame(
         [(0, "A", [0.0, 0.0]), (1, "A", [2.0, 0.0]),
@@ -773,7 +773,7 @@ def test_centroid_outliers_hand_case(spark):
 
 
 def test_centroid_outliers_singleton_group_not_outlier(spark):
-    from openskidata_processor_spark.operators.centroids import \
+    from training_catalog.operators.centroids import \
         centroid_outliers
     df = spark.createDataFrame(
         [(0, "solo", [5.0, 5.0])],
@@ -783,9 +783,9 @@ def test_centroid_outliers_singleton_group_not_outlier(spark):
 
 
 def test_centroid_outliers_partitioning_independence(spark):
-    from openskidata_processor_spark.operators.centroids import \
+    from training_catalog.operators.centroids import \
         centroid_outliers
-    from openskidata_processor_spark.sources.tables import load_table
+    from training_catalog.sources.tables import load_table
     emb = load_table(spark, SF_SMOKE, "embeddings")
     a = sorted(map(tuple, centroid_outliers(
         emb, factor_num=21, factor_den=20).collect()))
@@ -809,7 +809,7 @@ def test_scd2_versions_chain_and_current(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     t0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 
@@ -840,7 +840,7 @@ def test_scd2_versions_chain_and_current(spark, tmp_path):
 def test_morton_interleave_known_vectors(spark):
     from pyspark.sql import functions as F
 
-    from openskidata_processor_spark.plans.training import _morton
+    from training_catalog.plans.training import _morton
 
     df = spark.createDataFrame(
         [(1, 0), (0, 1), (3, 5), (65535, 65535)], "x long, y long")
@@ -863,7 +863,7 @@ def test_zorder_files_are_local_in_both_dims(spark):
     tile (range 63 per dim, 1/4 of the extent) — checked exactly."""
     from pyspark.sql import functions as F
 
-    from openskidata_processor_spark.plans.training import _zorder_stats
+    from training_catalog.plans.training import _zorder_stats
 
     grid = spark.range(256 * 256).select(
         (F.col("id") % 256).alias("cust"),
@@ -877,7 +877,7 @@ def test_zorder_files_are_local_in_both_dims(spark):
 
 
 def test_profile_table_sketch_error_bounds(spark):
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
     approx = {r["column"]: r for r in
               QUERIES["profile_table_sketch"](spark, SF_SMOKE).collect()}
     exact = {r["column"]: r for r in
@@ -897,7 +897,7 @@ def test_profile_table_sketch_error_bounds(spark):
 def test_quantiles_sketch_rank_error_bound(spark):
     """Greenwald-Khanna guarantee: an approx p-quantile's RANK is within
     ±n/accuracy of p·n.  Checked against the actual per-status ranks."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     approx = {r.o_orderstatus: (r.q25, r.q50, r.q75) for r in
               QUERIES["quantiles_sketch"](spark, SF_SMOKE).collect()}
@@ -924,8 +924,8 @@ def test_quantiles_sketch_rank_error_bound(spark):
 def test_compaction_plan_groups_contiguous_and_bounded(spark):
     """Groups are contiguous runs in file_id order; every group's total
     stays within the row target unless it is a single oversized file."""
-    from openskidata_processor_spark.plans import QUERIES
-    from openskidata_processor_spark.plans.training import _COMPACT_TARGET
+    from training_catalog.plans import QUERIES
+    from training_catalog.plans.training import _COMPACT_TARGET
 
     rows = sorted(QUERIES["compaction_plan"](spark, SF_SMOKE).collect(),
                   key=lambda r: r.file_id)
@@ -945,7 +945,7 @@ def test_file_skipping_prunes_majority_for_narrow_predicates(spark):
     """The Z-order layout must actually pay: across the 10 day-range
     predicates (each 1/10 of the date domain), min/max stats prune a
     majority of file-reads overall."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     rows = QUERIES["file_skipping_stats"](spark, SF_SMOKE).collect()
     assert len(rows) == 10
@@ -968,8 +968,8 @@ def test_source_unigram_kl_hand_computed(spark, tmp_path):
     4-decimal rounding."""
     import math
 
-    from openskidata_processor_spark.plans import QUERIES
-    from openskidata_processor_spark.plans.training import _LN2
+    from training_catalog.plans import QUERIES
+    from training_catalog.plans.training import _LN2
 
     docs = [(0, "x x y", "A"), (1, "x z", "B")]
     spark.createDataFrame(

@@ -23,10 +23,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.operators.unigram import (
+from training_catalog.operators.unigram import (
     seed_piece_counts, segment_words, train_unigram)
-from openskidata_processor_spark.operators.bpe import word_vocab
-from openskidata_processor_spark.plans import ORACLES, QUERIES
+from training_catalog.operators.bpe import word_vocab
+from training_catalog.plans import ORACLES, QUERIES
 
 
 # --- pure-Python reference (identical recurrence) ----------------------------
@@ -119,7 +119,7 @@ def ref_unigram(vocab: dict[str, int], vocab_size=128, seed_size=512,
         counts = em(counts)
 
     def loss_table(cur):
-        from openskidata_processor_spark.operators.unigram import (
+        from training_catalog.operators.unigram import (
             LOSS_QUANT)
 
         total = sum(cur.values())
@@ -150,7 +150,7 @@ def ref_unigram(vocab: dict[str, int], vocab_size=128, seed_size=512,
         return kept
 
     if prune == "loss_iter":
-        from openskidata_processor_spark.operators.unigram import (
+        from training_catalog.operators.unigram import (
             PRUNE_SHRINK)
 
         while True:
@@ -232,7 +232,7 @@ def test_train_matches_reference_on_smoke(spark):
 
 
 def test_catalog_train_entry_matches_reference(spark):
-    from openskidata_processor_spark.plans.tokenizer import (
+    from training_catalog.plans.tokenizer import (
         _UNI_EM, _UNI_PIECE_LEN, _UNI_SEED, _UNI_VOCAB)
 
     expected = ref_unigram(_py_vocab(_smoke_texts()),
@@ -319,7 +319,7 @@ def test_loss_prune_beats_count_prune_on_crafted_case():
     pieces of almost equal likelihood), while a rarer piece with no
     good fallback carries more corpus likelihood.  Construct that case
     and check the two prune rules disagree exactly as designed."""
-    from openskidata_processor_spark.operators.unigram import LOSS_QUANT
+    from training_catalog.operators.unigram import LOSS_QUANT
 
     # corpus: 'xy' appears often but x/y singles are also common (cheap
     # fallback); 'qz' is rarer but q and z barely occur alone
@@ -382,7 +382,7 @@ def test_segment_words_viterbi_semantics(spark):
 
 
 def test_encode_stats_matches_reference(spark):
-    from openskidata_processor_spark.plans.tokenizer import (
+    from training_catalog.plans.tokenizer import (
         _UNI_EM, _UNI_PIECE_LEN, _UNI_SEED, _UNI_VOCAB)
 
     con = duckdb.connect()

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.plans.webcorpus import (
+from training_catalog.plans.webcorpus import (
     _MOJIBAKE, canonicalize_url, extract_html_text)
 
 # ---------------------------------------------------------------------------
@@ -130,7 +130,7 @@ def test_lang_id_classifies_tiebreaks_and_unks(spark, tmp_path):
     model never saw predicts 'unk'; and two languages trained on
     IDENTICAL text tie on every score, so the argmax must break to the
     lexicographically larger language (the pinned deterministic rule)."""
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     rows = [
         # train split (doc_id % 5 == 0)
@@ -158,7 +158,7 @@ def test_lang_id_model_is_broadcast_and_prefix_bounded(spark):
     model (the training side is never shuffled onto the test side), and
     the trigram source must be the bounded 256-char prefix."""
     from conftest import SF_SMOKE
-    from openskidata_processor_spark.plans import QUERIES
+    from training_catalog.plans import QUERIES
 
     plan = (QUERIES["lang_id_confusion"](spark, SF_SMOKE)
             ._jdf.queryExecution().executedPlan().toString())

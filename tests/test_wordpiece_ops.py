@@ -20,11 +20,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from openskidata_processor_spark.operators.bpe import word_vocab
-from openskidata_processor_spark.operators.wordpiece import (
+from training_catalog.operators.bpe import word_vocab
+from training_catalog.operators.wordpiece import (
     encode_wordpiece_udf, learn_wordpiece_local, merge_symbol,
     word_symbols, wordpiece_vocab)
-from openskidata_processor_spark.plans import QUERIES
+from training_catalog.plans import QUERIES
 
 
 # --- pure-Python naive reference ----------------------------------------------
@@ -170,7 +170,7 @@ def test_learn_fuzz_vs_reference(spark, seed):
 
 
 def test_catalog_learn_entry(spark):
-    from openskidata_processor_spark.plans.tokenizer import _WP_MERGES
+    from training_catalog.plans.tokenizer import _WP_MERGES
 
     expected, _ = ref_wordpiece(_py_vocab(_smoke_texts()), _WP_MERGES)
     got = _as_tuples(QUERIES["wordpiece_learn_vocab"](
@@ -205,7 +205,7 @@ def test_rounds_learner_matches_local_on_smoke(spark):
     per driver round — the path past learn_wordpiece_local's single-task
     memory ceiling) must be bit-identical to the local trainer and the
     naive reference."""
-    from openskidata_processor_spark.operators.wordpiece import (
+    from training_catalog.operators.wordpiece import (
         learn_wordpiece_rounds)
 
     texts = _smoke_texts()
@@ -219,7 +219,7 @@ def test_rounds_learner_crafted_and_fuzz(spark):
     """Crafted tie/overlap corpora + fuzz: the float-top-K exact-refine
     argmax (including the widen-on-tie-plateau path, forced with
     topk=2) must stay exact."""
-    from openskidata_processor_spark.operators.wordpiece import (
+    from training_catalog.operators.wordpiece import (
         learn_wordpiece_rounds)
 
     expected, _ = ref_wordpiece(_py_vocab(_CRAFTED), 8, min_count=1)
@@ -242,7 +242,7 @@ def test_catalog_rounds_entry_matches_reference(spark):
     """The wordpiece_learn_rounds catalog entry (the live fallback demo)
     equals the naive reference — hence the single-task learner — at the
     registered depth."""
-    from openskidata_processor_spark.plans.tokenizer import (
+    from training_catalog.plans.tokenizer import (
         _WP_ROUNDS_MERGES)
 
     expected, _ = ref_wordpiece(_py_vocab(_smoke_texts()),
@@ -253,7 +253,7 @@ def test_catalog_rounds_entry_matches_reference(spark):
 
 
 def test_wp_symbols_matches_python(spark):
-    from openskidata_processor_spark.operators.wordpiece import wp_symbols
+    from training_catalog.operators.wordpiece import wp_symbols
 
     words = ["abc", "a", "mississippi", "гг"]
     df = spark.createDataFrame([(w,) for w in words], ["w"])
@@ -286,7 +286,7 @@ def test_encoder_matches_reference_and_unk_contract(spark):
 
 
 def test_encode_stats_matches_reference(spark):
-    from openskidata_processor_spark.plans.tokenizer import _WP_ENC_MERGES
+    from training_catalog.plans.tokenizer import _WP_ENC_MERGES
 
     con = duckdb.connect()
     docs = con.sql(
