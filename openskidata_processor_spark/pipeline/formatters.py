@@ -307,11 +307,6 @@ def format_lifts(df: DataFrame) -> DataFrame:
 # P3 — formatSkiArea (three input kinds, unioned)
 # ---------------------------------------------------------------------------
 
-_SKI_AREA_COLS = ("id", "feature_type", "name", "sources", "activities",
-                  "status", "websites", "wikidata_id", "run_convention",
-                  "geometry")
-
-
 def format_ski_areas_osm(df: DataFrame) -> DataFrame:
     """OSM ``landuse=winter_sports`` polygons (SkiAreaFormatter.ts:67-111):
     drop non-ski sport tags, non-polygons, unresolvable lifecycle status."""
@@ -461,16 +456,8 @@ def format_spots(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# J1 — site ski-area membership join; P14 — ski-area summary
+# J1 — site ski-area membership join
 # ---------------------------------------------------------------------------
-
-def to_ski_area_summary(ski_areas: DataFrame) -> Column | DataFrame:
-    """P14 summary projection (src/transforms/toSkiAreaSummary.ts)."""
-    return ski_areas.select(
-        F.struct("id", "name", "activities",
-                 F.col("feature_type").alias("type"), "status").alias("summary"),
-        F.col("id").alias("ski_area_id"))
-
 
 def attach_site_ski_areas(layer: DataFrame, sites: DataFrame,
                           site_ski_areas: DataFrame) -> DataFrame:

@@ -3,7 +3,10 @@
 reference's exported mapboxgl_*.geojson property contract
 (PrepareGeoJSON.int.test.ts snapshots).
 
-All derived columns are Catalyst expressions; the per-use parallel line
+All derived columns are Catalyst expressions, returned as named columns
+(``*_columns``) so the layer's export can carry the Mapbox feature
+(``mapbox_feature``) in the same select as every other sink; the
+``mapbox_*`` frames are views of the same columns.  The per-use parallel line
 offsets are the W4 pattern — one FEATURE per run, with one offset column
 per present use (offset = idx − (n−1)/2 over the unique sorted mapped
 uses, MapboxGLFormatter.ts:104-121); ski-area polygons render as interior
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.geometry import interior_point_udf
 from ..sinks.csv import run_color
+from ..sinks.geojson import feature_expr
 
 # colorName → rendered HSL value (runColorNameToValue).
 RUN_COLOR_VALUES = {
@@ -70,43 +74,41 @@ def _name_including_ref(name: Column, ref: Column) -> Column:
             .otherwise(F.concat(ref, F.lit(" - "), name)))
 
 
-def mapbox_runs(runs: DataFrame) -> DataFrame:
+def run_columns(runs: DataFrame) -> tuple[Column, dict[str, Column]]:
     """Runs → one render feature per run; per-use parallel line offsets as
     downhill/nordic/skitour/other columns; connection-only runs dropped
-    (MapboxGLFormatter.ts:79-127)."""
-    kept = runs.filter(
-        F.exists("uses", lambda u: u != "connection"))
+    (MapboxGLFormatter.ts:79-127).  Returns (keep condition, columns)."""
+    keep = F.exists("uses", lambda u: u != "connection")
     # mapboxGLRunUse: downhill/nordic/skitour pass through, rest → other
-    mapped = F.array_sort(F.array_distinct(F.transform(
+    uses = F.array_sort(F.array_distinct(F.transform(
         "uses", lambda u: F.when(u.isin(*_MAPBOX_USES), u)
                            .otherwise(F.lit("other")))))
-    kept = kept.withColumn("__uses", mapped)
-    n = F.size("__uses")
+    n = F.size(uses)
 
     def offset(use: str) -> Column:
-        pos = F.array_position("__uses", use)  # 1-based, 0 when absent
+        pos = F.array_position(uses, use)  # 1-based, 0 when absent
         return F.when(pos > 0, (pos - 1) - (n - 1) / 2.0)
 
     color_name = run_color(F.col("difficulty_convention"),
                            F.col("difficulty"))
-    return kept.select(
-        F.col("id"),
-        _name_including_ref(F.col("name"), F.col("ref")).alias("name"),
-        F.col("difficulty"), F.col("oneway"), F.col("lit"),
-        F.col("gladed"), F.col("patrolled"),
-        _lookup(RUN_COLOR_VALUES, color_name).alias("color"),
-        color_name.alias("colorName"),
-        F.col("grooming"), F.col("snowmaking"), F.col("snowfarming"),
-        F.col("tunnel"),
-        F.col("ski_areas").alias("skiAreas"),
-        offset("downhill").alias("downhill"),
-        offset("nordic").alias("nordic"),
-        offset("skitour").alias("skitour"),
-        offset("other").alias("other"),
-        F.col("geometry"))
+    return keep, {
+        "id": F.col("id"),
+        "name": _name_including_ref(F.col("name"), F.col("ref")),
+        "difficulty": F.col("difficulty"), "oneway": F.col("oneway"),
+        "lit": F.col("lit"), "gladed": F.col("gladed"),
+        "patrolled": F.col("patrolled"),
+        "color": _lookup(RUN_COLOR_VALUES, color_name),
+        "colorName": color_name,
+        "grooming": F.col("grooming"), "snowmaking": F.col("snowmaking"),
+        "snowfarming": F.col("snowfarming"), "tunnel": F.col("tunnel"),
+        "skiAreas": F.col("ski_areas"),
+        "downhill": offset("downhill"), "nordic": offset("nordic"),
+        "skitour": offset("skitour"), "other": offset("other"),
+        "geometry": F.col("geometry"),
+    }
 
 
-def mapbox_lifts(lifts: DataFrame) -> DataFrame:
+def lift_columns(lifts: DataFrame) -> tuple[None, dict[str, Column]]:
     """Lifts → render rows (MapboxGLFormatter.ts:131-151): name_and_type
     ("Name (Type)" plus ref), status color, station ids."""
     label = _lookup(LIFT_TYPE_LABELS, F.col("lift_type"))
@@ -117,20 +119,20 @@ def mapbox_lifts(lifts: DataFrame) -> DataFrame:
     station_ids = (F.transform("stations", lambda s: s["id"])
                    if "stations" in lifts.columns
                    else F.array().cast("array<string>"))
-    return lifts.select(
-        F.col("id"),
-        _name_including_ref(name_and_type, F.col("ref"))
-            .alias("name_and_type"),
-        _lookup(LIFT_COLOR_VALUES, F.col("status"), LIFT_COLOR_DEFAULT)
-            .alias("color"),
-        F.col("status"), F.col("access"),
-        station_ids.alias("stationIds"),
-        F.col("ski_areas").alias("skiAreas"),
-        F.col("tunnel"),
-        F.col("geometry"))
+    return None, {
+        "id": F.col("id"),
+        "name_and_type": _name_including_ref(name_and_type, F.col("ref")),
+        "color": _lookup(LIFT_COLOR_VALUES, F.col("status"),
+                         LIFT_COLOR_DEFAULT),
+        "status": F.col("status"), "access": F.col("access"),
+        "stationIds": station_ids,
+        "skiAreas": F.col("ski_areas"),
+        "tunnel": F.col("tunnel"),
+        "geometry": F.col("geometry"),
+    }
 
 
-def mapbox_ski_areas(ski_areas: DataFrame) -> DataFrame:
+def ski_area_columns(ski_areas: DataFrame) -> tuple[None, dict[str, Column]]:
     """Ski areas render as interior points (never polygons on the map);
     rounded distance/elevation stats, name shortened by dropping the
     parenthetical when over 20 chars (shortenedName,
@@ -141,11 +143,11 @@ def mapbox_ski_areas(ski_areas: DataFrame) -> DataFrame:
     short = F.when(
         name.isNotNull() & (F.length(name) > 20),
         F.trim(F.split(name, r"\(")[0])).otherwise(name)
-    stats = (F.col("statistics") if "statistics" in ski_areas.columns
-             else F.lit(None))
+    has_stats = "statistics" in ski_areas.columns
+    stats = F.col("statistics") if has_stats else F.lit(None)
 
     def act_distance(act: str) -> Column:
-        if "statistics" not in ski_areas.columns:
+        if not has_stats:
             return F.lit(None).cast("long")
         by_diff = F.element_at(stats["runs"]["by_activity"], act)
         total = F.aggregate(F.map_values(by_diff),
@@ -153,7 +155,7 @@ def mapbox_ski_areas(ski_areas: DataFrame) -> DataFrame:
         return F.when(by_diff.isNotNull(),
                       F.round(total, 0).cast("long"))
 
-    if "statistics" in ski_areas.columns:
+    if has_stats:
         max_elev = F.when(stats["max_elevation"] != 0,
                           F.round(stats["max_elevation"], 0).cast("long"))
         vertical = F.when(
@@ -163,32 +165,70 @@ def mapbox_ski_areas(ski_areas: DataFrame) -> DataFrame:
     else:
         max_elev = vertical = F.lit(None).cast("long")
 
-    return ski_areas.select(
-        "id", short.alias("name"), "status",
-        act_distance("downhill").alias("downhillDistance"),
-        act_distance("nordic").alias("nordicDistance"),
-        max_elev.alias("maxElevation"),
-        vertical.alias("vertical"),
-        F.array_contains("activities", "downhill").alias("has_downhill"),
-        F.array_contains("activities", "nordic").alias("has_nordic"),
-        F.when(is_poly, interior_point_udf("geometry"))
-         .otherwise(F.col("geometry")).alias("geometry"))
+    return None, {
+        "id": F.col("id"), "name": short, "status": F.col("status"),
+        "downhillDistance": act_distance("downhill"),
+        "nordicDistance": act_distance("nordic"),
+        "maxElevation": max_elev,
+        "vertical": vertical,
+        "has_downhill": F.array_contains("activities", "downhill"),
+        "has_nordic": F.array_contains("activities", "nordic"),
+        "geometry": F.when(is_poly, interior_point_udf("geometry"))
+                     .otherwise(F.col("geometry")),
+    }
 
 
-def mapbox_spots(spots: DataFrame) -> DataFrame:
+def spot_columns(spots: DataFrame) -> tuple[None, dict[str, Column]]:
     """Spots → render rows (MapboxGLFormatter.ts:153-195): common
     id/spotType/skiAreas plus the lift-station or crossing extras."""
     lift_station = F.col("spot_type") == "lift_station"
     crossing = F.col("spot_type") == "crossing"
     lift_id = (F.col("associated_lift_id")
                if "associated_lift_id" in spots.columns else F.lit(None))
-    return spots.select(
-        F.col("id"), F.col("spot_type").alias("spotType"),
-        F.col("ski_areas").alias("skiAreas"),
-        F.when(lift_station, F.col("name")).alias("name"),
-        F.when(lift_station, lift_id).alias("liftId"),
-        F.when(lift_station, F.col("position")).alias("position"),
-        F.when(lift_station, F.col("entry")).alias("entry"),
-        F.when(lift_station, F.col("exit")).alias("exit"),
-        F.when(crossing, F.col("dismount")).alias("dismount"),
-        F.col("geometry"))
+    return None, {
+        "id": F.col("id"), "spotType": F.col("spot_type"),
+        "skiAreas": F.col("ski_areas"),
+        "name": F.when(lift_station, F.col("name")),
+        "liftId": F.when(lift_station, lift_id),
+        "position": F.when(lift_station, F.col("position")),
+        "entry": F.when(lift_station, F.col("entry")),
+        "exit": F.when(lift_station, F.col("exit")),
+        "dismount": F.when(crossing, F.col("dismount")),
+        "geometry": F.col("geometry"),
+    }
+
+
+LAYER_COLUMNS = {"runs": run_columns, "lifts": lift_columns,
+                 "ski_areas": ski_area_columns, "spots": spot_columns}
+
+
+def mapbox_feature(layer: str, df: DataFrame) -> Column:
+    """The layer's Mapbox GeoJSON Feature string; null for a row the
+    projection drops."""
+    keep, cols = LAYER_COLUMNS[layer](df)
+    geometry = cols.pop("geometry")
+    feat = feature_expr(cols, geometry)
+    return feat if keep is None else F.when(keep, feat)
+
+
+def _frame(df: DataFrame, keep: Column | None,
+           cols: dict[str, Column]) -> DataFrame:
+    if keep is not None:
+        df = df.filter(keep)
+    return df.select(*[c.alias(n) for n, c in cols.items()])
+
+
+def mapbox_runs(runs: DataFrame) -> DataFrame:
+    return _frame(runs, *run_columns(runs))
+
+
+def mapbox_lifts(lifts: DataFrame) -> DataFrame:
+    return _frame(lifts, *lift_columns(lifts))
+
+
+def mapbox_ski_areas(ski_areas: DataFrame) -> DataFrame:
+    return _frame(ski_areas, *ski_area_columns(ski_areas))
+
+
+def mapbox_spots(spots: DataFrame) -> DataFrame:
+    return _frame(spots, *spot_columns(spots))

@@ -8,7 +8,8 @@ reference's file boundaries (§3.2 dataflow):
     lifts:  P2 format ▶ J1 site join ▶ [J9]
     spots:  P4 format ▶ J1 site join ▶ [J9]
     areas:  P3 format ×3 inputs, unioned
-    §2.9 clustering ▶ statistics ▶ sinks (GeoJSON / Mapbox / CSV / GPKG)
+    §2.9 clustering ▶ statistics ▶ sinks (GeoJSON / Mapbox / CSV / GPKG,
+                                          one fetch per layer)
 
 Enrichment (elevation/geocode/snow cover) is optional exactly like the
 reference (PrepareGeoJSON.ts:42-44): pass cache DataFrames to enable.
@@ -173,52 +174,64 @@ def prepare_from_elements(spark: SparkSession, elements: DataFrame,
                    **kwargs)
 
 
+OUTPUT_LAYERS = ("runs", "lifts", "spots", "ski_areas")
+
+
 def write_outputs(layers: dict[str, DataFrame], out_dir: str,
                   geopackage: bool = True,
                   reference_shape: bool = False) -> None:
-    """Phase 4 (K1/K2/K3 + P10): all sink formats from the clustered
-    layers.  ``reference_shape=True`` writes the four layer
-    FeatureCollections in the reference's exported property contract
-    (camelCase keys, embedded skiAreas/stations summary features) so a
-    consumer of the reference can diff outputs directly; the default keeps
-    the engine's own flat snake_case properties."""
+    """Phase 4 (K1/K2/K3 + P10): every sink format from the clustered
+    layers, one Spark fetch per layer (``sinks.export.write_layer``).
+
+    Ski-area names (and, for ``reference_shape``, summary features) are
+    resolved once per call.  Then each layer is projected once — its
+    GeoJSON feature, Mapbox feature, CSV line and GeoPackage columns side
+    by side — fetched once in id order, and written to ``{layer}.geojson``,
+    ``mapboxgl_{layer}.geojson``, ``csv/{layer}/part-00000.csv`` and the
+    layer's ``openskidata.gpkg`` tables.  The ski-area CSV needs the
+    clustering statistics and is skipped without them.
+
+    ``reference_shape=True`` writes the four layer FeatureCollections in
+    the reference's exported property contract (camelCase keys, embedded
+    skiAreas/stations summary features) so a consumer of the reference can
+    diff outputs directly; the default keeps the engine's own flat
+    snake_case properties."""
     from ..sinks import csv as csvsink
     from ..sinks import geojson as geojson_sink
-    from ..sinks.geopackage import write_geopackage
-    from .mapbox import (mapbox_lifts, mapbox_runs, mapbox_ski_areas,
-                         mapbox_spots)
+    from ..sinks.export import SkiAreaRefs, write_layer
+    from ..sinks.geopackage import GeoPackage
+    from .mapbox import mapbox_feature
 
     os.makedirs(out_dir, exist_ok=True)
-    for name in ("runs", "lifts", "spots", "ski_areas"):
-        path = os.path.join(out_dir, f"{name}.geojson")
-        if reference_shape:
-            geojson_sink.write_reference_feature_collection(
-                layers[name], path, ski_areas=layers["ski_areas"])
-        else:
-            geojson_sink.write_feature_collection(layers[name], path)
-
     sa = layers["ski_areas"]
-    csvsink.write_csv(csvsink.run_csv(layers["runs"], sa),
-                      os.path.join(out_dir, "csv", "runs"), True)
-    csvsink.write_csv(csvsink.lift_csv(layers["lifts"], sa),
-                      os.path.join(out_dir, "csv", "lifts"), True)
-    csvsink.write_csv(csvsink.spot_csv(layers["spots"], sa),
-                      os.path.join(out_dir, "csv", "spots"), True)
-    if "statistics" in layers["ski_areas"].columns:
-        csvsink.write_csv(csvsink.ski_area_csv(layers["ski_areas"]),
-                          os.path.join(out_dir, "csv", "ski_areas"), True)
-
-    for name, projector in (("runs", mapbox_runs), ("lifts", mapbox_lifts),
-                            ("ski_areas", mapbox_ski_areas),
-                            ("spots", mapbox_spots)):
-        geojson_sink.write_feature_collection(
-            projector(layers[name]),
-            os.path.join(out_dir, f"mapboxgl_{name}.geojson"))
-
-    if geopackage:
-        write_geopackage(
-            {n: layers[n] for n in ("runs", "lifts", "spots", "ski_areas")},
-            os.path.join(out_dir, "openskidata.gpkg"))
+    refs = SkiAreaRefs.resolve(
+        sa, geojson_sink.ski_area_summary_json(sa) if reference_shape
+        else None)
+    gpkg = (GeoPackage(os.path.join(out_dir, "openskidata.gpkg"))
+            if geopackage else None)
+    try:
+        for name in OUTPUT_LAYERS:
+            df = layers[name]
+            feature = (geojson_sink.reference_feature(df, refs)
+                       if reference_shape else geojson_sink.feature(df))
+            sinks = [
+                geojson_sink.FeatureCollectionFile(
+                    os.path.join(out_dir, f"{name}.geojson"), feature),
+                geojson_sink.FeatureCollectionFile(
+                    os.path.join(out_dir, f"mapboxgl_{name}.geojson"),
+                    mapbox_feature(name, df), skip_null=True),
+            ]
+            if name != "ski_areas" or "statistics" in df.columns:
+                header, fields = csvsink.LAYER_FIELDS[name]
+                sinks.append(csvsink.CsvFile(
+                    os.path.join(out_dir, "csv", name), header,
+                    fields(df, refs)))
+            if gpkg is not None:
+                sinks.append(gpkg.layer(name, df, refs))
+            write_layer(df, sinks)
+    finally:
+        if gpkg is not None:
+            gpkg.close()
 
 
 def tiles_command(out_dir: str) -> list[list[str]]:

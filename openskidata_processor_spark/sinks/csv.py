@@ -4,15 +4,25 @@
 All derived columns are Catalyst expressions except the elevation metrics
 (3D-geometry pandas UDF); place roll-ups are
 ``array_sort(array_distinct(transform(places, ...)))`` joined with ';'
-(P13/A9, CSVFormatter.ts:338-355); escaping is Spark's CSV writer.
+(P13/A9, CSVFormatter.ts:338-355).  The ``*_fields`` projections return
+one column per header of ``*_HEADERS``, the only source of header names.
+``CsvFile`` renders each row as ``to_csv(struct(fields))`` — the Univocity
+generator and defaults of ``DataFrameWriter.csv``, so quoting and escaping
+are Spark's — and the driver writes the lines under one header from the
+layer's id-ordered fetch (``sinks.export``).
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geometry import centroid_udf, elevation_metrics_udf
+from .export import SkiAreaRefs, write_layer
 
 # Exact reference headers (CSVFormatter.ts:125-140).
 RUN_HEADERS = ("name,ref,countries,regions,localities,ski_area_names,"
@@ -56,29 +66,6 @@ SURFACE_LIFT_TYPES = ("t-bar", "j-bar", "platter", "rope_tow", "drag_lift",
                       "magic_carpet")
 
 
-
-
-def _with_ski_area_names(df: DataFrame,
-                         ski_areas: DataFrame | None) -> DataFrame:
-    """J8 export join (FeatureExporter.ts:148-161): resolve the feature's
-    ski-area ids to names, sorted-unique ','-joined (extractSkiAreaNames —
-    the CSV writer quotes the comma-bearing field, = escapeField).  Without
-    a ski-area
-    table the column stays empty (the reference pre-clustering shape)."""
-    if ski_areas is None or "ski_areas" not in df.columns:
-        return df.withColumn("__sa_names", F.lit(""))
-    names = ski_areas.select(F.col("id").alias("__said"),
-                             F.col("name").alias("__sname"))
-    resolved = (df.select(F.col("id").alias("__fid"),
-                          F.explode("ski_areas").alias("__said"))
-                .join(F.broadcast(names), "__said")
-                .filter(F.col("__sname").isNotNull())
-                .groupBy("__fid")
-                .agg(F.concat_ws(",", F.array_sort(
-                    F.collect_set("__sname"))).alias("__names")))
-    return (df.join(resolved, df["id"] == resolved["__fid"], "left")
-            .withColumn("__sa_names", F.coalesce("__names", F.lit("")))
-            .drop("__fid", "__names"))
 
 
 def run_color(convention: Column, difficulty: Column) -> Column:
@@ -152,200 +139,227 @@ def _bool(col: Column) -> Column:
             .when(col.cast("boolean"), F.lit("yes")).otherwise(F.lit("no")))
 
 
-def run_csv(runs: DataFrame,
-            ski_areas: DataFrame | None = None) -> DataFrame:
-    """Run layer → the 31-column reference CSV schema.  Pass the clustered
-    ``ski_areas`` layer to resolve ski_area_names (J8)."""
-    runs = _with_ski_area_names(runs, ski_areas)
+def _sa_names(df: DataFrame, refs: SkiAreaRefs | None) -> Column:
+    """J8 export resolution (FeatureExporter.ts:148-161): the feature's
+    ski-area names, sorted-unique ','-joined (extractSkiAreaNames — the
+    CSV generator quotes the comma-bearing field, = escapeField).  Without
+    a ski-area table the field stays empty (the reference pre-clustering
+    shape)."""
+    if refs is None or "ski_areas" not in df.columns:
+        return F.lit("")
+    return refs.names(F.col("ski_areas"))
+
+
+def _fields(headers: list[str], exprs: list[Column]) -> list[Column]:
+    return [e.alias(h) for h, e in zip(headers, exprs, strict=True)]
+
+
+def run_fields(runs: DataFrame, refs: SkiAreaRefs | None) -> list[Column]:
+    """Run layer → the 32 columns of ``RUN_HEADERS``."""
     c = _common(runs)
     m = elevation_metrics_udf("geometry")
-    df = runs.withColumn("__m", m)
     # averagePitchInPercent is the GRADE RATIO toFixed(2) — the reference
     # vector prints 0.96 for a 200 m drop over 208 m (CSVFormatter.unit.
     # test.ts:171), despite the _% header
     pct = lambda col: F.format_string("%.2f", col)  # noqa: E731
-    return df.select(
+    # toFixed() integers / toFixed(2) percents (CSVFormatter.ts:194-200)
+    whole = lambda col: F.format_string("%.0f", col)  # noqa: E731
+    return _fields(RUN_HEADERS, [
         F.col("name"), F.col("ref"),
-        c["countries"].alias("countries"), c["regions"].alias("regions"),
-        c["localities"].alias("localities"),
-        F.col("__sa_names").alias("ski_area_names"),
+        c["countries"], c["regions"], c["localities"],
+        _sa_names(runs, refs),
         F.col("difficulty"),
-        run_color(F.col("difficulty_convention"), F.col("difficulty"))
-            .alias("color"),
-        _bool(F.col("oneway")).alias("oneway"), _bool(F.col("lit")).alias("lit"),
-        _bool(F.col("gladed")).alias("gladed"),
-        _bool(F.col("patrolled")).alias("patrolled"),
+        run_color(F.col("difficulty_convention"), F.col("difficulty")),
+        _bool(F.col("oneway")), _bool(F.col("lit")),
+        _bool(F.col("gladed")), _bool(F.col("patrolled")),
         F.col("grooming"),
-        F.concat_ws(";", "uses").alias("uses"),
-        # toFixed() integers / toFixed(2) percents (CSVFormatter.ts:194-200)
-        F.format_string("%.0f", "__m.inclined_length_m")
-            .alias("inclined_length_m"),
-        F.format_string("%.0f", "__m.descent_m").alias("descent_m"),
-        F.format_string("%.0f", "__m.ascent_m").alias("ascent_m"),
-        pct(F.col("__m.average_pitch")).alias("average_pitch_%"),
-        pct(F.col("__m.max_pitch")).alias("max_pitch_%"),
-        F.format_string("%.0f", "__m.min_elevation_m")
-            .alias("min_elevation_m"),
-        F.format_string("%.0f", "__m.max_elevation_m")
-            .alias("max_elevation_m"),
+        F.concat_ws(";", "uses"),
+        whole(m["inclined_length_m"]), whole(m["descent_m"]),
+        whole(m["ascent_m"]),
+        pct(m["average_pitch"]), pct(m["max_pitch"]),
+        whole(m["min_elevation_m"]), whole(m["max_elevation_m"]),
         F.col("difficulty_convention"), F.col("wikidata_id"),
-        c["websites"].alias("websites"), c["openskimap"].alias("openskimap"),
-        F.col("id"), c["geometry"].alias("geometry"),
-        c["lat"].alias("lat"), c["lng"].alias("lng"),
-        F.concat_ws(";", F.array_sort("ski_areas")).alias("ski_area_ids"),
-        c["sources"].alias("sources"), F.col("description"),
-    )
+        c["websites"], c["openskimap"], F.col("id"), c["geometry"],
+        c["lat"], c["lng"],
+        F.concat_ws(";", F.array_sort("ski_areas")),
+        c["sources"], F.col("description"),
+    ])
 
 
-def lift_csv(lifts: DataFrame,
-             ski_areas: DataFrame | None = None) -> DataFrame:
-    lifts = _with_ski_area_names(lifts, ski_areas)
+def lift_fields(lifts: DataFrame, refs: SkiAreaRefs | None) -> list[Column]:
+    """Lift layer → the 34 columns of ``LIFT_HEADERS``."""
     c = _common(lifts)
-    df = lifts.withColumn("__m", elevation_metrics_udf("geometry"))
-    vertical = F.col("__m.max_elevation_m") - F.col("__m.min_elevation_m")
+    m = elevation_metrics_udf("geometry")
+    vertical = m["max_elevation_m"] - m["min_elevation_m"]
+    duration = F.col("duration")
     # toFixed precisions per CSVFormatter.ts:233-239
-    speed = F.when(F.col("duration") > 0, F.format_string(
-        "%.1f", F.col("__m.inclined_length_m") / F.col("duration")))
-    vspeed = F.when(F.col("duration") > 0,
-                    F.format_string("%.2f", vertical / F.col("duration")))
-    pitch = F.when(F.col("__m.inclined_length_m") > 0, F.format_string(
-        "%.2f", vertical / F.col("__m.inclined_length_m")))
-    return df.select(
+    speed = F.when(duration > 0, F.format_string(
+        "%.1f", m["inclined_length_m"] / duration))
+    vspeed = F.when(duration > 0,
+                    F.format_string("%.2f", vertical / duration))
+    pitch = F.when(m["inclined_length_m"] > 0, F.format_string(
+        "%.2f", vertical / m["inclined_length_m"]))
+    return _fields(LIFT_HEADERS, [
         F.col("name"), F.col("ref"),
         F.col("ref_fr_cairn"), F.col("lift_type"), F.col("status"),
         F.col("access"),
-        c["countries"].alias("countries"), c["regions"].alias("regions"),
-        c["localities"].alias("localities"),
-        F.col("__sa_names").alias("ski_area_names"),
-        _bool(F.col("oneway")).alias("oneway"),
+        c["countries"], c["regions"], c["localities"],
+        _sa_names(lifts, refs),
+        _bool(F.col("oneway")),
         # falsy -> empty (CSVFormatter.ts:227-229)
-        F.when(F.col("duration") > 0, F.col("duration")).alias("duration_sec"),
-        F.when(F.col("capacity") > 0, F.col("capacity")).alias("capacity"),
-        F.when(F.col("occupancy") > 0, F.col("occupancy")).alias("occupancy"),
-        _bool(F.col("detachable")).alias("detachable"),
-        _bool(F.col("bubble")).alias("bubble"),
-        _bool(F.col("heating")).alias("heating"),
-        F.format_string("%.0f", "__m.inclined_length_m")
-            .alias("inclined_length_m"),
-        F.format_string("%.0f", vertical).alias("vertical_m"),
-        speed.alias("speed_m_per_s"),
-        vspeed.alias("vertical_speed_m_per_s"),
-        F.format_string("%.0f", "__m.min_elevation_m")
-            .alias("min_elevation_m"),
-        F.format_string("%.0f", "__m.max_elevation_m")
-            .alias("max_elevation_m"),
-        pitch.alias("overall_pitch_%"),
-        F.col("wikidata_id"), c["websites"].alias("websites"),
-        c["openskimap"].alias("openskimap"), F.col("id"),
-        c["geometry"].alias("geometry"),
-        c["lat"].alias("lat"), c["lng"].alias("lng"),
-        F.concat_ws(";", F.array_sort("ski_areas")).alias("ski_area_ids"),
-        c["sources"].alias("sources"), F.col("description"),
-    )
+        F.when(duration > 0, duration),
+        F.when(F.col("capacity") > 0, F.col("capacity")),
+        F.when(F.col("occupancy") > 0, F.col("occupancy")),
+        _bool(F.col("detachable")), _bool(F.col("bubble")),
+        _bool(F.col("heating")),
+        F.format_string("%.0f", m["inclined_length_m"]),
+        F.format_string("%.0f", vertical),
+        speed, vspeed,
+        F.format_string("%.0f", m["min_elevation_m"]),
+        F.format_string("%.0f", m["max_elevation_m"]),
+        pitch,
+        F.col("wikidata_id"), c["websites"], c["openskimap"], F.col("id"),
+        c["geometry"], c["lat"], c["lng"],
+        F.concat_ws(";", F.array_sort("ski_areas")),
+        c["sources"], F.col("description"),
+    ])
 
 
-def ski_area_csv(ski_areas: DataFrame) -> DataFrame:
-    """Ski-area CSV: activity flags + distances/lift counts from the A2
-    statistics struct (A8 — aggregate over the map values, no re-scan of
-    the fact layers; CSVFormatter.ts:379-408)."""
+def _empty_map(value_ddl: str) -> Column:
+    return F.map_from_arrays(F.array().cast("array<string>"),
+                             F.array().cast(f"array<{value_ddl}>"))
+
+
+def ski_area_fields(ski_areas: DataFrame,
+                    refs: SkiAreaRefs | None = None) -> list[Column]:
+    """Ski area layer → the 23 columns of ``SKI_AREA_HEADERS``: activity
+    flags + distances/lift counts from the A2 statistics struct (A8 —
+    aggregate over the map values, no re-scan of the fact layers;
+    CSVFormatter.ts:379-408).  Ski areas name no ski areas, so ``refs``
+    is unused."""
     c = _common(ski_areas)
     stats = F.col("statistics")
 
     def act_distance(act: str) -> Column:
         by_diff = F.element_at(stats["runs"]["by_activity"], act)
         total = F.aggregate(
-            F.map_values(F.coalesce(
-                by_diff, F.map_from_arrays(
-                    F.array().cast("array<string>"),
-                    F.array().cast(
-                        "array<struct<count:bigint,length_in_km:double,"
-                        "snowmaking_length_in_km:double,"
-                        "snowfarming_length_in_km:double,"
-                        "combined_elevation_change:double,"
-                        "min_elevation:double,max_elevation:double>>")))),
+            F.map_values(F.coalesce(by_diff, _empty_map(
+                "struct<count:bigint,length_in_km:double,"
+                "snowmaking_length_in_km:double,"
+                "snowfarming_length_in_km:double,"
+                "combined_elevation_change:double,"
+                "min_elevation:double,max_elevation:double>"))),
             F.lit(0.0), lambda acc, x: acc + x["length_in_km"])
         # Math.round integer, empty when the activity is absent
         # (CSVFormatter.ts:263-273)
         return F.when(by_diff.isNotNull(), F.round(total, 0).cast("long"))
 
-    lift_counts = F.map_values(F.coalesce(
-        stats["lifts"]["by_type"],
-        F.map_from_arrays(
-            F.array().cast("array<string>"),
-            F.array().cast("array<struct<count:bigint,length_in_km:double,"
-                           "combined_elevation_change:double,"
-                           "min_elevation:double,max_elevation:double>>"))))
-    lift_entries = F.map_entries(F.coalesce(
-        stats["lifts"]["by_type"],
-        F.map_from_arrays(
-            F.array().cast("array<string>"),
-            F.array().cast("array<struct<count:bigint,length_in_km:double,"
-                           "combined_elevation_change:double,"
-                           "min_elevation:double,max_elevation:double>>"))))
-    n_lifts = F.aggregate(lift_counts, F.lit(0).cast("long"),
+    by_type = F.coalesce(stats["lifts"]["by_type"], _empty_map(
+        "struct<count:bigint,length_in_km:double,"
+        "combined_elevation_change:double,"
+        "min_elevation:double,max_elevation:double>"))
+    n_lifts = F.aggregate(F.map_values(by_type), F.lit(0).cast("long"),
                           lambda acc, x: acc + x["count"])
     n_surface = F.aggregate(
-        lift_entries, F.lit(0).cast("long"),
+        F.map_entries(by_type), F.lit(0).cast("long"),
         lambda acc, e: acc + F.when(
             e["key"].isin(*SURFACE_LIFT_TYPES), e["value"]["count"])
             .otherwise(F.lit(0).cast("long")))
     vertical = stats["max_elevation"] - stats["min_elevation"]
 
-    return ski_areas.select(
+    return _fields(SKI_AREA_HEADERS, [
         F.col("name"),
-        c["countries"].alias("countries"), c["regions"].alias("regions"),
-        c["localities"].alias("localities"),
+        c["countries"], c["regions"], c["localities"],
         F.col("status"),
-        _bool(F.array_contains("activities", "downhill"))
-            .alias("has_downhill"),
-        _bool(F.array_contains("activities", "nordic")).alias("has_nordic"),
-        act_distance("downhill").alias("downhill_distance_km"),
-        act_distance("nordic").alias("nordic_distance_km"),
+        _bool(F.array_contains("activities", "downhill")),
+        _bool(F.array_contains("activities", "nordic")),
+        act_distance("downhill"), act_distance("nordic"),
         # Math.round integers, empty on falsy elevations / zero counts
         # (CSVFormatter.ts:274-283)
         F.when((stats["max_elevation"] != 0) & (stats["min_elevation"] != 0),
-               F.round(vertical, 0).cast("long")).alias("vertical_m"),
+               F.round(vertical, 0).cast("long")),
         F.when(stats["min_elevation"] != 0,
-               F.round(stats["min_elevation"], 0).cast("long"))
-            .alias("min_elevation_m"),
+               F.round(stats["min_elevation"], 0).cast("long")),
         F.when(stats["max_elevation"] != 0,
-               F.round(stats["max_elevation"], 0).cast("long"))
-            .alias("max_elevation_m"),
-        F.when(n_lifts > 0, n_lifts).alias("lift_count"),
-        F.when(n_surface > 0, n_surface).alias("surface_lifts_count"),
+               F.round(stats["max_elevation"], 0).cast("long")),
+        F.when(n_lifts > 0, n_lifts),
+        F.when(n_surface > 0, n_surface),
         F.col("run_convention"), F.col("wikidata_id"),
-        c["websites"].alias("websites"), c["openskimap"].alias("openskimap"),
-        F.col("id"), c["geometry"].alias("geometry"),
-        c["lat"].alias("lat"), c["lng"].alias("lng"),
-        c["sources"].alias("sources"),
-    )
+        c["websites"], c["openskimap"], F.col("id"), c["geometry"],
+        c["lat"], c["lng"], c["sources"],
+    ])
+
+
+def spot_fields(spots: DataFrame, refs: SkiAreaRefs | None) -> list[Column]:
+    """Spot layer → the 14 columns of ``SPOT_HEADERS``."""
+    c = _common(spots)
+    center = F.from_json(
+        F.get_json_object("geometry", "$.coordinates"), "array<double>")
+    return _fields(SPOT_HEADERS, [
+        F.col("id"), F.col("spot_type"),
+        F.format_string("%.6f", center[0]),
+        F.format_string("%.6f", center[1]),
+        c["sources"],
+        # spot ski_areas column carries resolved NAMES (formatSpot uses
+        # extractSkiAreaNames, CSVFormatter.ts:416)
+        _sa_names(spots, refs),
+        c["countries"], c["regions"], c["localities"],
+        F.col("dismount"), F.col("name"), F.col("position"),
+        _bool(F.col("entry")), _bool(F.col("exit")),
+    ])
+
+
+# layer name -> (header, projection) of the four reference CSV files
+LAYER_FIELDS = {
+    "runs": (RUN_HEADERS, run_fields),
+    "lifts": (LIFT_HEADERS, lift_fields),
+    "spots": (SPOT_HEADERS, spot_fields),
+    "ski_areas": (SKI_AREA_HEADERS, ski_area_fields),
+}
+
+
+def run_csv(runs: DataFrame,
+            ski_areas: DataFrame | None = None) -> DataFrame:
+    """Run layer → the reference CSV schema.  Pass the clustered
+    ``ski_areas`` layer to resolve ski_area_names (J8)."""
+    return runs.select(*run_fields(runs, SkiAreaRefs.resolve(ski_areas)))
+
+
+def lift_csv(lifts: DataFrame,
+             ski_areas: DataFrame | None = None) -> DataFrame:
+    return lifts.select(*lift_fields(lifts, SkiAreaRefs.resolve(ski_areas)))
+
+
+def ski_area_csv(ski_areas: DataFrame) -> DataFrame:
+    return ski_areas.select(*ski_area_fields(ski_areas))
 
 
 def spot_csv(spots: DataFrame,
              ski_areas: DataFrame | None = None) -> DataFrame:
-    spots = _with_ski_area_names(spots, ski_areas)
-    c = _common(spots)
-    center = F.from_json(
-        F.get_json_object("geometry", "$.coordinates"), "array<double>")
-    return spots.select(
-        F.col("id"), F.col("spot_type"),
-        F.format_string("%.6f", center[0]).alias("longitude"),
-        F.format_string("%.6f", center[1]).alias("latitude"),
-        c["sources"].alias("sources"),
-        # spot ski_areas column carries resolved NAMES (formatSpot uses
-        # extractSkiAreaNames, CSVFormatter.ts:416)
-        F.col("__sa_names").alias("ski_areas"),
-        c["countries"].alias("countries"), c["regions"].alias("regions"),
-        c["localities"].alias("localities"),
-        F.col("dismount"), F.col("name"), F.col("position"),
-        _bool(F.col("entry")).alias("entry"),
-        _bool(F.col("exit")).alias("exit"),
-    )
+    return spots.select(*spot_fields(spots, SkiAreaRefs.resolve(ski_areas)))
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Spark CSV writer (RFC escaping built in, O1 id-order when single)."""
-    out = df
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").option("header", True).csv(path)
+class CsvFile:
+    """``{path}/part-00000.csv``: the header line, then one line per row
+    rendered by ``to_csv`` (quoting as ``DataFrameWriter.csv``); a layer
+    without rows still gets its header.  Replaces the directory."""
+
+    def __init__(self, path: str, header: list[str], fields: list[Column]):
+        self.path, self.header = path, header
+        self.columns = [F.to_csv(F.struct(*fields))]
+
+    def write(self, rows: Iterable[tuple]) -> None:
+        shutil.rmtree(self.path, ignore_errors=True)
+        os.makedirs(self.path)
+        with open(os.path.join(self.path, "part-00000.csv"), "w",
+                  encoding="utf-8", newline="") as f:
+            f.write(",".join(self.header) + "\n")
+            for (line,) in rows:
+                f.write(line + "\n")
+
+
+def write_csv(df: DataFrame, path: str) -> None:
+    """One CSV file of every column of ``df`` (e.g. ``run_csv``'s output),
+    id-ordered when ``df`` has an ``id``."""
+    write_layer(df, [CsvFile(path, df.columns,
+                             [F.col(c) for c in df.columns])])

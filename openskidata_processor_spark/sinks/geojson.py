@@ -1,12 +1,16 @@
 """K1 — GeoJSON FeatureCollection sink (src/transforms/FeatureCollection.ts).
 
-Features serialize as one JSON object per row (Catalyst ``to_json`` — no
-Python in the per-row path), ordered by id for byte-reproducible output
-(O1, PostgreSQLClusteringDatabase.ts:551).  Two shapes:
+Features serialize as one JSON string per row (Catalyst ``to_json`` — no
+Python in the per-row path).  The projections return Columns, so one
+``select`` per layer can carry the engine feature, the reference-shaped
+feature and the Mapbox feature next to the CSV and GeoPackage columns
+(``sinks.export``).  Two file shapes:
 
-- ``write_feature_collection``: the reference's single-file
-  ``{"type": "FeatureCollection", "features": [...]}`` — collectable
-  because it is an *export* format; the driver streams partitions.
+- ``FeatureCollectionFile``: the reference's single-file
+  ``{"type": "FeatureCollection", "features": [...]}``, written by the
+  driver from the layer's one id-ordered fetch (O1,
+  PostgreSQLClusteringDatabase.ts:551) — an *export* format;
+  ``write_feature_collection`` is that fetch and file for one frame.
 - ``write_feature_jsonl``: the scale shape — sharded JSON-lines of
   Feature objects (one spark text write, no driver bottleneck); the K5
   merge of N such directories is a plain ``unionByName``.
@@ -16,51 +20,69 @@ from __future__ import annotations
 
 import json
 import os
+from typing import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .export import SkiAreaRefs, write_layer
 
-def feature_json(df: DataFrame, geometry_col: str = "geometry",
-                 id_col: str = "id") -> DataFrame:
-    """One canonical GeoJSON Feature string per row (column ``feature``),
-    plus the id for ordering."""
-    prop_cols = [c for c in df.columns if c not in (geometry_col,)]
+
+def feature_expr(props: dict[str, Column], geometry: Column) -> Column:
+    """One canonical GeoJSON Feature string from named property columns
+    (in key order) and a GeoJSON geometry string column."""
     # the reference serializes null properties explicitly
     # ("access": null, "bearing": null, ... in every snapshot)
-    props = F.to_json(F.struct(*[F.col(c) for c in prop_cols]),
-                      {"ignoreNullFields": "false"})
-    feature = F.concat(
-        F.lit('{"type":"Feature","properties":'), props,
-        F.lit(',"geometry":'), F.col(geometry_col), F.lit("}"))
-    return df.select(F.col(id_col).alias("__id"), feature.alias("feature"))
+    body = F.to_json(F.struct(*[c.alias(n) for n, c in props.items()]),
+                     {"ignoreNullFields": "false"})
+    return F.concat(
+        F.lit('{"type":"Feature","properties":'), body,
+        F.lit(',"geometry":'), geometry, F.lit("}"))
+
+
+def feature(df: DataFrame, geometry_col: str = "geometry") -> Column:
+    """The engine's Feature: every column but the geometry is a property."""
+    return feature_expr({c: F.col(c) for c in df.columns if c != geometry_col},
+                        F.col(geometry_col))
+
+
+class FeatureCollectionFile:
+    """A single FeatureCollection file of one Feature-string column.  A null
+    Feature (null geometry) raises, unless ``skip_null`` says the
+    projection drops rows that way (``mapbox_feature``)."""
+
+    def __init__(self, path: str, feature_col: Column,
+                 skip_null: bool = False):
+        self.path, self.skip_null = path, skip_null
+        self.columns = [feature_col]
+
+    def write(self, rows: Iterable[tuple]) -> None:
+        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
+        with open(self.path, "w", encoding="utf-8") as f:
+            f.write('{"type":"FeatureCollection","features":[')
+            sep = ""
+            for (feat,) in rows:
+                if feat is None:
+                    if self.skip_null:
+                        continue
+                    raise ValueError(f"{self.path}: a feature has no geometry")
+                f.write(sep)
+                f.write(feat)
+                sep = ","
+            f.write("]}")
 
 
 def write_feature_jsonl(df: DataFrame, path: str,
                         geometry_col: str = "geometry") -> None:
     """Sharded newline-delimited Features (the 100 TB shape)."""
-    feature_json(df, geometry_col).select("feature").write.mode(
+    df.select(feature(df, geometry_col).alias("feature")).write.mode(
         "overwrite").text(path)
 
 
 def write_feature_collection(df: DataFrame, path: str,
                              geometry_col: str = "geometry") -> None:
     """Single FeatureCollection file, id-ordered (reference parity)."""
-    # toLocalIterator keeps driver memory bounded to one partition at a
-    # time (single-file FC output at any layer size); prefetchPartitions
-    # overlaps the next partition's fetch job with driver-side writing.
-    rows = (feature_json(df, geometry_col)
-            .orderBy("__id")
-            .select("feature")
-            .toLocalIterator(prefetchPartitions=True))
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write('{"type":"FeatureCollection","features":[')
-        for i, r in enumerate(rows):
-            if i:
-                f.write(",")
-            f.write(r.feature)
-        f.write("]}")
+    write_layer(df, [FeatureCollectionFile(path, feature(df, geometry_col))])
 
 
 def read_feature_jsonl(spark, path: str) -> DataFrame:
@@ -174,18 +196,14 @@ def _camel_statistics(c: F.Column) -> F.Column:
         c["max_elevation"].alias("maxElevation")))
 
 
-def ski_area_summary_json(ski_areas: DataFrame) -> DataFrame:
-    """(ski_area_id, summary feature JSON) — toSkiAreaSummary.ts."""
+def ski_area_summary_json(ski_areas: DataFrame) -> Column:
+    """The summary Feature JSON of each ski area (P14, toSkiAreaSummary.ts):
+    id, name, activities, type and status, with the ski area's geometry."""
     ftype = (F.col("feature_type") if "feature_type" in ski_areas.columns
              else F.lit("skiArea"))
-    props = F.to_json(F.struct(
-        F.col("activities"), F.col("id"), F.col("name"), F.col("status"),
-        ftype.alias("type")), {"ignoreNullFields": "false"})
-    return ski_areas.select(
-        F.col("id").alias("__said"),
-        F.concat(F.lit('{"type":"Feature","properties":'), props,
-                 F.lit(',"geometry":'), F.col("geometry"), F.lit("}"))
-        .alias("__summary"))
+    return feature_expr({"activities": F.col("activities"), "id": F.col("id"),
+                         "name": F.col("name"), "status": F.col("status"),
+                         "type": ftype}, F.col("geometry"))
 
 
 def _stations_json(col: F.Column) -> F.Column:
@@ -204,38 +222,23 @@ def _stations_json(col: F.Column) -> F.Column:
                     F.concat_ws(",", F.transform(col, feat)), F.lit("]"))
 
 
-def reference_properties(df: DataFrame, ski_areas: DataFrame | None,
-                         geometry_col: str = "geometry") -> DataFrame:
-    """Rewrite a layer to the reference's exported property shape: columns
+def reference_feature(df: DataFrame, refs: SkiAreaRefs | None,
+                      geometry_col: str = "geometry") -> Column:
+    """One reference-contract GeoJSON Feature string per row: columns
     camelCased (with the published special cases), nested structs
     (viewport_hint, elevation_profile, statistics) deep-camelCased, and the
-    ski_areas id array / stations array replaced by embedded features.
-    Raw-JSON fragments (columns in __splices) are spliced unescaped at
-    serialization time."""
+    ski_areas id array / stations array replaced by embedded features,
+    spliced in unescaped as the first properties.  The ski_areas ids stay
+    a plain array unless ``refs`` carries summaries."""
+    splice_sa = ("ski_areas" in df.columns and refs is not None
+                 and refs.has_summaries)
     # engine-internal working columns never exported by the reference
-    out = df.drop("is_polygon", "source", "n_members")
-    if "feature_type" not in out.columns:
-        out = out.withColumn("feature_type", F.lit("skiArea"))
-    splices: dict[str, F.Column] = {}
-    if "ski_areas" in df.columns and ski_areas is not None:
-        summaries = ski_area_summary_json(ski_areas)
-        resolved = (df.select(F.col("id").alias("__fid"),
-                              F.explode("ski_areas").alias("__said"))
-                    .join(F.broadcast(summaries), "__said")
-                    .groupBy("__fid")
-                    .agg(F.concat(F.lit("["), F.concat_ws(
-                        ",", F.sort_array(F.collect_list("__summary"))),
-                        F.lit("]")).alias("__ski_areas_json")))
-        out = (out.join(resolved, out["id"] == resolved["__fid"], "left")
-               .drop("__fid", "ski_areas"))
-        splices["skiAreas"] = F.coalesce(F.col("__ski_areas_json"),
-                                         F.lit("[]"))
-    if "stations" in df.columns:
-        splices["stations"] = F.coalesce(_stations_json(F.col("stations")),
-                                         F.lit("[]"))
-    cols = []
-    for name in out.columns:
-        if name in (geometry_col, "__ski_areas_json", "stations"):
+    skip = {geometry_col, "stations", "is_polygon", "source", "n_members"}
+    if splice_sa:
+        skip.add("ski_areas")
+    props: dict[str, Column] = {}
+    for name in df.columns:
+        if name in skip:
             continue
         c = F.col(name)
         if name == "viewport_hint":
@@ -247,43 +250,22 @@ def reference_properties(df: DataFrame, ski_areas: DataFrame | None,
                                   "target_resolution"])
         elif name == "statistics":
             c = _camel_statistics(c)
-        cols.append(c.alias(_camel(name)))
-    for key, frag in splices.items():
-        cols.append(frag.alias(f"__splice_{key}"))
-    return out.select(F.col(geometry_col), *cols)
-
-
-def reference_feature_json(df: DataFrame, ski_areas: DataFrame | None,
-                           geometry_col: str = "geometry") -> DataFrame:
-    """One reference-contract GeoJSON Feature string per row."""
-    shaped = reference_properties(df, ski_areas, geometry_col)
-    splice_cols = [c for c in shaped.columns if c.startswith("__splice_")]
-    prop_cols = [c for c in shaped.columns
-                 if c != geometry_col and not c.startswith("__splice_")]
-    props = F.to_json(F.struct(*[F.col(c) for c in prop_cols]),
-                      {"ignoreNullFields": "false"})
-    for sc in splice_cols:
-        key = sc[len("__splice_"):]
-        # '{"a":1}' -> '{"<key>":<fragment>,"a":1}'
-        props = F.concat(F.lit('{"' + key + '":'), F.col(sc),
-                         F.lit(","), F.substring(props, 2, 1 << 30))
-    feature = F.concat(
-        F.lit('{"type":"Feature","properties":'), props,
-        F.lit(',"geometry":'), F.col(geometry_col), F.lit("}"))
-    return shaped.select(F.col("id").alias("__id"), feature.alias("feature"))
-
-
-def write_reference_feature_collection(df: DataFrame, path: str,
-                                       ski_areas: DataFrame | None = None,
-                                       geometry_col: str = "geometry") -> None:
-    """Single reference-contract FeatureCollection file, id-ordered."""
-    rows = (reference_feature_json(df, ski_areas, geometry_col)
-            .orderBy("__id").select("feature").toLocalIterator(prefetchPartitions=True))
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        f.write('{"type":"FeatureCollection","features":[')
-        for i, r in enumerate(rows):
-            if i:
-                f.write(",")
-            f.write(r.feature)
-        f.write("]}")
+        props[_camel(name)] = c
+    if "feature_type" not in df.columns:
+        props[_camel("feature_type")] = F.lit("skiArea")
+    splices: list[tuple[str, Column]] = []
+    if "stations" in df.columns:
+        splices.append(("stations", F.coalesce(
+            _stations_json(F.col("stations")), F.lit("[]"))))
+    if splice_sa:
+        splices.append(("skiAreas", refs.summaries(F.col("ski_areas"))))
+    feat = feature_expr(props, F.col(geometry_col))
+    if not splices:
+        return feat
+    # '{"type":"Feature","properties":{"a":1}...' ->
+    # '{"type":"Feature","properties":{"<key>":<fragment>,"a":1}...'
+    head = len('{"type":"Feature","properties":{')
+    parts = [F.lit('{"type":"Feature","properties":{')]
+    for key, frag in splices:
+        parts += [F.lit(f'"{key}":'), frag, F.lit(",")]
+    return F.concat(*parts, F.substring(feat, head + 1, 1 << 30))

@@ -3,9 +3,12 @@ stdlib sqlite3 against the published OGC GeoPackage 1.2 spec (no gpkg
 library in this container).
 
 Like the reference (a single-node library fed by streamed features), this
-is a driver-side export: layer DataFrames are iterated per-partition and
-inserted in one transaction with the reference's WAL bulk pragmas
-(GeoPackageWriter.ts:495-512).
+is a driver-side export: ``GeoPackage.layer`` is a sink of the layer's one
+id-ordered fetch (``sinks.export``) — the typed columns of ``gpkg_columns``
+and the geometry — and the rows insert in one transaction with the
+reference's WAL bulk pragmas (GeoPackageWriter.ts:495-512).  fids follow
+the id order (O1), so the file's contents do not depend on partition
+layout.
 
 Reference behaviors reproduced (GeoPackageWriter.unit.test.ts):
 - features are grouped by geometry type into separate tables named
@@ -30,13 +33,14 @@ import json
 import os
 import sqlite3
 import struct
-from typing import Any
+from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 
 from ..functions.geometry import centroid as geom_centroid
+from .export import SkiAreaRefs, write_layer
 
 _WKB_TYPE = {"Point": 1, "LineString": 2, "Polygon": 3,
              "MultiPoint": 4, "MultiLineString": 5, "MultiPolygon": 6,
@@ -155,20 +159,6 @@ def _place_field(df: DataFrame, code_field: str, name_field: str):
     return _join_or_null(codes, ";"), _join_or_null(names, ";")
 
 
-def _with_sa_refs(df: DataFrame, ski_areas: DataFrame | None):
-    """skiAreas → ski_area_ids / ski_area_names (:246-258), ","-joined
-    (sorted-unique — the reference keeps stream order, unknowable in a
-    distributed export).  Returns (df possibly extended with the resolved
-    names column, ids Column, names Column)."""
-    ids = (_join_or_null(F.col("ski_areas"), ",")
-           if "ski_areas" in df.columns else F.lit(None).cast("string"))
-    if ski_areas is None or "ski_areas" not in df.columns:
-        return df, ids, F.lit(None).cast("string")
-    from .csv import _with_ski_area_names
-    df = _with_ski_area_names(df, ski_areas)
-    return df, ids, F.nullif(F.col("__sa_names"), F.lit(""))
-
-
 def _common_cols(df: DataFrame) -> dict[str, tuple[Column, str]]:
     country_codes, countries = _place_field(df, "iso3166_1", "country")
     region_codes, regions = _place_field(df, "iso3166_2", "region")
@@ -190,11 +180,18 @@ def _common_cols(df: DataFrame) -> dict[str, tuple[Column, str]]:
     }
 
 
-def gpkg_project(df: DataFrame, feature_type: str,
-                 ski_areas: DataFrame | None = None):
-    """(projected DataFrame with geometry + typed columns, {col: sql type})
-    per the reference's FEATURE_SCHEMAS (:468-473)."""
-    df, sa_ids, sa_names = _with_sa_refs(df, ski_areas)
+def gpkg_columns(df: DataFrame, feature_type: str,
+                 refs: SkiAreaRefs | None) -> dict[str, tuple[Column, str]]:
+    """{column: (expression, sql type)} per the reference's FEATURE_SCHEMAS
+    (:468-473).  skiAreas flatten into ski_area_ids / ski_area_names
+    (:246-258), ","-joined sorted-unique — the reference keeps stream
+    order, unknowable in a distributed export — and null when empty."""
+    has_sa = "ski_areas" in df.columns
+    sa_ids = (_join_or_null(F.col("ski_areas"), ",") if has_sa
+              else F.lit(None).cast("string"))
+    sa_names = (F.nullif(refs.names(F.col("ski_areas")), F.lit(""))
+                if has_sa and refs is not None
+                else F.lit(None).cast("string"))
     if feature_type == "ski_area":
         stats = "statistics" in df.columns
         cols = {
@@ -286,7 +283,14 @@ def gpkg_project(df: DataFrame, feature_type: str,
         }
     else:
         raise ValueError(f"unknown feature type {feature_type!r}")
+    return cols
 
+
+def gpkg_project(df: DataFrame, feature_type: str,
+                 ski_areas: DataFrame | None = None):
+    """(projected DataFrame with geometry + typed columns, {col: sql type})
+    — ``gpkg_columns`` as a frame, names resolved from ``ski_areas``."""
+    cols = gpkg_columns(df, feature_type, SkiAreaRefs.resolve(ski_areas))
     projected = df.select(
         F.col("geometry"),
         *[expr.alias(name) for name, (expr, _) in cols.items()])
@@ -388,48 +392,24 @@ class _LayerTables:
                 " WHERE table_name=?", (minx, miny, maxx, maxy, table))
 
 
-def write_geopackage(layers: dict[str, DataFrame], path: str,
-                     geometry_col: str = "geometry",
-                     ski_area_centroids: bool = True) -> None:
-    """Write each layer as geometry-type-grouped GPKG feature tables.
+class _Layer:
+    """Sink of one layer's GeoPackage tables: the geometry and the typed
+    (or, for an unknown layer, TEXT) columns of each fetched row."""
 
-    Known layer names project through the reference's typed schemas;
-    unknown layers fall back to generic TEXT columns (arrays/structs as
-    JSON).  Ski-area layers additionally export every feature as a
-    centroid point into ``<layer>_point`` (:534-557)."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    if os.path.exists(path):
-        os.remove(path)
-    con = sqlite3.connect(path)
-    # bulk pragmas (GeoPackageWriter.ts:495-512)
-    con.execute("PRAGMA journal_mode = WAL")
-    con.execute("PRAGMA synchronous = OFF")
-    _init_gpkg(con)
+    def __init__(self, con: sqlite3.Connection, name: str,
+                 cols: dict[str, tuple[Column, str]], geometry: Column,
+                 centroids: bool):
+        self.con, self.name, self.centroids = con, name, centroids
+        self.coltypes = {n: t for n, (_, t) in cols.items()}
+        self.columns = [geometry] + [e for e, _ in cols.values()]
 
-    sa_summary = layers.get("ski_areas")
-    for name, df in layers.items():
-        ftype = FEATURE_TYPE_BY_LAYER.get(name)
-        if ftype is not None:
-            df, coltypes = gpkg_project(df, ftype, ski_areas=sa_summary)
-        else:
-            coltypes = {c: "TEXT" for c in df.columns if c != geometry_col}
-        cols = [c for c in df.columns if c != geometry_col]
-        tables = _LayerTables(con, cols, coltypes)
-        is_ski_area = ski_area_centroids and ftype == "ski_area"
-
-        out = df.select(geometry_col, *cols)
-        if "feature_id" in cols:
-            # O1 ordered-export contract (same as the GeoJSON sink): fid
-            # assignment follows the content-hash id order, not upstream
-            # task-completion order — without this, partial-aggregate
-            # partition layout under load leaks into the fids and the
-            # byte-level output is not reproducible across runs.
-            out = out.orderBy("feature_id")
-        rows = out.toLocalIterator(prefetchPartitions=True)
-        for r in rows:
-            geom = json.loads(r[geometry_col])
-            values = tuple(_encode(r[c]) for c in cols)
-            if is_ski_area:
+    def write(self, rows: Iterable[tuple]) -> None:
+        tables = _LayerTables(self.con, list(self.coltypes), self.coltypes)
+        name = self.name
+        for geom_json, *vals in rows:
+            geom = json.loads(geom_json)
+            values = tuple(_encode(v) for v in vals)
+            if self.centroids:
                 # every ski area exports a centroid point (:536-552)
                 point = {"type": "Point", "coordinates": geom_centroid(geom)}
                 tables.add(f"{name}_point", point, values)
@@ -441,8 +421,58 @@ def write_geopackage(layers: dict[str, DataFrame], path: str,
                         "coordinates": [geom["coordinates"]]}
             tables.add(f"{name}_{geom['type'].lower()}", geom, values)
         tables.flush()
-    con.commit()
-    con.close()
+
+
+class GeoPackage:
+    """One GeoPackage file being written: ``layer`` makes each layer's
+    sink, ``close`` commits.  Replaces any existing file."""
+
+    def __init__(self, path: str):
+        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        if os.path.exists(path):
+            os.remove(path)
+        self.con = sqlite3.connect(path)
+        # bulk pragmas (GeoPackageWriter.ts:495-512)
+        self.con.execute("PRAGMA journal_mode = WAL")
+        self.con.execute("PRAGMA synchronous = OFF")
+        _init_gpkg(self.con)
+
+    def layer(self, name: str, df: DataFrame, refs: SkiAreaRefs | None,
+              geometry_col: str = "geometry",
+              ski_area_centroids: bool = True) -> _Layer:
+        """Known layer names project through the reference's typed
+        schemas; unknown layers fall back to generic TEXT columns
+        (arrays/structs as JSON).  Ski-area layers additionally export
+        every feature as a centroid point into ``<layer>_point``
+        (:534-557)."""
+        ftype = FEATURE_TYPE_BY_LAYER.get(name)
+        if ftype is not None:
+            cols = gpkg_columns(df, ftype, refs)
+        else:
+            cols = {c: (F.col(c), "TEXT") for c in df.columns
+                    if c != geometry_col}
+        return _Layer(self.con, name, cols, F.col(geometry_col),
+                      ski_area_centroids and ftype == "ski_area")
+
+    def close(self) -> None:
+        self.con.commit()
+        self.con.close()
+
+
+def write_geopackage(layers: dict[str, DataFrame], path: str,
+                     geometry_col: str = "geometry",
+                     ski_area_centroids: bool = True) -> None:
+    """Write each layer as geometry-type-grouped GPKG feature tables, one
+    fetch per layer; ski-area names resolve from ``layers["ski_areas"]``
+    when present."""
+    refs = SkiAreaRefs.resolve(layers.get("ski_areas"))
+    gpkg = GeoPackage(path)
+    try:
+        for name, df in layers.items():
+            write_layer(df, [gpkg.layer(name, df, refs, geometry_col,
+                                        ski_area_centroids)])
+    finally:
+        gpkg.close()
 
 
 def merge_geopackages(paths: list[str], out_path: str) -> None:

@@ -5,9 +5,9 @@ bbox, then merges) into one:
 
 - ``{dir}/{layer}.geojson``      — FeatureCollections: features concatenate
   (merge_outputs.ts:94-160).
-- ``{dir}/csv/{layer}/``         — this engine's Spark CSV directories:
-  one header, rows concatenate (the reference's csv/*.csv leg,
-  merge_outputs.ts:389-430).
+- ``{dir}/csv/{layer}/``         — this engine's CSV directories
+  (``part-*.csv``): one header, rows concatenate (the reference's
+  csv/*.csv leg, merge_outputs.ts:389-430).
 - ``{dir}/openskidata.gpkg``     — first copies, the rest SQLite-merge
   (merge_outputs.ts:444-470, via sinks.geopackage.merge_geopackages).
 - ``{dir}/openskimap.mbtiles``   — first copies, the rest ``tile-join -f
@@ -59,16 +59,20 @@ def _csv_part_files(layer_dir: str) -> list[str]:
 
 
 def _merge_csv_dirs(dirs: list[str], out_dir: str) -> None:
-    """One header (from the first part of the first directory), then all
-    rows — the reference's skip-header append, over Spark CSV dirs."""
+    r"""One header (from the first part of the first directory), then all
+    rows — the reference's skip-header append, over the CSV directories.
+    Lines split on "\n" only and the bytes between pass through, so
+    quoted fields holding "\r", "\u2028" or other line breaks survive."""
     os.makedirs(out_dir, exist_ok=True)
     out_path = os.path.join(out_dir, "part-00000-merged.csv")
     header = None
-    with open(out_path, "w") as out:
+    with open(out_path, "w", encoding="utf-8", newline="") as out:
         for d in dirs:
             for part in _csv_part_files(d):
-                with open(part) as f:
-                    lines = f.read().splitlines()
+                with open(part, encoding="utf-8", newline="") as f:
+                    lines = f.read().split("\n")
+                if lines[-1] == "":
+                    lines.pop()
                 if not lines:
                     continue
                 if header is None:

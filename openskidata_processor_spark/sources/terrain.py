@@ -51,9 +51,6 @@ from .fetch import geohash_decode
 # (z, x, y) -> PNG bytes, or None for a 404 ("no tile here").
 FetchTile = Callable[[int, int, int], "bytes | None"]
 
-CHANNELS = 3  # TerrainTileElevationSource.ts:18
-
-
 # -- PNG decode (stdlib zlib + numpy; 8-bit RGB/RGBA, non-interlaced) -------
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"

@@ -128,13 +128,17 @@ def hash_gpkg(path: str) -> str:
     return hashlib.sha256("\n".join(out).encode()).hexdigest()[:16]
 
 
-def compute_all_hashes(spark, out_root: str) -> dict[str, str]:
-    layers = prepare_from_elements(
+def golden_layers(spark):
+    return prepare_from_elements(
         spark, golden_elements(spark),
         spark.createDataFrame(
             [], "id string, name string, status string, "
                 "activities array<string>, scalerank int, "
                 "official_website string, geometry string"))
+
+
+def compute_all_hashes(spark, out_root: str, layers=None) -> dict[str, str]:
+    layers = layers or golden_layers(spark)
     flat = os.path.join(out_root, "flat")
     ref = os.path.join(out_root, "ref")
     write_outputs(layers, flat)
@@ -181,9 +185,14 @@ GOLDEN = {
 
 
 @pytest.fixture(scope="module")
-def golden_hashes(spark, tmp_path_factory):
+def layers(spark):
+    return golden_layers(spark)
+
+
+@pytest.fixture(scope="module")
+def golden_hashes(spark, tmp_path_factory, layers):
     return compute_all_hashes(
-        spark, str(tmp_path_factory.mktemp("golden")))
+        spark, str(tmp_path_factory.mktemp("golden")), layers)
 
 
 @pytest.mark.parametrize("artifact", sorted(GOLDEN))
@@ -195,3 +204,18 @@ def test_golden_hash(golden_hashes, artifact):
 
 def test_no_unpinned_artifacts(golden_hashes):
     assert set(golden_hashes) == set(GOLDEN)
+
+
+def test_write_outputs_job_count(spark, layers, tmp_path):
+    """Every sink format of a layer comes from one fetch: at most 4 Spark
+    jobs per output layer, plus the once-per-call ski-area resolution.
+    Per-sink fetches, sorts or name joins would blow through this."""
+    sc = spark.sparkContext
+    group = "test_write_outputs_job_count"
+    sc.setJobGroup(group, "write_outputs")
+    try:
+        write_outputs(layers, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4 * 4 + 1, len(jobs)

@@ -8,6 +8,7 @@ import shutil
 import sqlite3
 
 import pytest
+from pyspark.sql import functions as F
 
 from openskidata_processor_spark.pipeline import formatters as fmt
 from openskidata_processor_spark.sinks import csv as csvsink
@@ -17,6 +18,19 @@ from test_formatters import raw
 LINE3D = json.dumps({"type": "LineString",
                      "coordinates": [[11.1, 47.1, 2000.0],
                                      [11.2, 47.2, 1700.0]]})
+
+STATS_DDL = (
+    "struct<"
+    "runs: struct<by_activity: map<string, map<string, "
+    "struct<count:bigint, length_in_km:double,"
+    " snowmaking_length_in_km:double,"
+    " snowfarming_length_in_km:double,"
+    " combined_elevation_change:double, min_elevation:double,"
+    " max_elevation:double>>>>,"
+    "lifts: struct<by_type: map<string, struct<count:bigint,"
+    " length_in_km:double, combined_elevation_change:double,"
+    " min_elevation:double, max_elevation:double>>>,"
+    "min_elevation: double, max_elevation: double>")
 
 
 @pytest.fixture(scope="module")
@@ -144,12 +158,67 @@ class TestCSV:
         assert out.columns == csvsink.SPOT_HEADERS
         assert out.collect()[0].dismount == "yes"
 
+    def test_ski_area_csv_schema(self, spark):
+        poly = json.dumps({"type": "Polygon", "coordinates": [
+            [[11.0, 47.0], [11.1, 47.0], [11.1, 47.1], [11.0, 47.0]]]})
+        areas = fmt.format_ski_areas_osm(raw(spark, [
+            ({"landuse": "winter_sports", "name": "R"}, poly)]))
+        areas = areas.withColumn("statistics", F.lit(None).cast(STATS_DDL))
+        out = csvsink.ski_area_csv(areas)
+        assert out.columns == csvsink.SKI_AREA_HEADERS
+        assert out.collect()[0].name == "R"
+
     def test_csv_escaping_via_spark_writer(self, spark, runs, tmp_path):
         path = str(tmp_path / "runs_csv")
-        csvsink.write_csv(csvsink.run_csv(runs), path, single_file=True)
+        csvsink.write_csv(csvsink.run_csv(runs), path)
         df = spark.read.option("header", True).csv(path)
         names = {r.name for r in df.select("name").collect()}
         assert 'Blue, with "quotes"' in names
+
+
+class TestCSVLines:
+    """The CSV sink writes ``to_csv`` lines from the driver; they must be
+    the bytes ``DataFrameWriter.csv(header=True)`` writes for the same
+    rows, adversarial values included."""
+
+    VALUES = ["plain", "a,b", 'say "hi"', "back\\slash", "two\nlines",
+              "carriage\rreturn", "crlf\r\nend", "  padded  ", "",
+              None, "Zürich – 滑雪", '\\"', "trailing ", " leading"]
+
+    def _frame(self, spark):
+        rows = [(f"id{i:02d}", v, i, v if i % 2 else None)
+                for i, v in enumerate(self.VALUES)]
+        return spark.createDataFrame(
+            rows, "id string, text string, n int, other string")
+
+    def _spark_file(self, df, path):
+        df.coalesce(1).write.mode("overwrite").option("header", True) \
+            .csv(path)
+        parts = [p for p in os.listdir(path) if p.startswith("part-")
+                 and p.endswith(".csv")]
+        assert len(parts) == 1
+        with open(os.path.join(path, parts[0]), "rb") as f:
+            return f.read()
+
+    def _driver_file(self, df, path):
+        csvsink.write_csv(df, path)
+        assert os.listdir(path) == ["part-00000.csv"]
+        with open(os.path.join(path, "part-00000.csv"), "rb") as f:
+            return f.read()
+
+    def test_lines_match_spark_writer(self, spark, tmp_path):
+        df = self._frame(spark)
+        want = self._spark_file(df, str(tmp_path / "spark"))
+        got = self._driver_file(df, str(tmp_path / "driver"))
+        assert got == want
+        # the adversarial values really are in play
+        assert b'""' in got and b"\\" in got and "滑雪".encode() in got
+
+    def test_empty_layer_writes_header(self, spark, tmp_path):
+        df = self._frame(spark).limit(0)
+        got = self._driver_file(df, str(tmp_path / "driver"))
+        assert got == b"id,text,n,other\n"
+        assert self._spark_file(df, str(tmp_path / "spark")) == got
 
 
 class TestGeoPackage:
@@ -261,6 +330,26 @@ class TestMergeOutputs:
         merged_csv = (out / "csv" / "runs" /
                       "part-00000-merged.csv").read_text().splitlines()
         assert merged_csv == ["name,id", "run-a,a", "run-b,b"]
+
+    def test_merge_keeps_csv_field_bytes(self, spark, tmp_path):
+        """Quoted fields holding line breaks other than "\\n" pass through
+        a merge unchanged (no universal newlines, no str.splitlines)."""
+        from openskidata_processor_spark.sinks.merge import merge_outputs
+        runs = fmt.format_runs(raw(spark, [
+            ({"piste:type": "downhill", "description": "a\u2028b\rc"},
+             LINE3D)]))
+        parts = []
+        for tag in ("a", "b"):
+            d = tmp_path / tag / "csv" / "runs"
+            csvsink.write_csv(csvsink.run_csv(runs), str(d))
+            parts.append((d / "part-00000.csv").read_bytes())
+        merge_outputs([str(tmp_path / "a"), str(tmp_path / "b")],
+                      str(tmp_path / "m"))
+        merged = (tmp_path / "m" / "csv" / "runs" /
+                  "part-00000-merged.csv").read_bytes()
+        header, _, rows = parts[0].partition(b"\n")
+        assert "a\u2028b\rc".encode() in rows
+        assert merged == header + b"\n" + rows + rows
 
     def test_merge_csv_header_mismatch(self, tmp_path):
         from openskidata_processor_spark.sinks.merge import merge_outputs
@@ -390,25 +479,13 @@ class TestCSVReferenceVectors:
 
 
     def test_ski_area_vector(self, spark):
-        stats_ddl = (
-            "struct<"
-            "runs: struct<by_activity: map<string, map<string, "
-            "struct<count:bigint, length_in_km:double,"
-            " snowmaking_length_in_km:double,"
-            " snowfarming_length_in_km:double,"
-            " combined_elevation_change:double, min_elevation:double,"
-            " max_elevation:double>>>>,"
-            "lifts: struct<by_type: map<string, struct<count:bigint,"
-            " length_in_km:double, combined_elevation_change:double,"
-            " min_elevation:double, max_elevation:double>>>,"
-            "min_elevation: double, max_elevation: double>")
         schema = ("id string, name string, status string,"
                   " activities array<string>, run_convention string,"
                   " wikidata_id string, websites array<string>,"
                   " places array<struct<iso3166_1:string, iso3166_2:string,"
                   " country:string, region:string, locality:string>>,"
                   " sources array<struct<type:string, id:string>>,"
-                  f" statistics {stats_ddl}, geometry string")
+                  f" statistics {STATS_DDL}, geometry string")
         geom = json.dumps({"type": "Point", "coordinates": [10.0, 20.0]})
         run_measures = lambda n, km: (n, km, 0.0, 0.0, 0.0, 0.0, 0.0)  # noqa: E731
         areas = spark.createDataFrame([(
