@@ -408,25 +408,29 @@ def interior_point_udf(geojson: pd.Series) -> pd.Series:
     return geojson.map(lambda s: json.dumps(central_points(json.loads(s))))
 
 
+def parse_valid_geometry(s: str | None) -> dict[str, Any] | None:
+    """P8 validity check: the parsed geometry when ``s`` is parseable
+    GeoJSON with enough positions for its type and finite coordinates
+    (reference ``GeoTransforms.ts:113-130``), else None."""
+    try:
+        g = json.loads(s)
+        t = g.get("type")
+        pts = list(iter_positions(g))
+        if not pts or any(not all(math.isfinite(v) for v in p[:2]) for p in pts):
+            return None
+        if t == "LineString" and len(pts) < 2:
+            return None
+        if t in ("Polygon", "MultiPolygon") and len(pts) < 4:
+            return None
+        return g
+    except (ValueError, KeyError, TypeError):
+        return None
+
+
 @F.pandas_udf(BooleanType())
 def geometry_valid_udf(geojson: pd.Series) -> pd.Series:
-    """P8 validity filter: parseable GeoJSON with enough positions for its
-    type and finite coordinates (reference ``GeoTransforms.ts:113-130``)."""
-    def ok(s):
-        try:
-            g = json.loads(s)
-            t = g.get("type")
-            pts = list(iter_positions(g))
-            if not pts or any(not all(math.isfinite(v) for v in p[:2]) for p in pts):
-                return False
-            if t == "LineString" and len(pts) < 2:
-                return False
-            if t in ("Polygon", "MultiPolygon") and len(pts) < 4:
-                return False
-            return True
-        except (ValueError, KeyError, TypeError):
-            return False
-    return geojson.map(ok)
+    """P8 validity filter (``parse_valid_geometry``)."""
+    return geojson.map(lambda s: parse_valid_geometry(s) is not None)
 
 
 def iter_paths(geom: dict[str, Any]) -> Iterable[list[list[float]]]:

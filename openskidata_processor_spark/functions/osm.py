@@ -161,12 +161,3 @@ def status_and_value(tags: Column, key: str) -> tuple[Column, Column]:
               .when(pstat.isNotNull(), pval)
               .otherwise(F.lit(None).cast("string")))
     return status, value
-
-
-def websites(tags: Column) -> Column:
-    w = F.array(tag(tags, "website"), tag(tags, "contact:website"))
-    return F.filter(w, lambda v: v.isNotNull())
-
-
-def wikidata_id(tags: Column) -> Column:
-    return tag(tags, "wikidata")

@@ -2,10 +2,12 @@
 
 Input: bronze DataFrames with OSM tag maps (``map<string,string>``) and
 GeoJSON-string geometry (schemas in FIXTURES.md §1).  Output: the typed
-silver layers of FIXTURES.md §2.  Everything except multi-geometry splitting
-and geometry validity is pure Catalyst expressions — the formatters project
-at scan speed with no shuffle, so at 100 TB they are embarrassingly parallel
-map stages whose filters push down to the Parquet scan.
+silver layers of FIXTURES.md §2.  Everything except the geometry kernels
+is Catalyst expressions, and each layer is one pass over its input: one
+scan, with its tag filters pushed down to it, and one Arrow-batched Python
+UDF evaluation (runs: validity + Multi* split; lifts and OSM ski areas:
+validity; spots: centroid).  The only shuffle is J1's window over ``id``
+(``attach_site_ski_areas``); the site membership it joins is broadcast.
 
 Reference parity (semantics, not implementation):
 - formatRun       -> src/transforms/RunFormatter.ts:30-200
@@ -25,12 +27,13 @@ import json
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions import osm
-from ..functions.geometry import centroid_udf, geometry_valid_udf
+from ..functions.geometry import (centroid_udf, geometry_valid_udf,
+                                  parse_valid_geometry)
 from ..functions.hashing import feature_id
 
 # Published openskidata-format enum domains.
@@ -98,9 +101,13 @@ def split_multi_geometry_udf(geojson: pd.Series) -> pd.Series:
     """1→N split of Multi* geometries into canonical single-geometry JSON
     (compact separators, preserved coordinate order) — explode the result.
     Single geometries pass through re-canonicalized, so feature ids hash
-    identical bytes for equal geometries."""
+    identical bytes for equal geometries.  A geometry that fails the P8
+    validity check (``parse_valid_geometry``) splits into no parts, so the
+    explode drops it: runs pay for one Python evaluation, not two."""
     def split(s):
-        g = json.loads(s)
+        g = parse_valid_geometry(s)
+        if g is None:
+            return []
         t = g.get("type")
         if t == "MultiPolygon":
             parts = [{"type": "Polygon", "coordinates": c}
@@ -124,7 +131,8 @@ def format_runs(df: DataFrame) -> DataFrame:
 
     Drops: Point geometry, invalid geometry, no recognized uses, status not
     "operating" (incl. the ``piste:abandoned=yes`` special case).
-    Splits Multi* geometries into one feature per part (shared properties).
+    Splits Multi* geometries into one feature per part (shared properties);
+    the split UDF also drops invalid geometries.
     """
     tags = F.col("tags")
     status, piste_type = osm.status_and_value(tags, "piste:type")
@@ -172,7 +180,6 @@ def format_runs(df: DataFrame) -> DataFrame:
         .filter(geom_type != "Point")
         .filter(F.size(F.col("uses")) > 0)
         .filter(F.col("__status") == "operating")
-        .filter(geometry_valid_udf(F.col("geometry")))
     )
 
     # Tag-derived properties are computed BEFORE the Multi*-split: they
@@ -396,12 +403,13 @@ def format_ski_areas(osm_landuse: DataFrame, sites: DataFrame,
 
 def format_spots(df: DataFrame) -> DataFrame:
     """InputSpotFeature → spot layer (SpotFormatter.ts:30-192): geometry →
-    centroid Point; five independent subtype extractors, unioned — a
-    feature can emit several spots."""
+    centroid Point; five independent subtype extractors — a feature can
+    emit several spots.  Each extractor is a ``when(cond, struct)``
+    candidate; the centroid is computed once per feature with at least
+    one candidate, then the non-null candidates explode into spots."""
     tags = F.col("tags")
-    base = df.withColumn("geometry", centroid_udf(F.col("geometry")))
 
-    def spot(filter_cond: Column, spot_type: str, **extra: Column) -> DataFrame:
+    def spot(cond: Column, spot_type: str, **extra: Column) -> Column:
         cols = {
             "dismount": F.lit(None).cast("string"),
             "name": F.lit(None).cast("string"),
@@ -411,48 +419,49 @@ def format_spots(df: DataFrame) -> DataFrame:
             "exit": F.lit(None).cast("boolean"),
         }
         cols.update(extra)
-        return base.filter(filter_cond).select(
-            feature_id(F.lit("spot"), F.col("geometry")).alias("id"),
-            F.lit("spot").alias("feature_type"),
+        return F.when(cond, F.struct(
             F.lit(spot_type).alias("spot_type"),
-            cols["dismount"].alias("dismount"),
-            cols["name"].alias("name"),
-            cols["lift_id"].alias("lift_id"),
-            cols["position"].alias("position"),
-            cols["entry"].alias("entry"),
-            cols["exit"].alias("exit"),
-            _empty_str_array().alias("ski_areas"),
-            _osm_source(F.col("osm_type"), F.col("osm_id")).alias("sources"),
-            F.col("geometry"),
-        )
+            *(c.alias(k) for k, c in cols.items())))
 
     dismount = osm.tag(tags, "piste:dismount")
-    crossing = spot(dismount.isin("yes", "no", "sometimes"), "crossing",
-                    dismount=dismount)
-
     station_pos = osm.tag(tags, "aerialway:station")
     access = osm.tag(tags, "aerialway:access")
-    lift_station = spot(
-        osm.tag(tags, "aerialway") == "station", "lift_station",
-        name=osm.osm_name(tags, "name"),
-        lift_id=F.lit(""),
-        position=F.when(station_pos.isin("top", "mid", "bottom"), station_pos),
-        entry=(F.when(access.isin("both", "entry"), F.lit(True))
-                .when(access.isin("exit", "no"), F.lit(False))),
-        exit=(F.when(access.isin("both", "exit"), F.lit(True))
-               .when(access.isin("entry", "no"), F.lit(False))),
-    )
-
     amenity = osm.tag(tags, "amenity") == "avalanche_transceiver"
     trans = osm.tag(tags, "avalanche_transceiver")
-    training = spot(amenity & (trans == "training"),
-                    "avalanche_transceiver_training")
-    checkpoint = spot(amenity & (trans == "checkpoint"),
-                      "avalanche_transceiver_checkpoint")
-    halfpipe = spot(osm.tag(tags, "man_made") == "piste:halfpipe", "halfpipe")
+    candidates = F.array(
+        spot(dismount.isin("yes", "no", "sometimes"), "crossing",
+             dismount=dismount),
+        spot(osm.tag(tags, "aerialway") == "station", "lift_station",
+             name=osm.osm_name(tags, "name"),
+             lift_id=F.lit(""),
+             position=F.when(station_pos.isin("top", "mid", "bottom"),
+                             station_pos),
+             entry=(F.when(access.isin("both", "entry"), F.lit(True))
+                     .when(access.isin("exit", "no"), F.lit(False))),
+             exit=(F.when(access.isin("both", "exit"), F.lit(True))
+                    .when(access.isin("entry", "no"), F.lit(False)))),
+        spot(amenity & (trans == "training"), "avalanche_transceiver_training"),
+        spot(amenity & (trans == "checkpoint"),
+             "avalanche_transceiver_checkpoint"),
+        spot(osm.tag(tags, "man_made") == "piste:halfpipe", "halfpipe"),
+    )
 
-    return (crossing.unionByName(lift_station).unionByName(training)
-            .unionByName(checkpoint).unionByName(halfpipe))
+    spots = (
+        df.withColumn("__spots", F.filter(candidates, lambda c: c.isNotNull()))
+        .filter(F.size("__spots") > 0)
+        .withColumn("geometry", centroid_udf(F.col("geometry")))
+        .select("osm_type", "osm_id", "geometry",
+                F.explode("__spots").alias("s"))
+    )
+    return spots.select(
+        feature_id(F.lit("spot"), F.col("geometry")).alias("id"),
+        F.lit("spot").alias("feature_type"),
+        "s.spot_type", "s.dismount", "s.name", "s.lift_id", "s.position",
+        "s.entry", "s.exit",
+        _empty_str_array().alias("ski_areas"),
+        _osm_source(F.col("osm_type"), F.col("osm_id")).alias("sources"),
+        F.col("geometry"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -464,43 +473,41 @@ def attach_site_ski_areas(layer: DataFrame, sites: DataFrame,
     """J1: assign features to ``site=piste`` relation ski areas by OSM
     member id (SkiAreaSiteProvider.ts:38-53).
 
-    ``layer`` has ``sources: array<struct<type,id>>`` with ids like
-    "way/123"; ``sites`` has ``site_id`` + ``members: array<struct<type,
-    ref, role>>``; ``site_ski_areas`` is the formatted site layer (ids are
-    content hashes of the placeholder geometry).  Membership is a broadcast
-    equi-join on the member osm ref — the site table is tiny relative to
-    the feature layers."""
-    site_ids = format_ski_areas_sites(sites).select(
-        F.col("id").alias("__site_feature_id"),
-        # F.get: formatters always emit >= 1 source, but a violated
-        # invariant must surface as a null join-miss, not an ANSI throw
-        F.get(F.col("sources"), 0)["id"].alias("__site_osm_id"))
+    ``layer`` has ``sources: array<struct<type,id>>`` holding exactly one
+    OSM source, with an id like "way/123"; ``sites`` has ``site_id`` +
+    ``members: array<struct<type, ref, role>>``; ``site_ski_areas`` is the
+    formatted site layer, whose source ids ("relation/<site_id>") tie each
+    site feature id (a content hash of the placeholder geometry) to its
+    relation.
 
+    Member OSM id → site feature ids is built once and broadcast-joined on
+    each row's source id; a row with any other source count raises.  Rows
+    sharing an ``id`` (equal type and geometry, e.g. a station that is also
+    a crossing) all get the sorted, distinct union of their site ids — a
+    window over ``id``, so the layer is scanned once."""
+    site_osm_ids = site_ski_areas.select(
+        F.col("id").alias("__site_feature_id"),
+        F.explode("sources.id").alias("__site_osm_id"))
     members = sites.select(
         F.concat_ws("/", F.lit("relation"), F.col("site_id"))
             .alias("__site_osm_id"),
         F.explode("members").alias("m"),
     ).select(
         "__site_osm_id",
-        F.concat_ws("/", F.col("m.type"), F.col("m.ref")).alias("member_osm_id"))
+        F.concat_ws("/", F.col("m.type"), F.col("m.ref")).alias("__osm_id"))
+    membership = (
+        members.join(site_osm_ids, "__site_osm_id")
+        .groupBy("__osm_id")
+        .agg(F.collect_set("__site_feature_id").alias("__site_ids")))
 
-    membership = members.join(F.broadcast(site_ids), "__site_osm_id").select(
-        "member_osm_id", F.col("__site_feature_id").alias("site_feature_id"))
-
-    exploded = layer.withColumn("__src", F.explode("sources")).withColumn(
-        "__osm_id", F.col("__src.id"))
-    assigned = (
-        exploded.join(F.broadcast(membership),
-                      exploded["__osm_id"] == membership["member_osm_id"],
-                      "left")
-        .groupBy("id")
-        .agg(F.array_sort(F.array_distinct(F.filter(
-            F.collect_list("site_feature_id"), lambda v: v.isNotNull())))
-            .alias("__site_ids"))
-    )
-    return (
-        layer.join(assigned, "id", "left")
-        .withColumn("ski_areas",
-                    F.coalesce(F.col("__site_ids"), F.col("ski_areas")))
-        .drop("__site_ids")
-    )
+    sources = F.col("sources")
+    osm_id = F.when(F.size(sources) == 1, F.get(sources, 0)["id"]).otherwise(
+        F.raise_error(F.format_string(
+            "attach_site_ski_areas: feature %s has %s sources, expected 1",
+            F.col("id"), F.size(sources).cast("string"))))
+    site_ids = F.array_sort(F.array_distinct(F.flatten(
+        F.collect_list("__site_ids").over(Window.partitionBy("id")))))
+    joined = layer.withColumn("__osm_id", osm_id).join(
+        F.broadcast(membership), "__osm_id", "left")
+    return joined.select(*(site_ids.alias(c) if c == "ski_areas" else c
+                           for c in layer.columns))

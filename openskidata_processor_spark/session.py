@@ -4,6 +4,14 @@ Local runs use ``local[$SPARK_GRAFT_CPUS]``; at cluster scale the same
 configs apply (AQE, adaptive coalesce, skew-join handling).  The session
 pins the confs output semantics depend on (UTC timezone, ANSI mode) and
 ships the package to the executors so pandas UDFs import from any cwd.
+
+It also turns off PySpark's DataFrame debugging
+(``spark.python.sql.dataFrameDebugging.enabled``), which by default walks
+the Python stack and makes extra JVM round trips on every Column call to
+record its file:line origin; building the formatter plans alone makes
+thousands of such calls.  Errors still raise with their Spark error class
+and query context (the failing expression); only the Python file:line
+origin is left out of them.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ def get_spark(app_name: str = "openskidata-spark", cpus: int | str | None = None
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")

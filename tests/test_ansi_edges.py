@@ -21,6 +21,7 @@ silently again.  Sites covered (the round-5 verdict's list):
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from openskidata_processor_spark.functions import osm
@@ -111,6 +112,23 @@ def test_map_element_at_missing_key_null_safe(spark):
 def test_sessions_pin_ansi(spark):
     # The engine's semantics are tested under ANSI; session.py pins it.
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+def test_ansi_violation_raises_without_call_site_capture(spark):
+    """session.py turns off PySpark's per-Column call-site capture; an ANSI
+    violation inside a formatter-style projection (a tag cast to int, the
+    shape of ``format_lifts``' number columns) must still raise, with its
+    error class and the failing expression as its query context."""
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.createDataFrame([({"aerialway:capacity": "lots"},)],
+                               "tags map<string,string>")
+    with pytest.raises(PySparkException) as err:
+        df.select(osm.tag(F.col("tags"), "aerialway:capacity")
+                  .cast("int").alias("capacity")).collect()
+    assert err.value.getCondition() == "CAST_INVALID_INPUT"
+    assert "'lots'" in str(err.value)
+    assert [c.fragment() for c in err.value.getQueryContext()] == ["cast"]
 
 
 def test_assemble_ways_degenerate_inputs_dont_throw(spark):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, LongType, MapType, StringType,
                                StructField, StructType)
@@ -335,14 +336,21 @@ class TestFormatSpots:
 # J1 site membership join
 # ---------------------------------------------------------------------------
 
+SITE_DDL = ("site_id long, tags map<string,string>, "
+            "members array<struct<type:string, ref:long, role:string>>")
+
+
+def site(spark, *members):
+    """One ``site=piste`` relation (id 100) with (type, ref) members."""
+    return spark.createDataFrame(
+        [(100, {"site": "piste", "name": "Site Resort"},
+          [{"type": t, "ref": ref, "role": ""} for t, ref in members])],
+        SITE_DDL)
+
+
 class TestSiteMembership:
     def test_attach_site_ski_areas(self, spark):
-        sites = spark.createDataFrame(
-            [(100, {"site": "piste", "name": "Site Resort"},
-              [{"type": "way", "ref": 1, "role": ""},
-               {"type": "way", "ref": 3, "role": ""}])],
-            "site_id long, tags map<string,string>, "
-            "members array<struct<type:string, ref:long, role:string>>")
+        sites = site(spark, ("way", 1), ("way", 3))
         runs = fmt.format_runs(raw(spark, [
             ({"piste:type": "downhill"}, LINE),   # osm_id 1 → member
             ({"piste:type": "nordic"},
@@ -355,6 +363,102 @@ class TestSiteMembership:
                fmt.attach_site_ski_areas(runs, sites, site_areas).collect()}
         assert out["way/1"].ski_areas == [site_id]
         assert out["way/2"].ski_areas == []
+
+    def test_uses_the_site_layer_it_is_given(self, spark):
+        # the site feature id comes from ``site_ski_areas``, not from a
+        # fresh format of ``sites``
+        sites = site(spark, ("way", 1))
+        site_areas = fmt.format_ski_areas_sites(sites).withColumn(
+            "id", F.lit("given-site-id"))
+        runs = fmt.format_runs(raw(spark, [({"piste:type": "downhill"}, LINE)]))
+        r = one(fmt.attach_site_ski_areas(runs, sites, site_areas))
+        assert r.ski_areas == ["given-site-id"]
+
+    def test_equal_geometry_rows_share_membership(self, spark):
+        # way/1 and way/2 have the same type and geometry, hence the same
+        # id; only way/1 is a member, and both rows get the site
+        sites = site(spark, ("way", 1))
+        site_areas = fmt.format_ski_areas_sites(sites)
+        site_id = site_areas.collect()[0].id
+        runs = fmt.format_runs(raw(spark, [
+            ({"piste:type": "downhill"}, LINE),
+            ({"piste:type": "nordic"}, LINE)]))
+        rows = fmt.attach_site_ski_areas(runs, sites, site_areas).collect()
+        assert len(rows) == 2 and rows[0].id == rows[1].id
+        assert [r.ski_areas for r in rows] == [[site_id], [site_id]]
+
+    def test_station_crossing_node_keeps_both_spots(self, spark):
+        sites = site(spark, ("node", 7))
+        site_areas = fmt.format_ski_areas_sites(sites)
+        site_id = site_areas.collect()[0].id
+        node = spark.createDataFrame(
+            [("node", 7, {"aerialway": "station", "piste:dismount": "yes"},
+              POINT)], RAW_SCHEMA)
+        rows = fmt.attach_site_ski_areas(
+            fmt.format_spots(node), sites, site_areas).collect()
+        assert sorted(r.spot_type for r in rows) == ["crossing",
+                                                     "lift_station"]
+        assert [r.ski_areas for r in rows] == [[site_id], [site_id]]
+
+    def test_feature_without_one_source_raises(self, spark):
+        sites = site(spark, ("way", 1))
+        runs = fmt.format_runs(raw(spark, [({"piste:type": "downhill"}, LINE)]))
+        two_sources = runs.withColumn(
+            "sources", F.concat(F.col("sources"), F.col("sources")))
+        with pytest.raises(PySparkException, match="has 2 sources"):
+            fmt.attach_site_ski_areas(
+                two_sources, sites, fmt.format_ski_areas_sites(sites)).collect()
+
+
+class TestOnePassPlans:
+    """Each formatted layer reads its input once and evaluates its one
+    Python geometry UDF once (runs: validity + split; lifts and OSM ski
+    areas: validity; spots: centroid)."""
+
+    def test_one_scan_and_one_udf_evaluation_per_layer(self, spark, tmp_path):
+        multi = json.dumps({"type": "MultiLineString", "coordinates": [
+            [[11.1, 47.5], [11.2, 47.6]], [[11.3, 47.5], [11.4, 47.6]]]})
+        inputs = {
+            "runs_raw": [({"piste:type": "downhill"}, LINE),
+                         ({"piste:type": "nordic"}, multi)],
+            "lifts_raw": [({"aerialway": "chair_lift"}, LINE)],
+            "spots_raw": [({"aerialway": "station", "piste:dismount": "yes"},
+                           POINT),
+                          ({"man_made": "piste:halfpipe"}, POLY)],
+            "ski_areas_raw": [({"landuse": "winter_sports"}, POLY)],
+        }
+        read = {}
+        for name, rows in inputs.items():
+            raw(spark, rows).write.parquet(str(tmp_path / name))
+            read[name] = spark.read.parquet(str(tmp_path / name))
+        site(spark, ("way", 1)).write.parquet(str(tmp_path / "sites"))
+        sites = spark.read.parquet(str(tmp_path / "sites"))
+        skimap = spark.createDataFrame(
+            [], "id string, name string, status string, "
+            "activities array<string>, scalerank int, "
+            "official_website string, geometry string")
+        site_areas = fmt.format_ski_areas_sites(sites)
+        layers = {
+            "runs_raw": fmt.attach_site_ski_areas(
+                fmt.format_runs(read["runs_raw"]), sites, site_areas),
+            "lifts_raw": fmt.attach_site_ski_areas(
+                fmt.format_lifts(read["lifts_raw"]), sites, site_areas),
+            "spots_raw": fmt.attach_site_ski_areas(
+                fmt.format_spots(read["spots_raw"]), sites, site_areas),
+            "ski_areas_raw": fmt.format_ski_areas(
+                read["ski_areas_raw"], sites, skimap),
+        }
+        counts = {}
+        for name, df in layers.items():
+            assert df.collect()
+            # AQE prints the final plan, then the initial one
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            final = plan.split("Initial Plan")[0]
+            # the layer's own input is the one scan that reads osm_type
+            scans = final.count("ReadSchema: struct<osm_type:")
+            counts[name] = (final.count("ArrowEvalPython"), scans)
+        # (ArrowEvalPython nodes, input scans) per layer
+        assert counts == {name: (1, 1) for name in inputs}
 
 
 class TestStatusResolution:
