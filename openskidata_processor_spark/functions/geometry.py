@@ -21,7 +21,8 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, StringType
+from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, StringType,
+                               StructField, StructType)
 
 EARTH_RADIUS_KM = 6371.0
 KM_PER_DEG_LAT = 111.32
@@ -379,11 +380,6 @@ def covering_cells(geom: dict[str, Any], cell_deg: float) -> list[tuple[int, int
 # pandas-UDF bindings (Arrow-batched)
 # ---------------------------------------------------------------------------
 
-@F.pandas_udf(DoubleType())
-def geometry_length_km_udf(geojson: pd.Series) -> pd.Series:
-    return geojson.map(lambda s: geometry_length_km(json.loads(s)))
-
-
 @F.pandas_udf(StringType())
 def centroid_udf(geojson: pd.Series) -> pd.Series:
     return geojson.map(lambda s: json.dumps(
@@ -526,33 +522,15 @@ def representative_point(geoms: list[dict[str, Any]]) -> list[float]:
     return [c[0] + (nearest[0] - c[0]) * f, c[1] + (nearest[1] - c[1]) * f]
 
 
-from pyspark.sql.types import ArrayType, StructField, StructType  # noqa: E402
-
-_ELEV_STATS_TYPE = StructType([
-    StructField("elevation_change", DoubleType()),
-    StructField("min_elevation", DoubleType()),
-    StructField("max_elevation", DoubleType()),
-])
-
-
-@F.pandas_udf(_ELEV_STATS_TYPE)
-def elevation_stats_udf(geojson: pd.Series) -> pd.DataFrame:
-    """Per-feature elevation stats from 3D LineStrings
+def elevation_stats(geom: dict[str, Any]) -> tuple:
+    """(elevation change, min, max) of a 3D LineString
     (SkiAreaStatistics.ts:94-108); nulls when the geometry has no
     elevation data."""
-    import numpy as np
-
-    rows = []
-    for s in geojson:
-        g = json.loads(s)
-        if g.get("type") != "LineString" or not g["coordinates"] \
-                or len(g["coordinates"][0]) < 3:
-            rows.append((None, None, None))
-            continue
-        zs = [c[2] for c in g["coordinates"]]
-        rows.append((zs[-1] - zs[0], min(zs), max(zs)))
-    return pd.DataFrame(rows, columns=["elevation_change", "min_elevation",
-                                       "max_elevation"])
+    if geom.get("type") != "LineString" or not geom["coordinates"] \
+            or len(geom["coordinates"][0]) < 3:
+        return None, None, None
+    zs = [float(c[2]) for c in geom["coordinates"]]
+    return zs[-1] - zs[0], min(zs), max(zs)
 
 
 _ELEV_METRICS_TYPE = StructType([

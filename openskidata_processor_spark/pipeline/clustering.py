@@ -28,12 +28,15 @@ and runs in three steps:
 2. one ``connected_components`` call over those pairs, the object → site
    ski-area membership edges and a self-loop per vertex gives every object
    and ski area its region;
-3. one ``groupBy(region).applyInPandas`` runs passes 1–8 and the pass 9/10
-   clean-up as plain Python over the region's rows (``cluster_region``).
-   The per-seed recursion (visitObject, :705-779) becomes per-activity
-   union-find over the region's pair lists, so a region costs O(pairs).
+3. one ``groupBy(region).applyInPandas`` runs passes 1–10 as plain Python
+   over the region's rows (``cluster_region``), the A2 statistics of pass
+   9 included (``statistics.ski_area_statistics``: a ski area's members
+   all lie in its region).  The per-seed recursion (visitObject,
+   :705-779) becomes per-activity union-find over the region's pair
+   lists, so a region costs O(pairs).
 
-Statistics (pass 9) and the write-back to the layers stay DataFrame joins.
+The write-back of memberships and stations to the layers stays DataFrame
+joins.
 
 Documented deviations from the sequential reference (the integration
 suite's scenarios still hold): contested transitive claims resolve to the
@@ -55,14 +58,14 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BooleanType, DoubleType, LongType,
+from pyspark.sql.types import (BooleanType, DataType, DoubleType, LongType,
                                StringType, StructField, StructType)
 
 from ..functions import geometry as geo
 from ..operators.barrier import truncate_lineage
 from ..operators.graph import connected_components
 from .formatters import STATION_ARRAY_DDL
-from .statistics import ski_area_statistics
+from .statistics import STATISTICS_DDL, ski_area_statistics
 
 MAX_DISTANCE_KM = 0.5       # SkiAreaClusteringService.ts:66
 MERGE_DISTANCE_KM = 0.25    # :826
@@ -82,7 +85,7 @@ SKI_AREA_COLUMNS = (
 STATION_COLUMNS = ("associated_lift_id", "inferred_position")
 WALK_COLUMNS = (("kind",) + OBJECT_COLUMNS + STATION_COLUMNS
                 + tuple(c for c in SKI_AREA_COLUMNS if c not in OBJECT_COLUMNS)
-                + ("n_members",))
+                + ("n_members", "statistics"))
 
 
 def _act_array(*acts: str) -> Column:
@@ -594,14 +597,22 @@ class _Region:
         self.objs = kept
 
     def finish(self) -> None:
-        """Passes 9/10: count members; OSM ski areas without members
-        (:1192-1197) and placeholder geometries (:1244-1271) go; other
-        non-polygon areas move to the members' representative point (A5)."""
+        """Passes 9/10: count members and add A2 statistics (null without a
+        counted run or lift); OSM ski areas without members (:1192-1197)
+        and placeholder geometries (:1244-1271) go; other non-polygon areas
+        move to the members' representative point (A5)."""
         members = self.members()
+        # the working table keeps no lift status: every lift object
+        # counts as operating
+        stats = ski_area_statistics(
+            [o for o in self.objs if o["obj_type"] == "run"],
+            [{**o, "status": "operating"} for o in self.objs
+             if o["obj_type"] == "lift"])
         kept = []
         for s in self.sas:
             ms = members[s["id"]]
             s["n_members"] = len(ms)
+            s["statistics"] = stats.get(s["id"])
             if not ms and s["source"] in (None, "openstreetmap"):
                 continue
             if _placeholder(s["geometry"]):
@@ -624,8 +635,9 @@ def cluster_region(objects, ski_areas, pairs) -> tuple[list, list]:
     and ``pairs`` the region's ``(a, b, distance_km, covered)`` rows of
     ``proximity_pairs``.  Returns ``(objects, ski_areas)``: the objects
     that stay, with ``associated_lift_id`` and ``inferred_position`` added,
-    and the ski areas that stay, with ``n_members`` added.  Rows are walked
-    in id order, so the result does not depend on input order."""
+    and the ski areas that stay, with ``n_members`` and ``statistics``
+    added.  Rows are walked in id order, so the result does not depend on
+    input order."""
     region = _Region(objects, ski_areas, pairs)
     region.site_geometry()
     region.polygon_claims()
@@ -725,21 +737,15 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
             .withColumnRenamed("component", "region"))
     types = {f.name: f.dataType for f in (*objs.schema, *sas.schema)}
     types.update(kind=StringType(), associated_lift_id=StringType(),
-                 inferred_position=StringType(), n_members=LongType())
+                 inferred_position=StringType(), n_members=LongType(),
+                 statistics=DataType.fromDDL(STATISTICS_DDL))
     walked = truncate_lineage(rows.groupBy("region").applyInPandas(
         _walk_group, StructType([StructField(c, types[c])
                                  for c in WALK_COLUMNS])))
     objs = (walked.filter(F.col("kind") == "object")
             .select(*OBJECT_COLUMNS, *STATION_COLUMNS))
     sas = (walked.filter(F.col("kind") == "ski_area")
-           .select(*SKI_AREA_COLUMNS, "n_members"))
-
-    stats = ski_area_statistics(
-        objs.filter(F.col("obj_type") == "run"),
-        objs.filter(F.col("obj_type") == "lift")
-            .withColumn("status", F.lit("operating")))
-    sas = (sas.join(stats, sas["id"] == stats["ski_area_id"], "left")
-           .drop("ski_area_id"))
+           .select(*SKI_AREA_COLUMNS, "n_members", "statistics"))
 
     # write memberships back to the layers
     def apply_membership(layer: DataFrame) -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geometry import interior_point_udf
-from ..sinks.csv import run_color
+from ..sinks.csv import run_color, ski_area_figures
 from ..sinks.geojson import feature_expr
 
 # colorName → rendered HSL value (runColorNameToValue).
@@ -143,34 +143,13 @@ def ski_area_columns(ski_areas: DataFrame) -> tuple[None, dict[str, Column]]:
     short = F.when(
         name.isNotNull() & (F.length(name) > 20),
         F.trim(F.split(name, r"\(")[0])).otherwise(name)
-    has_stats = "statistics" in ski_areas.columns
-    stats = F.col("statistics") if has_stats else F.lit(None)
-
-    def act_distance(act: str) -> Column:
-        if not has_stats:
-            return F.lit(None).cast("long")
-        by_diff = F.element_at(stats["runs"]["by_activity"], act)
-        total = F.aggregate(F.map_values(by_diff),
-                            F.lit(0.0), lambda a, x: a + x["length_in_km"])
-        return F.when(by_diff.isNotNull(),
-                      F.round(total, 0).cast("long"))
-
-    if has_stats:
-        max_elev = F.when(stats["max_elevation"] != 0,
-                          F.round(stats["max_elevation"], 0).cast("long"))
-        vertical = F.when(
-            (stats["max_elevation"] != 0) & (stats["min_elevation"] != 0),
-            F.round(stats["max_elevation"] - stats["min_elevation"], 0)
-             .cast("long"))
-    else:
-        max_elev = vertical = F.lit(None).cast("long")
-
+    figures = ski_area_figures(ski_areas)
     return None, {
         "id": F.col("id"), "name": short, "status": F.col("status"),
-        "downhillDistance": act_distance("downhill"),
-        "nordicDistance": act_distance("nordic"),
-        "maxElevation": max_elev,
-        "vertical": vertical,
+        "downhillDistance": figures["downhill_distance_km"],
+        "nordicDistance": figures["nordic_distance_km"],
+        "maxElevation": figures["max_elevation_m"],
+        "vertical": figures["vertical_m"],
         "has_downhill": F.array_contains("activities", "downhill"),
         "has_nordic": F.array_contains("activities", "nordic"),
         "geometry": F.when(is_poly, interior_point_udf("geometry"))

@@ -20,6 +20,7 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from ..functions.geometry import centroid_udf, elevation_metrics_udf
 from .export import SkiAreaRefs, write_layer
@@ -65,7 +66,9 @@ _COLOR = {
 SURFACE_LIFT_TYPES = ("t-bar", "j-bar", "platter", "rope_tow", "drag_lift",
                       "magic_carpet")
 
-
+# code fields of the reference Geocoder's nested place struct
+_NESTED_PLACE_CODES = {"iso3166_1": "iso3166_1Alpha2",
+                       "iso3166_2": "iso3166_2"}
 
 
 def run_color(convention: Column, difficulty: Column) -> Column:
@@ -77,27 +80,38 @@ def run_color(convention: Column, difficulty: Column) -> Column:
     return expr
 
 
-def _place_rollup(df: DataFrame, field: str) -> Column:
-    """Sorted-unique ';'-joined place names (CSVFormatter.ts:338-355).
+def place_values(df: DataFrame, field: str) -> Column | None:
+    """``field`` of each of ``df``'s places: a name (``country``,
+    ``region``, ``locality``) or a code (``iso3166_1``, ``iso3166_2``);
+    ``None`` when ``df`` has no places.
 
     Supports both place shapes: the engine's flat
-    ``{country, region, locality}`` and the reference Geocoder's nested
-    ``{iso3166_1Alpha2, iso3166_2, localized: {en: {country, region,
-    locality}}}`` (Geocoder.ts:45-55) — chosen by schema inspection, so
-    the projection stays a static Catalyst expression."""
+    ``{iso3166_1, iso3166_2, country, region, locality}`` and the
+    reference Geocoder's nested ``{iso3166_1Alpha2, iso3166_2, localized:
+    {en: {country, region, locality}}}`` (Geocoder.ts:45-55) — chosen by
+    schema inspection, so the projection stays a static Catalyst
+    expression."""
     if "places" not in df.columns:
-        return F.lit("")
-    from pyspark.sql.types import ArrayType, StructType
-
+        return None
     elem = df.schema["places"].dataType
     nested = (isinstance(elem, ArrayType)
               and isinstance(elem.elementType, StructType)
               and "localized" in elem.elementType.fieldNames())
-    getter = ((lambda p: p["localized"]["en"][field]) if nested
-              else (lambda p: p[field]))
-    vals = F.filter(F.transform(F.col("places"), getter),
-                    lambda v: v.isNotNull())
-    return F.concat_ws(";", F.array_sort(F.array_distinct(vals)))
+    if not nested:
+        return F.transform("places", lambda p: p[field])
+    if field in _NESTED_PLACE_CODES:
+        return F.transform("places", lambda p: p[_NESTED_PLACE_CODES[field]])
+    return F.transform("places", lambda p: p["localized"]["en"][field])
+
+
+def _place_rollup(df: DataFrame, field: str) -> Column:
+    """Sorted-unique ';'-joined place names, "" without places
+    (CSVFormatter.ts:338-355)."""
+    vals = place_values(df, field)
+    if vals is None:
+        return F.lit("")
+    return F.concat_ws(";", F.array_sort(F.array_distinct(
+        F.filter(vals, lambda v: v.isNotNull()))))
 
 
 def _common(df: DataFrame):
@@ -225,9 +239,30 @@ def lift_fields(lifts: DataFrame, refs: SkiAreaRefs | None) -> list[Column]:
     ])
 
 
-def _empty_map(value_ddl: str) -> Column:
-    return F.map_from_arrays(F.array().cast("array<string>"),
-                             F.array().cast(f"array<{value_ddl}>"))
+def ski_area_figures(ski_areas: DataFrame) -> dict[str, Column]:
+    """The figures the CSV and Mapbox exports derive from the A2
+    statistics struct (CSVFormatter.ts:263-283): run distance per activity
+    in whole km, empty when the activity is absent; vertical, min and max
+    elevation in whole metres (Math.round), empty on a zero elevation.
+    All null without a ``statistics`` column."""
+    names = ("downhill_distance_km", "nordic_distance_km", "vertical_m",
+             "min_elevation_m", "max_elevation_m")
+    if "statistics" not in ski_areas.columns:
+        return dict.fromkeys(names, F.lit(None).cast("long"))
+    stats = F.col("statistics")
+
+    def distance(act: str) -> Column:
+        by_diff = F.element_at(stats["runs"]["by_activity"], act)
+        total = F.aggregate(F.map_values(by_diff), F.lit(0.0),
+                            lambda acc, x: acc + x["length_in_km"])
+        return F.when(by_diff.isNotNull(), F.round(total, 0).cast("long"))
+
+    low, high = stats["min_elevation"], stats["max_elevation"]
+    return dict(zip(names, (
+        distance("downhill"), distance("nordic"),
+        F.when((high != 0) & (low != 0), F.round(high - low, 0).cast("long")),
+        F.when(low != 0, F.round(low, 0).cast("long")),
+        F.when(high != 0, F.round(high, 0).cast("long")))))
 
 
 def ski_area_fields(ski_areas: DataFrame,
@@ -238,26 +273,9 @@ def ski_area_fields(ski_areas: DataFrame,
     CSVFormatter.ts:379-408).  Ski areas name no ski areas, so ``refs``
     is unused."""
     c = _common(ski_areas)
-    stats = F.col("statistics")
-
-    def act_distance(act: str) -> Column:
-        by_diff = F.element_at(stats["runs"]["by_activity"], act)
-        total = F.aggregate(
-            F.map_values(F.coalesce(by_diff, _empty_map(
-                "struct<count:bigint,length_in_km:double,"
-                "snowmaking_length_in_km:double,"
-                "snowfarming_length_in_km:double,"
-                "combined_elevation_change:double,"
-                "min_elevation:double,max_elevation:double>"))),
-            F.lit(0.0), lambda acc, x: acc + x["length_in_km"])
-        # Math.round integer, empty when the activity is absent
-        # (CSVFormatter.ts:263-273)
-        return F.when(by_diff.isNotNull(), F.round(total, 0).cast("long"))
-
-    by_type = F.coalesce(stats["lifts"]["by_type"], _empty_map(
-        "struct<count:bigint,length_in_km:double,"
-        "combined_elevation_change:double,"
-        "min_elevation:double,max_elevation:double>"))
+    figures = ski_area_figures(ski_areas)
+    # a ski area without lift statistics counts null lifts: empty fields
+    by_type = F.col("statistics")["lifts"]["by_type"]
     n_lifts = F.aggregate(F.map_values(by_type), F.lit(0).cast("long"),
                           lambda acc, x: acc + x["count"])
     n_surface = F.aggregate(
@@ -265,7 +283,6 @@ def ski_area_fields(ski_areas: DataFrame,
         lambda acc, e: acc + F.when(
             e["key"].isin(*SURFACE_LIFT_TYPES), e["value"]["count"])
             .otherwise(F.lit(0).cast("long")))
-    vertical = stats["max_elevation"] - stats["min_elevation"]
 
     return _fields(SKI_AREA_HEADERS, [
         F.col("name"),
@@ -273,15 +290,10 @@ def ski_area_fields(ski_areas: DataFrame,
         F.col("status"),
         _bool(F.array_contains("activities", "downhill")),
         _bool(F.array_contains("activities", "nordic")),
-        act_distance("downhill"), act_distance("nordic"),
-        # Math.round integers, empty on falsy elevations / zero counts
-        # (CSVFormatter.ts:274-283)
-        F.when((stats["max_elevation"] != 0) & (stats["min_elevation"] != 0),
-               F.round(vertical, 0).cast("long")),
-        F.when(stats["min_elevation"] != 0,
-               F.round(stats["min_elevation"], 0).cast("long")),
-        F.when(stats["max_elevation"] != 0,
-               F.round(stats["max_elevation"], 0).cast("long")),
+        figures["downhill_distance_km"], figures["nordic_distance_km"],
+        figures["vertical_m"], figures["min_elevation_m"],
+        figures["max_elevation_m"],
+        # empty on zero counts (CSVFormatter.ts:274-283)
         F.when(n_lifts > 0, n_lifts),
         F.when(n_surface > 0, n_surface),
         F.col("run_convention"), F.col("wikidata_id"),

@@ -37,9 +37,9 @@ from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
 
 from ..functions.geometry import centroid as geom_centroid
+from .csv import place_values
 from .export import SkiAreaRefs, write_layer
 
 _WKB_TYPE = {"Point": 1, "LineString": 2, "Polygon": 3,
@@ -138,31 +138,26 @@ def _join_or_null(vals: Column, sep: str) -> Column:
     return F.when(joined != "", joined)
 
 
-def _place_field(df: DataFrame, code_field: str, name_field: str):
-    """Accessors for both place shapes (flat engine struct vs the nested
-    reference Geocoder struct) — mirrors csv._place_rollup."""
-    if "places" not in df.columns:
-        return F.lit(None).cast("string"), F.lit(None).cast("string")
-    elem = df.schema["places"].dataType
-    nested = (isinstance(elem, ArrayType)
-              and isinstance(elem.elementType, StructType)
-              and "localized" in elem.elementType.fieldNames())
-    if nested:
-        code_field = {"iso3166_1": "iso3166_1Alpha2",
-                      "iso3166_2": "iso3166_2"}[code_field]
-        codes = F.transform("places", lambda p: p[code_field])
-        names = F.transform("places",
-                            lambda p: p["localized"]["en"][name_field])
-    else:
-        codes = F.transform("places", lambda p: p[code_field])
-        names = F.transform("places", lambda p: p[name_field])
-    return _join_or_null(codes, ";"), _join_or_null(names, ";")
+def _places(df: DataFrame, field: str) -> Column:
+    """``field`` of the feature's places (``csv.place_values``),
+    ';'-joined sorted-unique, null when empty or without places."""
+    vals = place_values(df, field)
+    if vals is None:
+        return F.lit(None).cast("string")
+    return _join_or_null(vals, ";")
+
+
+def _place_cols(df: DataFrame) -> dict[str, tuple[Column, str]]:
+    return {
+        "country_codes": (_places(df, "iso3166_1"), "TEXT"),
+        "region_codes": (_places(df, "iso3166_2"), "TEXT"),
+        "countries": (_places(df, "country"), "TEXT"),
+        "regions": (_places(df, "region"), "TEXT"),
+        "localities": (_places(df, "locality"), "TEXT"),
+    }
 
 
 def _common_cols(df: DataFrame) -> dict[str, tuple[Column, str]]:
-    country_codes, countries = _place_field(df, "iso3166_1", "country")
-    region_codes, regions = _place_field(df, "iso3166_2", "region")
-    _, localities = _place_field(df, "iso3166_1", "locality")
     return {
         "feature_id": (F.col("id"), "TEXT"),
         "name": (_opt(df, "name"), "TEXT"),
@@ -172,11 +167,7 @@ def _common_cols(df: DataFrame) -> dict[str, tuple[Column, str]]:
         "websites": (F.to_json("websites") if "websites" in df.columns
                      else F.lit(None).cast("string"), "TEXT"),
         "wikidata_id": (_opt(df, "wikidata_id"), "TEXT"),
-        "country_codes": (country_codes, "TEXT"),
-        "region_codes": (region_codes, "TEXT"),
-        "countries": (countries, "TEXT"),
-        "regions": (regions, "TEXT"),
-        "localities": (localities, "TEXT"),
+        **_place_cols(df),
     }
 
 
@@ -257,9 +248,6 @@ def gpkg_columns(df: DataFrame, feature_type: str,
     elif feature_type == "spot":
         is_crossing = _opt(df, "spot_type") == "crossing"
         is_station = _opt(df, "spot_type") == "lift_station"
-        country_codes, countries = _place_field(df, "iso3166_1", "country")
-        region_codes, regions = _place_field(df, "iso3166_2", "region")
-        _, localities = _place_field(df, "iso3166_1", "locality")
         cols = {
             "feature_id": (F.col("id"), "TEXT"),
             "spot_type": (_opt(df, "spot_type"), "TEXT"),
@@ -267,11 +255,7 @@ def gpkg_columns(df: DataFrame, feature_type: str,
                         else F.lit(None).cast("string"), "TEXT"),
             "ski_area_ids": (sa_ids, "TEXT"),
             "ski_area_names": (sa_names, "TEXT"),
-            "country_codes": (country_codes, "TEXT"),
-            "region_codes": (region_codes, "TEXT"),
-            "countries": (countries, "TEXT"),
-            "regions": (regions, "TEXT"),
-            "localities": (localities, "TEXT"),
+            **_place_cols(df),
             # per-subtype columns gated exactly as the reference (:439-465)
             "dismount": (F.when(is_crossing, _opt(df, "dismount")), "TEXT"),
             "name": (F.when(is_station, _opt(df, "name")), "TEXT"),

@@ -8,9 +8,11 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from openskidata_processor_spark.pipeline import formatters as fmt
 from openskidata_processor_spark.pipeline.clustering import cluster_ski_areas
+from openskidata_processor_spark.pipeline.statistics import STATISTICS_DDL
 from test_formatters import raw
 
 
@@ -321,9 +323,13 @@ def cluster_inputs(spark):
 
 
 @pytest.fixture(scope="module")
-def clustered(cluster_inputs):
-    out = cluster_ski_areas(*cluster_inputs)
-    return {k: v.collect() for k, v in out.items()}
+def clustered_frames(cluster_inputs):
+    return cluster_ski_areas(*cluster_inputs)
+
+
+@pytest.fixture(scope="module")
+def clustered(clustered_frames):
+    return {k: v.collect() for k, v in clustered_frames.items()}
 
 
 def sa_by_name(rows, name):
@@ -384,6 +390,12 @@ class TestPolygonAssignment:
         assert easy["count"] == 1
         assert easy["length_in_km"] > 0.1
         assert stats["lifts"]["by_type"]["t-bar"]["count"] == 1
+
+    def test_statistics_type(self, clustered_frames):
+        """The walk emits ``statistics`` typed by the one DDL of A2."""
+        schema = clustered_frames["ski_areas"].schema
+        assert schema["statistics"].dataType == DataType.fromDDL(
+            STATISTICS_DDL)
 
 
 class TestTransitiveExpansion:

@@ -25,12 +25,23 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+_QUERY_PLANS: dict[str, str] = {}
+
+
+def _query_plan(spark, name: str) -> str:
+    """The executed plan of catalog query ``name``, built and planned once
+    per session: the plan audits below read the same plans."""
+    if name not in _QUERY_PLANS:
+        _QUERY_PLANS[name] = _plan(QUERIES[name](spark, SF_SMOKE))
+    return _QUERY_PLANS[name]
+
+
 @pytest.mark.parametrize("name", _BATCH_QUERIES)
 def test_no_row_at_a_time_python(spark, name):
     """No catalog query may plan a row-at-a-time Python UDF
     (BatchEvalPython).  Python is allowed only Arrow-batched
     (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)."""
-    plan = _plan(QUERIES[name](spark, SF_SMOKE))
+    plan = _query_plan(spark, name)
     assert "BatchEvalPython" not in plan, (
         f"{name} plans a row-at-a-time Python UDF")
 
@@ -38,7 +49,7 @@ def test_no_row_at_a_time_python(spark, name):
 def test_projection_reaches_scan(spark):
     """Column pruning: a query touching 2 of part's 6 columns must scan
     exactly those (ReadSchema at the parquet scan)."""
-    plan = _plan(QUERIES["r1_mercator_tiles"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "r1_mercator_tiles")
     assert "ReadSchema" in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "p_partkey" in read_schema
@@ -63,7 +74,7 @@ def test_dimension_joins_broadcast(spark):
     shuffle/sort-merge (j1: the `sites` dim side; knn: the query side;
     bm25: the exploded query-term side onto the posting list)."""
     for name in ("j1_membership_rollup", "knn_cosine", "bm25_topk_docs"):
-        plan = _plan(QUERIES[name](spark, SF_SMOKE))
+        plan = _query_plan(spark, name)
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, name
 
 
@@ -88,7 +99,7 @@ def test_no_cartesian_outside_oracle_twins(spark):
     for name in _BATCH_QUERIES:
         if name in allowed:
             continue
-        plan = _plan(QUERIES[name](spark, SF_SMOKE))
+        plan = _query_plan(spark, name)
         assert "CartesianProduct" not in plan, (
             f"{name} plans a cartesian product")
 
@@ -96,7 +107,7 @@ def test_no_cartesian_outside_oracle_twins(spark):
 def test_winnow_scan_prunes_to_id_and_text(spark):
     """The winnowing posting derives from doc_id+text only; the parquet
     scan must not read the other document columns."""
-    plan = _plan(QUERIES["winnow_fingerprint_pairs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "winnow_fingerprint_pairs")
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "doc_id" in read_schema and "text" in read_schema
     for unused in ("source", "lang", "n_chars"):
@@ -123,7 +134,7 @@ def test_webcorpus_scan_pruning_and_shuffle_budget(spark):
             ("html_extract_text", {"doc_id", "text"}, 0),
             ("mojibake_stats", {"doc_id", "text"}, 0),
             ("url_canonical_stats", {"doc_id"}, 2)):
-        plan = _plan(QUERIES[name](spark, SF_SMOKE))
+        plan = _query_plan(spark, name)
         read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
         for unused in {"source", "lang", "n_chars", "text"} - cols:
             assert unused not in read_schema, (
@@ -137,8 +148,8 @@ def test_profile_sketch_has_no_expand(spark):
     """The HLL profile twin must aggregate in one pass: the exact
     profile pays a 4x Expand for its countDistincts; the sketch twin
     must not — that's its entire reason to exist at 100 TB."""
-    exact = _plan(QUERIES["profile_table_stats"](spark, SF_SMOKE))
-    sketch = _plan(QUERIES["profile_table_sketch"](spark, SF_SMOKE))
+    exact = _query_plan(spark, "profile_table_stats")
+    sketch = _query_plan(spark, "profile_table_sketch")
     assert "Expand" in exact          # the multiplier the twin removes
     assert "Expand" not in sketch
     assert sketch.count("Exchange hashpartitioning") == 0
@@ -150,10 +161,10 @@ def test_blocklist_in_row_and_script_stays_per_row(spark):
     exchanges, zero joins — the corpus is never moved for a
     broadcast-sized term list.  script_stats is likewise a pure per-row
     chain — zero exchanges."""
-    plan = _plan(QUERIES["blocklist_filter_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "blocklist_filter_docs")
     assert "Exchange" not in plan, plan
     assert "Join" not in plan, plan
-    plan2 = _plan(QUERIES["script_stats"](spark, SF_SMOKE))
+    plan2 = _query_plan(spark, "script_stats")
     assert plan2.count("Exchange hashpartitioning") == 0
 
 
@@ -166,7 +177,7 @@ def test_bpe_pair_stats_runs_on_vocab_not_corpus(spark):
     vocab subtree and would replace the word exchange with an
     InMemoryTableScan in a shared session.)"""
     spark.catalog.clearCache()
-    plan = _plan(QUERIES["bpe_pair_stats"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "bpe_pair_stats")
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert "TakeOrderedAndProject" in plan
     assert "ReadSchema: struct<text:string>" in plan
@@ -177,7 +188,7 @@ def test_unigram_seed_runs_on_vocab_not_corpus(spark):
     word aggregate (vocab frame): exactly two exchanges (word groupBy,
     piece groupBy) and a TakeOrdered top-K, scan pruned to text."""
     spark.catalog.clearCache()
-    plan = _plan(QUERIES["unigram_seed_pieces"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "unigram_seed_pieces")
     assert plan.count("Exchange hashpartitioning") == 2, plan
     assert "TakeOrderedAndProject" in plan
     assert "ReadSchema: struct<text:string>" in plan
@@ -187,7 +198,7 @@ def test_unigram_encode_segments_vocab_not_corpus(spark):
     """unigram_encode_stats: the Viterbi UDF must be Arrow-batched
     (never BatchEvalPython) and run over the vocab frame — the corpus
     pre-aggregates to (source, word, cnt) before any join."""
-    plan = _plan(QUERIES["unigram_encode_stats"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "unigram_encode_stats")
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan
 
@@ -196,7 +207,7 @@ def test_wordpiece_learn_is_one_grouped_task(spark):
     """wordpiece_learn_vocab: corpus→vocab collapse, then exactly ONE
     grouped-pandas task running the incremental indexed-heap merge loop
     — no per-merge jobs, no row-at-a-time Python, text-pruned scan."""
-    plan = _plan(QUERIES["wordpiece_learn_vocab"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "wordpiece_learn_vocab")
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert "BatchEvalPython" not in plan
     assert "ReadSchema: struct<text:string>" in plan
@@ -205,7 +216,7 @@ def test_wordpiece_learn_is_one_grouped_task(spark):
 def test_wordpiece_encode_is_arrow_batched(spark):
     """wordpiece_encode_stats: the longest-match encoder must be
     Arrow-batched over the vocab frame, never row-at-a-time."""
-    plan = _plan(QUERIES["wordpiece_encode_stats"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "wordpiece_encode_stats")
     assert "ArrowEvalPython" in plan, plan
     assert "BatchEvalPython" not in plan
 
@@ -215,7 +226,7 @@ def test_bpe_learn_deep_is_one_grouped_task(spark):
     groupBy with map-side combine), then exactly ONE grouped-pandas
     task running the whole indexed-heap merge loop — no per-merge jobs,
     no row-at-a-time Python, scan pruned to the text column."""
-    plan = _plan(QUERIES["bpe_learn_deep"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "bpe_learn_deep")
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert "BatchEvalPython" not in plan
     assert "ReadSchema: struct<text:string>" in plan
@@ -229,7 +240,7 @@ def test_kn_score_broadcasts_global_and_reuses_tables(spark):
     frame + bigram table flow through checkpoint barriers (Scan
     ExistingRDD) so the documents scan runs once, not once per
     consumer."""
-    plan = _plan(QUERIES["kn_score_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "kn_score_docs")
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 3, plan
     assert "BatchEvalPython" not in plan
@@ -241,7 +252,7 @@ def test_gopher_quality_is_one_codegen_pass(spark):
     """gopher_quality_docs: per-row integer rule arithmetic + one
     source rollup — no joins, no exchanges beyond the final group, no
     Python eval, scan pruned to (text, source)."""
-    plan = _plan(QUERIES["gopher_quality_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "gopher_quality_docs")
     assert "Join" not in plan, plan
     assert plan.count("Exchange") <= 1, plan
     assert "BatchEvalPython" not in plan
@@ -252,7 +263,7 @@ def test_gopher_quality_is_one_codegen_pass(spark):
 def test_c4_quality_is_one_codegen_pass(spark):
     """c4_quality_docs: same contract as the Gopher audit — per-row
     line/word array work + one source rollup, no joins, no Python."""
-    plan = _plan(QUERIES["c4_quality_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "c4_quality_docs")
     assert "Join" not in plan, plan
     assert plan.count("Exchange") <= 1, plan
     assert "BatchEvalPython" not in plan
@@ -264,7 +275,7 @@ def test_fineweb_quality_is_one_codegen_pass(spark):
     """fineweb_quality_docs: the dup-line-chars rule stays per-row
     array work (sort + fold), never an explode+shuffle — same no-join,
     single-rollup contract as the C4/Gopher audits."""
-    plan = _plan(QUERIES["fineweb_quality_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "fineweb_quality_docs")
     assert "Join" not in plan, plan
     assert plan.count("Exchange") <= 1, plan
     assert "Generate" not in plan, plan      # no explode
@@ -278,7 +289,7 @@ def test_kn3_score_broadcasts_global_and_reuses_tables(spark):
     (BroadcastNestedLoopJoin), the five type-table joins are broadcast
     hash joins, the whole plan is Catalyst-side, and the trigram
     posting/type frames flow through checkpoint barriers."""
-    plan = _plan(QUERIES["kn3_score_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "kn3_score_docs")
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 5, plan
     assert "BatchEvalPython" not in plan
@@ -291,7 +302,7 @@ def test_mkn_score_broadcasts_global_and_reuses_tables(spark):
     1-row six-discount global frame broadcasts (BNLJ), the five
     type-table joins are broadcast hash joins, no Python evals, and the
     posting/type frames flow through checkpoint barriers."""
-    plan = _plan(QUERIES["mkn_score_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "mkn_score_docs")
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 5, plan
     assert "BatchEvalPython" not in plan
@@ -305,7 +316,7 @@ def test_sbo_score_single_count_shuffle_and_broadcast_total(spark):
     shuffled aggregation behind one checkpoint barrier — counting only,
     the Brants et al. scale property), the 1-row token total broadcasts
     (BNLJ), and scoring stays Catalyst-side."""
-    plan = _plan(QUERIES["sbo_score_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "sbo_score_docs")
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
@@ -317,7 +328,7 @@ def test_ppl_bucket_broadcasts_cutpoints_no_global_sort(spark):
     (BroadcastNestedLoopJoin), bucketing is a comparison — the plan
     must contain NO window over a global sort (an un-partitioned ntile
     would serialize the corpus through one task) and no Python eval."""
-    plan = _plan(QUERIES["ppl_bucket_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "ppl_bucket_docs")
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert "Window" not in plan, plan
     assert "BatchEvalPython" not in plan
@@ -340,7 +351,7 @@ def test_ppl_bucket_percentile_input_is_bounded(spark):
         bigram_logprob)
     from training_catalog.sources.tables import load_table
 
-    plan = _plan(QUERIES["ppl_bucket_docs"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "ppl_bucket_docs")
     assert re.search(r"percentile\(avg_logp", plan), plan
     # the avg_logp the percentile consumes is bigram_logprob's output
     # (it crosses a lineage-truncation barrier in the full plan, and the
@@ -380,7 +391,7 @@ def test_split_holdout_is_two_agg_passes(spark):
     """split_holdout_stats: per-row split tagging plus two aggregations
     (per-split stats, per-group leak check) with the 1-row leak count
     broadcast back; the scan reads only the text column."""
-    plan = _plan(QUERIES["split_holdout_stats"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "split_holdout_stats")
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
     assert "ReadSchema: struct<text:string>" in plan
@@ -393,7 +404,7 @@ def test_training_pipeline_reuses_tagged_corpus(spark):
     ExistingRDD; a caller-invisible persist would leak) so the hygiene
     filter + dedup shuffle run once, not twice; the scan is pruned to
     (doc_id, text)."""
-    plan = _plan(QUERIES["training_corpus_stats"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "training_corpus_stats")
     assert plan.count("Scan ExistingRDD") >= 2, plan
     assert "CartesianProduct" not in plan
 
@@ -403,7 +414,7 @@ def test_k_anonymity_is_one_rollup_pass(spark):
     ONE rollup (a single Expand), never one scan per level: exactly one
     Expand node, at most two aggregation exchanges (class sizes, then
     band rollup), scan pruned to the three QI columns."""
-    plan = _plan(QUERIES["k_anonymity_stats"](spark, SF_SMOKE))
+    plan = _query_plan(spark, "k_anonymity_stats")
     assert plan.count("Expand") == 1, plan
     assert plan.count("Exchange hashpartitioning") <= 2, plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from openskidata_processor_spark.pipeline import formatters as fmt
+from openskidata_processor_spark.pipeline.statistics import STATISTICS_DDL
 from openskidata_processor_spark.sinks import csv as csvsink
 from openskidata_processor_spark.sinks import geojson, geopackage
 from test_formatters import raw
@@ -18,19 +19,6 @@ from test_formatters import raw
 LINE3D = json.dumps({"type": "LineString",
                      "coordinates": [[11.1, 47.1, 2000.0],
                                      [11.2, 47.2, 1700.0]]})
-
-STATS_DDL = (
-    "struct<"
-    "runs: struct<by_activity: map<string, map<string, "
-    "struct<count:bigint, length_in_km:double,"
-    " snowmaking_length_in_km:double,"
-    " snowfarming_length_in_km:double,"
-    " combined_elevation_change:double, min_elevation:double,"
-    " max_elevation:double>>>>,"
-    "lifts: struct<by_type: map<string, struct<count:bigint,"
-    " length_in_km:double, combined_elevation_change:double,"
-    " min_elevation:double, max_elevation:double>>>,"
-    "min_elevation: double, max_elevation: double>")
 
 
 @pytest.fixture(scope="module")
@@ -163,7 +151,8 @@ class TestCSV:
             [[11.0, 47.0], [11.1, 47.0], [11.1, 47.1], [11.0, 47.0]]]})
         areas = fmt.format_ski_areas_osm(raw(spark, [
             ({"landuse": "winter_sports", "name": "R"}, poly)]))
-        areas = areas.withColumn("statistics", F.lit(None).cast(STATS_DDL))
+        areas = areas.withColumn("statistics",
+                                 F.lit(None).cast(STATISTICS_DDL))
         out = csvsink.ski_area_csv(areas)
         assert out.columns == csvsink.SKI_AREA_HEADERS
         assert out.collect()[0].name == "R"
@@ -485,7 +474,7 @@ class TestCSVReferenceVectors:
                   " places array<struct<iso3166_1:string, iso3166_2:string,"
                   " country:string, region:string, locality:string>>,"
                   " sources array<struct<type:string, id:string>>,"
-                  f" statistics {STATS_DDL}, geometry string")
+                  f" statistics {STATISTICS_DDL}, geometry string")
         geom = json.dumps({"type": "Point", "coordinates": [10.0, 20.0]})
         run_measures = lambda n, km: (n, km, 0.0, 0.0, 0.0, 0.0, 0.0)  # noqa: E731
         areas = spark.createDataFrame([(
@@ -496,9 +485,9 @@ class TestCSVReferenceVectors:
             [("openstreetmap", "123"), ("skimap.org", "456")],
             (({"downhill": {"novice": run_measures(2, 5.0),
                             "intermediate": run_measures(5, 10.0)},
-               "nordic": {"novice": run_measures(1, 8.0)}},),
+               "nordic": {"novice": run_measures(1, 8.0)}}, None, None),
              ({"chair_lift": (3, 3.5, 0.0, 0.0, 0.0),
-               "gondola": (1, 2.0, 0.0, 0.0, 0.0)},),
+               "gondola": (1, 2.0, 0.0, 0.0, 0.0)}, None, None),
              1200.0, 2400.0),
             geom)], schema)
         line = self._row_line(csvsink.ski_area_csv(areas).collect()[0])
