@@ -182,9 +182,9 @@ def run_prepare(spark, landing_dir: str, out_dir: str,
         spark, os.path.join(landing_dir, "input_skimap_ski_areas.geojson"))
     layers = prepare_from_elements(spark, elements, skimap,
                                    checkpoint_dir=checkpoint_dir)
-    write_outputs(layers, out_dir, geopackage=geopackage,
-                  reference_shape=reference_shape)
-    return {name: df.count() for name, df in layers.items()}
+    counts = write_outputs(layers, out_dir, geopackage=geopackage,
+                           reference_shape=reference_shape)
+    return {name: counts[name] for name in layers}
 
 
 # ---------------------------------------------------------------------------

@@ -1,11 +1,10 @@
 """Iterative DataFrame graph operators: connected components via label
 propagation.
 
-The engine needs connected components twice (SURVEY.md §2.9/§2.10): run
-chain-merging (segments sharing endpoints) and ski-area transitive spatial
-closure (objects within 500 m).  Both graphs have small-diameter components
-(a run chain, one resort), so plain min-label propagation converges in a
-handful of rounds.
+Clustering cuts its objects and ski areas into regions with it (SURVEY.md
+§2.9: objects within 500 m, plus site membership).  A region is one
+resort, a small-diameter component, so plain min-label propagation
+converges in a handful of rounds.
 
 Scale design:
 - string vertices are hashed to ``xxhash64`` longs so every shuffle moves
@@ -29,8 +28,8 @@ Scale design:
   or ``reliable=True``, so executor loss on a cluster is survivable); AQE
   handles skewed hub vertices.
 
-This is the simple variant of the large-star/small-star algorithm —
-appropriate because component diameters here are tiny (≤ ~20 hops).
+This is the simple variant of the large-star/small-star algorithm:
+rounds grow with component diameter, which one resort keeps small.
 """
 
 from __future__ import annotations

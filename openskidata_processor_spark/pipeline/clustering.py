@@ -72,11 +72,12 @@ MERGE_DISTANCE_KM = 0.25    # :826
 STATION_DISTANCE_KM = 0.03  # LiftStationAssociator.ts:12
 ALL_ACTIVITIES = ("downhill", "nordic")
 
-# Columns of the working tables: ``prepare_objects`` rows and ski areas.
+# Columns of the working tables: ``prepare_objects`` rows (``status`` is a
+# lift's, null for runs and spots) and ski areas.
 OBJECT_COLUMNS = (
     "id", "obj_type", "geometry", "activities", "ski_areas",
     "is_in_ski_area_site", "difficulty", "snowmaking", "snowfarming",
-    "lift_type", "spot_type", "is_basis_for_new_ski_area",
+    "lift_type", "spot_type", "status", "is_basis_for_new_ski_area",
     "is_in_ski_area_polygon")
 SKI_AREA_COLUMNS = (
     "id", "name", "sources", "activities", "status", "websites",
@@ -127,6 +128,7 @@ def prepare_objects(runs: DataFrame, lifts: DataFrame,
         F.col("difficulty"), F.col("snowmaking"), F.col("snowfarming"),
         F.lit(None).cast("string").alias("lift_type"),
         F.lit(None).cast("string").alias("spot_type"),
+        F.lit(None).cast("string").alias("status"),
         ((F.arrays_overlap(F.col("uses"), _act_array("downhill", "nordic")))
          & (F.size(run_acts) > 0)
          & (F.size("ski_areas") == 0)).alias("is_basis_for_new_ski_area"),
@@ -142,6 +144,7 @@ def prepare_objects(runs: DataFrame, lifts: DataFrame,
         F.lit(None).cast("boolean").alias("snowfarming"),
         F.col("lift_type"),
         F.lit(None).cast("string").alias("spot_type"),
+        F.col("status"),
         F.lit(False).alias("is_basis_for_new_ski_area"),
     )
     spot_acts = (
@@ -162,6 +165,7 @@ def prepare_objects(runs: DataFrame, lifts: DataFrame,
         F.lit(None).cast("boolean").alias("snowfarming"),
         F.lit(None).cast("string").alias("lift_type"),
         F.col("spot_type"),
+        F.lit(None).cast("string").alias("status"),
         F.lit(False).alias("is_basis_for_new_ski_area"),
     )
     return r.unionByName(l).unionByName(s) \
@@ -602,12 +606,9 @@ class _Region:
         and placeholder geometries (:1244-1271) go; other non-polygon areas
         move to the members' representative point (A5)."""
         members = self.members()
-        # the working table keeps no lift status: every lift object
-        # counts as operating
         stats = ski_area_statistics(
             [o for o in self.objs if o["obj_type"] == "run"],
-            [{**o, "status": "operating"} for o in self.objs
-             if o["obj_type"] == "lift"])
+            [o for o in self.objs if o["obj_type"] == "lift"])
         kept = []
         for s in self.sas:
             ms = members[s["id"]]

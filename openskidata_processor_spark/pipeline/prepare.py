@@ -179,9 +179,10 @@ OUTPUT_LAYERS = ("runs", "lifts", "spots", "ski_areas")
 
 def write_outputs(layers: dict[str, DataFrame], out_dir: str,
                   geopackage: bool = True,
-                  reference_shape: bool = False) -> None:
+                  reference_shape: bool = False) -> dict[str, int]:
     """Phase 4 (K1/K2/K3 + P10): every sink format from the clustered
     layers, one Spark fetch per layer (``sinks.export.write_layer``).
+    Returns each layer's row count, read from that fetch.
 
     Ski-area names (and, for ``reference_shape``, summary features) are
     resolved once per call.  Then each layer is projected once — its
@@ -209,6 +210,7 @@ def write_outputs(layers: dict[str, DataFrame], out_dir: str,
         else None)
     gpkg = (GeoPackage(os.path.join(out_dir, "openskidata.gpkg"))
             if geopackage else None)
+    counts = {}
     try:
         for name in OUTPUT_LAYERS:
             df = layers[name]
@@ -228,10 +230,11 @@ def write_outputs(layers: dict[str, DataFrame], out_dir: str,
                     fields(df, refs)))
             if gpkg is not None:
                 sinks.append(gpkg.layer(name, df, refs))
-            write_layer(df, sinks)
+            counts[name] = write_layer(df, sinks)
     finally:
         if gpkg is not None:
             gpkg.close()
+    return counts
 
 
 def tiles_command(out_dir: str) -> list[list[str]]:

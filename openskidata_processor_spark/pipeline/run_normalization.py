@@ -22,17 +22,20 @@ Spark plan (one DAG, no driver-side accumulation):
 2. ``groupBy(segment)`` with the A1 merge aggregation — overlapping runs
    collapse to one segment with merged properties; opposing oneway
    directions reconcile to ``oneway=false``;
-3. connected components over segments sharing an endpoint *within the same
-   property fingerprint* (the ``isPartOfSameRun`` equality, ignoring
-   id/sources/skiAreas), endpoints restricted to degree 2 and
-   direction-compatible for oneway runs;
-4. per-component coordinate stitching in ``applyInPandas`` (components are
-   single run chains — tiny groups), union of per-segment sources;
-5. content-hash id recomputation.
+3. ``groupBy(fingerprint)`` over the merged segments — the fingerprint
+   is the ``isPartOfSameRun`` property equality, ignoring
+   id/sources/skiAreas, and segments chain only within one — and one
+   ``applyInPandas`` walk per group: a union-find joins the two segments
+   at each point that exactly two of them touch (head-to-tail only for
+   oneway runs), and each component is stitched into one LineString with
+   the union of its segments' sources and ski areas;
+4. content-hash id recomputation.
 
-At 100 TB the segment explode/groupBy shuffles on spatially-local keys;
-the CC iterates only over chain-adjacency edges (linear in segment count);
-no stage materializes more than one segment row per quantized arc.
+The segment explode/groupBy shuffles on spatially-local keys and
+materializes one row per quantized arc.  A chain walk costs one pass over
+its fingerprint group however long the chain is; a group holds the runs
+that share all the fingerprint properties (the reference holds every run
+in one process).
 
 Determinism deviations from the single-threaded reference (documented):
 merged array fields and sanitize-unique-joined strings are sorted rather
@@ -50,8 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import feature_id
-from ..operators.graph import connected_components
 from ..operators.priority import priority_merge_agg, tristate_or_agg
+from .clustering import _find, _union
 
 QUANT = 7  # endpoint quantization decimals (PointMultiMap.ts:19)
 
@@ -186,146 +189,108 @@ def merge_segments(segments: DataFrame) -> DataFrame:
             .drop("__n_fwd", "__n_rev", "__any_false"))
 
 
-def _with_fingerprint(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "fingerprint",
-        F.sha2(F.to_json(F.struct(*FINGERPRINT_COLS)), 256))
+def _stitch(segs: list[dict], oneway: bool) -> list[list[float]]:
+    """One chain's coordinates (PointGraph): from a free end (for oneway
+    chains, one where travel starts), or around a cycle."""
+    by_point: dict[str, list[int]] = {}
+    for i, s in enumerate(segs):
+        by_point.setdefault(s["start"], []).append(i)
+        by_point.setdefault(s["end"], []).append(i)
+
+    # chain start: for oneway, a vertex that is only a start; otherwise
+    # any degree-1 vertex; cycles fall back to the min key.
+    cands = [(p, ids[0]) for p, ids in sorted(by_point.items())
+             if len(ids) == 1 and (not oneway or segs[ids[0]]["start"] == p)]
+    if cands:
+        point, cur = cands[0]
+    else:  # cycle
+        point = min(by_point)
+
+        # Deterministic first-segment choice: prefer the segment that
+        # STARTS here (for oneway cycles that is the travel direction; a
+        # backwards start would reverse a oneway loop), tie-break on the
+        # neighbor endpoint key.
+        def cand_key(i: int):
+            s = segs[i]
+            starts_here = s["start"] == point
+            return (not starts_here, s["end"] if starts_here else s["start"])
+
+        cur = min(by_point[point], key=cand_key)
+    visited = set()
+    path: list[list[float]] = []
+    while cur is not None and cur not in visited:
+        visited.add(cur)
+        s = segs[cur]
+        forward = s["start"] == point
+        coords = s["coords"] if forward else s["coords"][::-1]
+        point = s["end"] if forward else s["start"]
+        path.extend(coords if not path else coords[1:])
+        nxt = [i for i in by_point.get(point, []) if i not in visited]
+        cur = nxt[0] if nxt else None
+    return path
+
+
+def _union_col(rows: list[dict], col: str) -> list:
+    """Chain-level re-merge of a non-fingerprint array: distinct items,
+    sorted by their JSON text.  (Every other property is part of the
+    fingerprint, so the chain's first row holds it.)"""
+    items = {json.dumps(item, sort_keys=True, default=str): item
+             for r in rows for item in r[col]}
+    return [items[k] for k in sorted(items)]
+
+
+def _walk_fingerprint(pdf: pd.DataFrame, prop_cols: list[str]) -> pd.DataFrame:
+    """``applyInPandas`` body: one fingerprint's merged segments → one row
+    per chain.  A point that exactly two segments touch joins them (for
+    oneway runs only when one starts and the other ends there: PointGraph
+    chains head-to-tail, PointGraph.ts:70-134); each union-find component
+    is one chain."""
+    rows = pdf.sort_values("seg_key").to_dict("records")
+    oneway = bool(rows[0]["oneway"])  # one fingerprint, one oneway flag
+    segs, at_point = [], {}
+    for i, r in enumerate(rows):
+        coords = [list(c) for c in r["coords"]]
+        ends = [r["a_key"], r["b_key"]]
+        if r["is_reversed"]:  # travel order
+            coords, ends = coords[::-1], ends[::-1]
+        segs.append({"start": ends[0], "end": ends[1], "coords": coords})
+        at_point.setdefault(ends[0], []).append((i, "start"))
+        at_point.setdefault(ends[1], []).append((i, "end"))
+    parent = list(range(len(segs)))
+    for ends in at_point.values():
+        if len(ends) == 2 and (not oneway or ends[0][1] != ends[1][1]):
+            _union(parent, ends[0][0], ends[1][0])
+    chains: dict[int, list[int]] = {}
+    for i in range(len(segs)):
+        chains.setdefault(_find(parent, i), []).append(i)
+
+    out = []
+    for ids in chains.values():
+        chain = [rows[i] for i in ids]
+        out.append({**{c: chain[0][c] for c in prop_cols},
+                    "sources": _union_col(chain, "sources"),
+                    "ski_areas": _union_col(chain, "ski_areas"),
+                    "geometry": json.dumps(
+                        {"coordinates": _stitch([segs[i] for i in ids], oneway),
+                         "type": "LineString"},
+                        separators=(",", ":"), sort_keys=True)})
+    return pd.DataFrame(out, columns=[*prop_cols, "geometry"])
 
 
 def combine_segments(merged: DataFrame) -> DataFrame:
-    """Chain-merge consecutive equal-property segments (PointGraph):
-    endpoint degree-2 connections within a fingerprint group, direction
-    compatible for oneway runs, stitched per connected component."""
-    seg = _with_fingerprint(merged).withColumn(
-        "seg_id", F.concat_ws("#", "fingerprint", "seg_key"))
-
-    # Oriented endpoints: 'start'/'end' in travel direction for oneway runs.
-    start_key = F.when(F.col("is_reversed"), F.col("b_key")).otherwise(F.col("a_key"))
-    end_key = F.when(F.col("is_reversed"), F.col("a_key")).otherwise(F.col("b_key"))
-    endpoints = seg.select(
-        "fingerprint", "seg_id", "oneway",
-        F.explode(F.array(
-            F.struct(start_key.alias("point"), F.lit("start").alias("role")),
-            F.struct(end_key.alias("point"), F.lit("end").alias("role")),
-        )).alias("ep"),
-    ).select("fingerprint", "seg_id", "oneway",
-             F.col("ep.point").alias("point"), F.col("ep.role").alias("role"))
-
-    # Unambiguous continuations only: points touching exactly 2 segments.
-    degree = (endpoints.groupBy("fingerprint", "point")
-              .agg(F.countDistinct("seg_id").alias("deg")))
-    joinable = endpoints.join(degree.filter(F.col("deg") == 2),
-                              ["fingerprint", "point"])
-
-    a = joinable.select("fingerprint", "point",
-                        F.col("seg_id").alias("src"),
-                        F.col("role").alias("role_a"), "oneway")
-    b = joinable.select("fingerprint", "point",
-                        F.col("seg_id").alias("dst"),
-                        F.col("role").alias("role_b"))
-    edges = (
-        a.join(b, ["fingerprint", "point"])
-        .filter(F.col("src") < F.col("dst"))
-        # oneway chains connect only head-to-tail (PointGraph.ts:70-134)
-        .filter(~F.coalesce(F.col("oneway"), F.lit(False))
-                | (F.col("role_a") != F.col("role_b")))
-        .select("src", "dst")
-    )
-
-    isolated = seg.select(F.col("seg_id").alias("src"),
-                          F.col("seg_id").alias("dst"))
-    comps = connected_components(edges.unionByName(isolated))
-
-    with_comp = seg.join(comps, seg["seg_id"] == comps["vertex"]).drop("vertex")
-
-    out_schema = with_comp.drop(
-        "component", "seg_id", "seg_key", "a_key", "b_key", "coords",
-        "is_reversed", "fingerprint").schema
+    """Chain-merge consecutive equal-property segments (PointGraph): one
+    ``groupBy(fingerprint).applyInPandas`` walk.  Segments chain only
+    within a fingerprint (the ``isPartOfSameRun`` equality), so each group
+    holds every chain it can form."""
+    seg = merged.withColumn(
+        "fingerprint", F.sha2(F.to_json(F.struct(*FINGERPRINT_COLS)), 256))
+    out_schema = seg.drop("seg_key", "a_key", "b_key", "coords",
+                          "is_reversed", "fingerprint").schema
     out_schema.add("geometry", "string")
-    prop_cols = [f.name for f in out_schema.fields if f.name != "geometry"]
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        segs = []
-        for _, r in pdf.iterrows():
-            s, e = (r["b_key"], r["a_key"]) if r["is_reversed"] \
-                else (r["a_key"], r["b_key"])
-            coords = [list(c) for c in r["coords"]]
-            if r["is_reversed"]:
-                coords = coords[::-1]
-            segs.append({"start": s, "end": e, "coords": coords})
-        oneway = bool(pdf.iloc[0]["oneway"]) if pdf.iloc[0]["oneway"] is not None else False
-
-        # adjacency by endpoint
-        by_point: dict[str, list[int]] = {}
-        for i, s in enumerate(segs):
-            by_point.setdefault(s["start"], []).append(i)
-            by_point.setdefault(s["end"], []).append(i)
-
-        # chain start: for oneway, a vertex that is only a start; otherwise
-        # any degree-1 vertex; cycles fall back to the min key.
-        def starts():
-            out = []
-            for p, ids in sorted(by_point.items()):
-                if len(ids) == 1:
-                    i = ids[0]
-                    if not oneway or segs[i]["start"] == p:
-                        out.append((p, i))
-            return out
-
-        cands = starts()
-        if cands:
-            point, cur = cands[0]
-        else:  # cycle
-            point = min(by_point)
-
-            # Deterministic first-segment choice — NOT insertion order,
-            # which follows nondeterministic row order: prefer the segment
-            # that STARTS here (for oneway cycles that is the travel
-            # direction; a backwards start would reverse a oneway loop),
-            # tie-break on the neighbor endpoint key.
-            def cand_key(i: int):
-                s = segs[i]
-                starts_here = s["start"] == point
-                other = s["end"] if starts_here else s["start"]
-                return (0 if starts_here else 1, other)
-
-            cur = min(by_point[point], key=cand_key)
-        visited = set()
-        path: list[list[float]] = []
-        while cur is not None and cur not in visited:
-            visited.add(cur)
-            s = segs[cur]
-            coords = s["coords"] if s["start"] == point else s["coords"][::-1]
-            nxt_point = s["end"] if s["start"] == point else s["start"]
-            path.extend(coords if not path else coords[1:])
-            point = nxt_point
-            nxt = [i for i in by_point.get(point, []) if i not in visited]
-            cur = nxt[0] if nxt else None
-
-        row = pdf.iloc[0].to_dict()
-        # chain-level re-merge of the non-fingerprint arrays
-        def union_col(col):
-            seen, out = set(), []
-            for v in pdf[col]:
-                for item in list(v):
-                    k = json.dumps(item, sort_keys=True, default=str)
-                    if k not in seen:
-                        seen.add(k)
-                        out.append(item)
-            return sorted(out, key=lambda x: json.dumps(x, sort_keys=True,
-                                                        default=str))
-        row["sources"] = union_col("sources")
-        row["ski_areas"] = union_col("ski_areas")
-        row["wikidata_id"] = (sorted(x for x in pdf["wikidata_id"] if x is not None)
-                              or [None])[0]
-        geometry = json.dumps(
-            {"coordinates": path, "type": "LineString"},
-            separators=(",", ":"), sort_keys=True)
-        out = {c: [row.get(c)] for c in prop_cols}
-        out["geometry"] = [geometry]
-        return pd.DataFrame(out)
-
-    return (with_comp.groupBy("component").applyInPandas(stitch, out_schema)
+    prop_cols = out_schema.fieldNames()[:-1]
+    return (seg.groupBy("fingerprint")
+            .applyInPandas(lambda pdf: _walk_fingerprint(pdf, prop_cols),
+                           out_schema)
             .withColumn("id", feature_id(F.lit("run"), F.col("geometry"))))
 
 

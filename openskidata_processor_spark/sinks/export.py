@@ -39,9 +39,10 @@ class Sink(Protocol):
     def write(self, rows: Iterable[tuple]) -> None: ...
 
 
-def write_layer(df: DataFrame, sinks: Sequence[Sink]) -> None:
+def write_layer(df: DataFrame, sinks: Sequence[Sink]) -> int:
     """Project ``df`` once for every sink, fetch it once, and hand each
-    sink its columns of every row, ordered by ``id`` when ``df`` has one."""
+    sink its columns of every row, ordered by ``id`` when ``df`` has one.
+    Returns the number of rows fetched."""
     ordered = "id" in df.columns
     lead = [F.col("id")] if ordered else []
     cols = lead + [c for s in sinks for c in s.columns]
@@ -54,6 +55,7 @@ def write_layer(df: DataFrame, sinks: Sequence[Sink]) -> None:
         hi = lo + len(s.columns)
         s.write(r[lo:hi] for r in rows)
         lo = hi
+    return len(rows)
 
 
 def _lookup(mapping: dict[str, str]):

@@ -825,12 +825,12 @@ def test_spots_associate_to_generated_area(clustered):
 # ---------------------------------------------------------------------------
 
 def _obj(oid, geometry, obj_type="run", activities=("downhill",),
-         ski_areas=(), spot_type=None):
+         ski_areas=(), spot_type=None, lift_type=None, status="operating"):
     return {"id": oid, "obj_type": obj_type, "geometry": geometry,
             "activities": list(activities), "ski_areas": list(ski_areas),
             "is_in_ski_area_site": bool(ski_areas), "difficulty": None,
-            "snowmaking": None, "snowfarming": None, "lift_type": None,
-            "spot_type": spot_type,
+            "snowmaking": None, "snowfarming": None, "lift_type": lift_type,
+            "spot_type": spot_type, "status": status,
             "is_basis_for_new_ski_area": obj_type == "run" and not ski_areas,
             "is_in_ski_area_polygon": False}
 
@@ -897,6 +897,21 @@ class TestRegionWalk:
         members, _ = _walk(objects, ski_areas)
         assert members == {"r-b": ["sa-b"], "r-a": ["sa-a"],
                            "r-c": ["sa-a"]}
+
+    def test_non_operating_lift_member_is_not_counted(self):
+        # a disused lift has no activities, which a polygon's claim treats
+        # as a wildcard: it becomes a member but is no operating lift
+        objects = [_obj("run", line(50.003, 47.002, 47.004)),
+                   _obj("lift", line(50.005, 47.002, 47.004),
+                        obj_type="lift", activities=(),
+                        lift_type="chair_lift", status="disused")]
+        members, sas = _walk(objects, [
+            _sa("poly", polygon(50.0, 47.0, 50.01, 47.01),
+                activities=("downhill",))])
+        assert members == {"run": ["poly"], "lift": ["poly"]}
+        stats = sas["poly"]["statistics"]
+        assert stats["runs"] is not None
+        assert stats["lifts"] is None
 
     def test_site_members_far_apart_stay_one_region(self):
         # members 2.3 km apart: only the membership edges join them

@@ -130,10 +130,16 @@ def scenario_rows():
 
 
 @pytest.fixture(scope="module")
-def normalized(spark):
-    runs = fmt.format_runs(raw(spark, scenario_rows()))
-    before = {r.id for r in runs.select("id").collect()}
-    rows = normalize_runs(runs).collect()
+def scenario_runs(spark):
+    """The formatted scenario runs, materialized once so that a job count
+    of ``normalize_runs`` sees normalization alone."""
+    return fmt.format_runs(raw(spark, scenario_rows())).localCheckpoint()
+
+
+@pytest.fixture(scope="module")
+def normalized(scenario_runs):
+    before = {r.id for r in scenario_runs.select("id").collect()}
+    rows = normalize_runs(scenario_runs).collect()
     return rows, before
 
 
@@ -303,3 +309,49 @@ def test_normalization_output_independent_of_partitioning(spark):
     b = run_with(runs.repartition(7, F.col("geometry")))
     c = run_with(runs.orderBy(F.desc("geometry")).repartition(3))
     assert a == b == c
+
+
+def test_normalize_runs_job_count(spark, scenario_runs):
+    """Chain merging is one grouped walk: every scenario normalizes in at
+    most 5 Spark jobs.  An iterative graph loop (a few jobs per round)
+    would blow through this."""
+    sc = spark.sparkContext
+    group = "test_normalize_runs_job_count"
+    sc.setJobGroup(group, "normalize_runs")
+    try:
+        normalize_runs(scenario_runs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, len(jobs)
+
+
+def _coords(row):
+    return [tuple(c) for c in json.loads(row.geometry)["coordinates"]]
+
+
+def test_long_run_normalizes_to_itself(spark):
+    """A real piste often has well over 100 nodes: a 150-coordinate
+    downhill run comes out as one run with every coordinate, in order."""
+    path = [(100.0, 47.0 + i * 1e-4) for i in range(150)]
+    out = normalize_runs(fmt.format_runs(raw(spark, [
+        ({"piste:type": "downhill", "name": "Long"}, line(*path))]))).collect()
+    assert len(out) == 1
+    assert _coords(out[0]) == path
+
+
+def test_long_chain_of_segments_stitches_into_one_run(spark):
+    """120 two-point runs with equal properties, laid end to end (and
+    given in shuffled order), stitch into one 121-coordinate run.  Merging
+    by propagating labels one segment per round needs at least 61 rounds
+    for this chain wherever its minimum label sits."""
+    import random
+
+    path = [(101.0, 47.0 + i * 1e-3) for i in range(121)]
+    rows = [({"piste:type": "nordic", "name": "Chain"}, line(a, b))
+            for a, b in zip(path, path[1:])]
+    random.Random(7).shuffle(rows)
+    out = normalize_runs(fmt.format_runs(raw(spark, rows))).collect()
+    assert len(out) == 1
+    assert _coords(out[0]) in (path, path[::-1])
+    assert len(out[0].sources) == 120
