@@ -4,8 +4,9 @@ A from-scratch, Spark-first re-expression of the batch ETL of the reference
 pipeline ``russellporter/openskidata-processor`` (see SURVEY.md for its
 operator inventory): download, format, normalize, enrich, cluster and write.
 Geometry is a numpy/pandas-UDF kernel, clustering's spatial join is a
-grid-bucketed equi-join, and the iterative graph steps (run-topology
-normalization, ski-area regions) are DataFrame label propagation.
+grid-bucketed equi-join, ski-area regions are connected components by
+union-find in two passes, and run-topology normalization walks each
+property group's chains in one grouped pandas UDF.
 
 Subpackages
 -----------

@@ -1,10 +1,11 @@
 """Lineage cuts with a cluster-durable mode.
 
-``truncate_lineage(df)`` cuts the logical plan inside iterative algorithms
-(connected components) and between pipeline phases, where plan growth is
-the problem.  Locally this is ``localCheckpoint`` (fast, executor-memory);
-with reliable mode on it becomes a real ``checkpoint()`` to the configured
-checkpoint directory, which survives executor loss.
+``truncate_lineage(df)`` cuts the logical plan between pipeline phases
+(clustering's pair table and region walk), so a later phase neither
+replays nor re-plans an earlier one.  Locally this is ``localCheckpoint``
+(fast, executor-memory); with reliable mode on it becomes a real
+``checkpoint()`` to the configured checkpoint directory, which survives
+executor loss.
 
 Reliable mode is enabled per-call (``reliable=True``) or globally with
 ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``; the checkpoint directory defaults to
@@ -37,8 +38,8 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
 
 def truncate_lineage(df: DataFrame, eager: bool = True,
                      reliable: bool | None = None) -> DataFrame:
-    """Lineage cut for iterative loops / staged pipelines (plans must stay
-    bounded).  ``eager=False`` defers materialization to the first action."""
+    """Lineage cut between pipeline phases.  ``eager=False`` defers
+    materialization to the first action."""
     if _reliable_mode(reliable):
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=eager)

@@ -25,9 +25,10 @@ and runs in three steps:
 1. one grid-cell distance self-join over objects and ski areas
    (``proximity_pairs``) measures every pair within 500 m once: its exact
    ``min_distance_km`` and whether the object is covered by the polygon;
-2. one ``connected_components`` call over those pairs, the object → site
-   ski-area membership edges and a self-loop per vertex gives every object
-   and ski area its region;
+2. one ``connected_components`` call (union-find in two passes, one
+   shuffle whatever a region's diameter) over those pairs, the object →
+   site ski-area membership edges and a self-loop per vertex gives every
+   object and ski area its region;
 3. one ``groupBy(region).applyInPandas`` runs passes 1–10 as plain Python
    over the region's rows (``cluster_region``), the A2 statistics of pass
    9 included (``statistics.ski_area_statistics``: a ski area's members
@@ -63,7 +64,7 @@ from pyspark.sql.types import (BooleanType, DataType, DoubleType, LongType,
 
 from ..functions import geometry as geo
 from ..operators.barrier import truncate_lineage
-from ..operators.graph import connected_components
+from ..operators.graph import connected_components, find, union
 from .formatters import STATION_ARRAY_DDL
 from .statistics import STATISTICS_DDL, ski_area_statistics
 
@@ -305,21 +306,6 @@ def generated_id(member_ids: list[str]) -> str:
     return "gen_" + hashlib.sha256(text.encode()).hexdigest()[:28]
 
 
-def _find(parent: dict, v: str) -> str:
-    root = v
-    while parent[root] != root:
-        root = parent[root]
-    while parent[v] != root:
-        parent[v], v = root, parent[v]
-    return root
-
-
-def _union(parent: dict, a: str, b: str) -> None:
-    ra, rb = _find(parent, a), _find(parent, b)
-    if ra != rb:
-        parent[max(ra, rb)] = min(ra, rb)
-
-
 class _Region:
     """One region's working tables, mutated pass by pass."""
 
@@ -471,16 +457,16 @@ class _Region:
             for oid in sorted(act_objs):
                 for v, d in self.nbrs[oid]:
                     if d <= MAX_DISTANCE_KM and v in act_objs:
-                        _union(parent, oid, v)
+                        union(parent, oid, v)
             for sid in act_seeds:
                 for v in links[sid]:
                     if v in parent:
-                        _union(parent, sid, v)
+                        union(parent, sid, v)
             claimer = {}
             for sid in act_seeds:
-                claimer.setdefault(_find(parent, sid), sid)
+                claimer.setdefault(find(parent, sid), sid)
             for oid in act_objs:
-                root = _find(parent, oid)
+                root = find(parent, oid)
                 if root in claimer:
                     new[oid].add(claimer[root])
         self.assign(new)
@@ -544,10 +530,10 @@ class _Region:
             for v, d in self.nbrs[oid]:
                 if (d <= MAX_DISTANCE_KM and v in unassigned
                         and acts & set(unassigned[v]["activities"])):
-                    _union(parent, oid, v)
+                    union(parent, oid, v)
         comps = defaultdict(list)
         for oid in sorted(unassigned):
-            comps[_find(parent, oid)].append(unassigned[oid])
+            comps[find(parent, oid)].append(unassigned[oid])
         new = defaultdict(set)
         for ms in comps.values():
             basis = [m for m in ms if m["is_basis_for_new_ski_area"]]

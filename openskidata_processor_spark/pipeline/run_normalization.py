@@ -53,8 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import feature_id
+from ..operators.graph import find, union
 from ..operators.priority import priority_merge_agg, tristate_or_agg
-from .clustering import _find, _union
 
 QUANT = 7  # endpoint quantization decimals (PointMultiMap.ts:19)
 
@@ -259,10 +259,10 @@ def _walk_fingerprint(pdf: pd.DataFrame, prop_cols: list[str]) -> pd.DataFrame:
     parent = list(range(len(segs)))
     for ends in at_point.values():
         if len(ends) == 2 and (not oneway or ends[0][1] != ends[1][1]):
-            _union(parent, ends[0][0], ends[1][0])
+            union(parent, ends[0][0], ends[1][0])
     chains: dict[int, list[int]] = {}
     for i in range(len(segs)):
-        chains.setdefault(_find(parent, i), []).append(i)
+        chains.setdefault(find(parent, i), []).append(i)
 
     out = []
     for ids in chains.values():

@@ -733,6 +733,40 @@ def test_clustering_output_independent_of_partitioning(spark, cluster_inputs,
         assert norm(base_rows, cols) == norm(new_rows, cols), layer
 
 
+def test_cluster_ski_areas_job_count(spark, cluster_inputs):
+    """Regions come from one two-pass connected-components call: the five
+    outputs on the scenario fixture collect in at most 60 Spark jobs.  A
+    label-propagation loop (a few jobs per round) would blow through this."""
+    sc = spark.sparkContext
+    group = "test_cluster_ski_areas_job_count"
+    sc.setJobGroup(group, "cluster_ski_areas")
+    try:
+        for df in cluster_ski_areas(*cluster_inputs).values():
+            df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 60, len(jobs)
+
+
+def test_long_nordic_trail_network_is_one_ski_area(spark):
+    """150 nordic runs in a line, each 0.004° long with 0.001° gaps, so
+    each is within 500 m of its two neighbours only: one region 150 hops
+    across, and one generated ski area holding every run."""
+    rows = [({"piste:type": "nordic", "name": f"Trail {i}"},
+             line(80.0, 47.0 + i * 0.005, 47.004 + i * 0.005))
+            for i in range(150)]
+    out = cluster_ski_areas(fmt.format_ski_areas_osm(raw(spark, [])),
+                            fmt.format_runs(raw(spark, rows)),
+                            fmt.format_lifts(raw(spark, [])),
+                            fmt.format_spots(raw(spark, [])))
+    runs = out["runs"].collect()
+    assert len(runs) == 150
+    assert {tuple(r.ski_areas) for r in runs} == {tuple(runs[0].ski_areas)}
+    assert [s.id for s in out["ski_areas"].collect()] == runs[0].ski_areas
+    assert runs[0].ski_areas[0].startswith("gen_")
+
+
 def test_skimap_without_activities_merges(clustered):
     """A Skimap.org area with NO activities is wildcard-compatible and
     merges into the nearby OSM area (:1559)."""
@@ -864,14 +898,14 @@ def _pairs(objects, ski_areas):
 def _regions(objects, ski_areas, pairs, membership=True):
     """Region label per vertex from the edges ``cluster_ski_areas`` links:
     pairs, object → site ski area membership, self-loops."""
-    from openskidata_processor_spark.pipeline.clustering import _find, _union
+    from openskidata_processor_spark.operators.graph import find, union
     parent = {v["id"]: v["id"] for v in (*objects, *ski_areas)}
     for a, b, _, _ in pairs:
-        _union(parent, a, b)
+        union(parent, a, b)
     for o in objects if membership else ():
         for sid in o["ski_areas"]:
-            _union(parent, o["id"], sid)
-    return {v: _find(parent, v) for v in parent}
+            union(parent, o["id"], sid)
+    return {v: find(parent, v) for v in parent}
 
 
 def _walk(objects, ski_areas):

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-
 from openskidata_processor_spark.operators.graph import connected_components
 
 
@@ -17,7 +16,6 @@ def test_connected_components_basic(spark):
 
 
 def test_connected_components_chain_converges(spark):
-    # a 12-hop path exercises multiple propagation rounds + checkpoints
     names = [f"v{i:02d}" for i in range(13)]
     edges = spark.createDataFrame(
         list(zip(names, names[1:])), "src string, dst string")
@@ -27,35 +25,53 @@ def test_connected_components_chain_converges(spark):
     assert len(out) == 13
 
 
-def test_connected_components_raises_when_not_converged(spark):
-    """A path of 6 vertices needs 6 rounds: 5 to carry the minimum label
-    to its far end and one to see no change.  A cap of 6 converges on its
-    last round; a cap of 5 must raise instead of returning split labels."""
-    import pytest
+def test_connected_components_long_path(spark):
+    """A 2,000-vertex path with its edges shuffled over 8 partitions is
+    one component labelled by its minimum, for long and for string ids.
+    Propagating labels one hop per round would need 2,000 rounds."""
+    import random
 
-    edges = spark.createDataFrame([(i, i + 1) for i in range(5)],
-                                  "src long, dst long")
-    out = {r.vertex: r.component for r in
-           connected_components(edges, max_iterations=6).collect()}
-    assert out == dict.fromkeys(range(6), 0)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iterations=5)
+    pairs = [(i, i + 1) for i in range(1999)]
+    random.Random(3).shuffle(pairs)
+    for ddl, ids in (("long", pairs),
+                     ("string", [(f"v{a:04d}", f"v{b:04d}") for a, b in pairs])):
+        edges = spark.createDataFrame(ids, f"src {ddl}, dst {ddl}").repartition(8)
+        stats = {}
+        out = {r.vertex: r.component
+               for r in connected_components(edges, stats=stats).collect()}
+        assert len(out) == 2000, ddl
+        assert set(out.values()) == {0 if ddl == "long" else "v0000"}, ddl
+        assert stats == {"iterations": 1}
 
 
-def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
-    """Cluster-durable mode: same answers with a reliable ``checkpoint()``
-    barrier (survives executor loss at 100 TB, unlike localCheckpoint)."""
+def test_connected_components_across_partitions(spark):
+    """Each component's edges are spread over partitions that never hold
+    the whole component; duplicate edges and self-loops change nothing."""
+    edges = [(5, 9), (9, 5), (9, 12), (12, 12), (3, 3),      # partition 0
+             (12, 20), (40, 41), (5, 9),                     # partition 1
+             (41, 30), (20, 21), (41, 41), (50, 50)]         # partition 2
+    df = spark.createDataFrame(spark.sparkContext.parallelize(edges, 3),
+                               "src long, dst long")
+    assert df.rdd.glom().map(len).collect() == [4, 4, 4]
+    out = {r.vertex: r.component
+           for r in connected_components(df).collect()}
+    assert out == {5: 5, 9: 5, 12: 5, 20: 5, 21: 5, 3: 3,
+                   30: 30, 40: 30, 41: 30, 50: 50}
+
+
+def test_truncate_lineage_reliable_checkpoint_mode(spark, tmp_path):
+    """Cluster-durable mode: a reliable ``checkpoint()`` barrier (survives
+    executor loss, unlike localCheckpoint) keeps the rows and writes its
+    data to the checkpoint directory."""
     import os
+
+    from openskidata_processor_spark.operators.barrier import truncate_lineage
 
     os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = str(tmp_path / "ckpt")
     try:
-        names = [f"v{i:02d}" for i in range(13)]
-        edges = spark.createDataFrame(
-            list(zip(names, names[1:])), "src string, dst string")
-        out = {r.vertex: r.component
-               for r in connected_components(edges, reliable=True).collect()}
-        assert set(out.values()) == {"v00"}
-        assert len(out) == 13
+        df = truncate_lineage(spark.range(13).selectExpr("id * 2 AS two"),
+                              reliable=True)
+        assert sorted(r.two for r in df.collect()) == list(range(0, 26, 2))
         # the reliable barrier must actually have written checkpoint data
         ckpt = spark.sparkContext.getCheckpointDir()
         assert ckpt is not None
@@ -79,8 +95,8 @@ def test_materialize_is_lazy(spark):
 
 
 def test_connected_components_numeric_fast_path(spark):
-    """Integral vertex ids take the no-hash path: output columns are
-    longs and the component is the numeric minimum (not a string min)."""
+    """Integral vertex ids stay integral: output columns are longs and
+    the component is the numeric minimum (not a string min)."""
     edges = spark.createDataFrame(
         [(2, 10), (10, 3), (7, 7)], "src long, dst long")
     out = connected_components(edges)

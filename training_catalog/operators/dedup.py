@@ -344,8 +344,8 @@ def near_dup_groups(df: DataFrame, id_col: str, pairs: DataFrame,
     keep-best policy a training pipeline uses when a quality score
     exists.  Documents in no pair are their own group with ``keep=true``.
 
-    Ids must be integers — the CC operator's numeric fast path keeps them
-    as 8-byte longs end to end (no string padding, no hash/vocab joins).
+    Ids must be integers — the CC operator keeps integral ids as 8-byte
+    longs end to end (no string padding).
     The keep-best pass adds one map-side-combining aggregate over the
     group table (group-count-sized) and one join back — both bounded by
     the corpus, no quadratic stage.

@@ -644,7 +644,7 @@ FROM b GROUP BY source
 @query("cc_components")
 def cc_components(spark, sf_dir):
     """Connected components over a deterministic supplier graph (edges:
-    same nation, key distance ≤ 3) using the engine's label-propagation
+    same nation, key distance ≤ 3) using the engine's two-pass union-find
     operator — the distributed replacement for the reference's recursive
     visitObject expansion.  Vertex ids are zero-padded so the canonical
     min-label agrees with the SQL oracle's numeric ordering."""
