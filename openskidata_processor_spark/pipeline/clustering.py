@@ -36,8 +36,10 @@ and runs in three steps:
    :705-779) becomes per-activity union-find over the region's pair
    lists, so a region costs O(pairs).
 
-The write-back of memberships and stations to the layers stays DataFrame
-joins.
+Like the reference's ``objects`` table, the walk carries each run, lift
+and spot row whole: it writes memberships, station snaps and each lift's
+stations into the rows, and returns them as the output rows.  Each output
+layer is one cut of the walked rows, with no join after the walk.
 
 Documented deviations from the sequential reference (the integration
 suite's scenarios still hold): contested transitive claims resolve to the
@@ -60,12 +62,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, DataType, DoubleType, LongType,
-                               StringType, StructField, StructType)
+                               StructField, StructType)
 
 from ..functions import geometry as geo
 from ..operators.barrier import truncate_lineage
 from ..operators.graph import connected_components, find, union
-from .formatters import STATION_ARRAY_DDL
+from .formatters import STATION_FIELDS
 from .statistics import STATISTICS_DDL, ski_area_statistics
 
 MAX_DISTANCE_KM = 0.5       # SkiAreaClusteringService.ts:66
@@ -73,21 +75,10 @@ MERGE_DISTANCE_KM = 0.25    # :826
 STATION_DISTANCE_KM = 0.03  # LiftStationAssociator.ts:12
 ALL_ACTIVITIES = ("downhill", "nordic")
 
-# Columns of the working tables: ``prepare_objects`` rows (``status`` is a
-# lift's, null for runs and spots) and ski areas.
-OBJECT_COLUMNS = (
-    "id", "obj_type", "geometry", "activities", "ski_areas",
-    "is_in_ski_area_site", "difficulty", "snowmaking", "snowfarming",
-    "lift_type", "spot_type", "status", "is_basis_for_new_ski_area",
-    "is_in_ski_area_polygon")
+# Columns of the walk's ski-area rows.
 SKI_AREA_COLUMNS = (
     "id", "name", "sources", "activities", "status", "websites",
     "wikidata_id", "run_convention", "geometry", "is_polygon", "source")
-# ``cluster_region`` adds these; ``kind`` tells objects from ski areas.
-STATION_COLUMNS = ("associated_lift_id", "inferred_position")
-WALK_COLUMNS = (("kind",) + OBJECT_COLUMNS + STATION_COLUMNS
-                + tuple(c for c in SKI_AREA_COLUMNS if c not in OBJECT_COLUMNS)
-                + ("n_members", "statistics"))
 
 
 def _act_array(*acts: str) -> Column:
@@ -110,7 +101,18 @@ def _is_placeholder(geom: Column) -> Column:
 
 def prepare_objects(runs: DataFrame, lifts: DataFrame,
                     spots: DataFrame) -> DataFrame:
-    """Unified working table of runs/lifts/spots with clustering flags."""
+    """The walk's object rows: every run, lift and spot row, whole, plus
+    the working columns ``obj_type``, ``activities``,
+    ``is_in_ski_area_site`` and ``is_basis_for_new_ski_area``.  A column
+    that one layer lacks is null on its rows."""
+    def working(layer: DataFrame, obj_type: str, activities: Column,
+                basis: Column = F.lit(False)) -> DataFrame:
+        return layer.select(
+            "*", F.lit(obj_type).alias("obj_type"),
+            activities.alias("activities"),
+            (F.size("ski_areas") > 0).alias("is_in_ski_area_site"),
+            basis.alias("is_basis_for_new_ski_area"))
+
     backcountry_unpatrolled = (
         (F.size("ski_areas") == 0)
         & (F.col("grooming") == "backcountry")
@@ -121,56 +123,22 @@ def prepare_objects(runs: DataFrame, lifts: DataFrame,
             lambda u: (F.when(u.isin("downhill", "snow_park"), "downhill")
                         .when(u == "nordic", "nordic"))),
             lambda a: a.isNotNull())))
-    r = runs.select(
-        F.col("id"), F.lit("run").alias("obj_type"), F.col("geometry"),
-        run_acts.alias("activities"),
-        F.col("ski_areas"),
-        (F.size("ski_areas") > 0).alias("is_in_ski_area_site"),
-        F.col("difficulty"), F.col("snowmaking"), F.col("snowfarming"),
-        F.lit(None).cast("string").alias("lift_type"),
-        F.lit(None).cast("string").alias("spot_type"),
-        F.lit(None).cast("string").alias("status"),
-        ((F.arrays_overlap(F.col("uses"), _act_array("downhill", "nordic")))
-         & (F.size(run_acts) > 0)
-         & (F.size("ski_areas") == 0)).alias("is_basis_for_new_ski_area"),
-    )
-    l = lifts.select(
-        F.col("id"), F.lit("lift").alias("obj_type"), F.col("geometry"),
-        F.when(F.col("status") == "operating", _act_array("downhill"))
-         .otherwise(_act_array()).alias("activities"),
-        F.col("ski_areas"),
-        (F.size("ski_areas") > 0).alias("is_in_ski_area_site"),
-        F.lit(None).cast("string").alias("difficulty"),
-        F.lit(None).cast("boolean").alias("snowmaking"),
-        F.lit(None).cast("boolean").alias("snowfarming"),
-        F.col("lift_type"),
-        F.lit(None).cast("string").alias("spot_type"),
-        F.col("status"),
-        F.lit(False).alias("is_basis_for_new_ski_area"),
-    )
-    spot_acts = (
-        F.when(F.col("spot_type").isin("lift_station", "halfpipe"),
-               _act_array("downhill"))
-        .when(F.col("spot_type").isin("crossing",
-                                      "avalanche_transceiver_training",
-                                      "avalanche_transceiver_checkpoint"),
-              _act_array("downhill", "nordic"))
-        .otherwise(_act_array()))
-    s = spots.select(
-        F.col("id"), F.lit("spot").alias("obj_type"), F.col("geometry"),
-        spot_acts.alias("activities"),
-        F.col("ski_areas"),
-        (F.size("ski_areas") > 0).alias("is_in_ski_area_site"),
-        F.lit(None).cast("string").alias("difficulty"),
-        F.lit(None).cast("boolean").alias("snowmaking"),
-        F.lit(None).cast("boolean").alias("snowfarming"),
-        F.lit(None).cast("string").alias("lift_type"),
-        F.col("spot_type"),
-        F.lit(None).cast("string").alias("status"),
-        F.lit(False).alias("is_basis_for_new_ski_area"),
-    )
-    return r.unionByName(l).unionByName(s) \
-        .withColumn("is_in_ski_area_polygon", F.lit(False))
+    r = working(runs, "run", run_acts,
+                F.arrays_overlap(F.col("uses"), _act_array("downhill", "nordic"))
+                & (F.size(run_acts) > 0) & (F.size("ski_areas") == 0))
+    l = working(lifts, "lift",
+                F.when(F.col("status") == "operating", _act_array("downhill"))
+                .otherwise(_act_array()))
+    s = working(spots, "spot",
+                F.when(F.col("spot_type").isin("lift_station", "halfpipe"),
+                       _act_array("downhill"))
+                .when(F.col("spot_type").isin(
+                    "crossing", "avalanche_transceiver_training",
+                    "avalanche_transceiver_checkpoint"),
+                    _act_array("downhill", "nordic"))
+                .otherwise(_act_array()))
+    return (r.unionByName(l, allowMissingColumns=True)
+            .unionByName(s, allowMissingColumns=True))
 
 
 # ---------------------------------------------------------------------------
@@ -294,9 +262,9 @@ def _compatible(a: list, b: list) -> bool:
     return not a or not b or bool(set(a) & set(b))
 
 
-def _source_key(src: dict) -> tuple:
-    # Spark's struct ordering: field by field, nulls first
-    return tuple((src[k] is not None, src[k]) for k in ("type", "id"))
+def _struct_key(row: dict, fields) -> tuple:
+    """Spark's struct ordering: field by field, nulls first."""
+    return tuple((row[k] is not None, row[k]) for k in fields)
 
 
 def generated_id(member_ids: list[str]) -> str:
@@ -307,15 +275,21 @@ def generated_id(member_ids: list[str]) -> str:
 
 
 class _Region:
-    """One region's working tables, mutated pass by pass."""
+    """One region's working tables, mutated pass by pass.
+
+    Rows that share an id (one OSM node formatted as two spots) are one
+    object of the walk: ``obj`` reads the last of them in (id, spot type)
+    order, and ``assign`` gives each of them the id's memberships."""
 
     def __init__(self, objects, ski_areas, pairs):
-        self.objs = sorted(({**o, "associated_lift_id": None,
-                             "inferred_position": None} for o in objects),
-                           key=lambda o: o["id"])
+        self.objs = sorted((dict(o) for o in objects),
+                           key=lambda o: (o["id"], o["spot_type"] or ""))
         self.sas = sorted((dict(s) for s in ski_areas),
                           key=lambda s: s["id"])
         self.obj = {o["id"]: o for o in self.objs}
+        self.rows = defaultdict(list)
+        for o in self.objs:
+            self.rows[o["id"]].append(o)
         self.nbrs = defaultdict(list)
         self.dist = {}
         self.covered = set()     # (object id, polygon ski-area id)
@@ -339,12 +313,10 @@ class _Region:
                 out[sid].append(o)
         return out
 
-    def assign(self, new: dict[str, set], polygon: bool = False) -> None:
+    def assign(self, new: dict[str, set]) -> None:
         for oid, sids in new.items():
-            o = self.obj[oid]
-            o["ski_areas"] = sorted(set(o["ski_areas"]) | sids)
-            if polygon:
-                o["is_in_ski_area_polygon"] = True
+            for o in self.rows[oid]:
+                o["ski_areas"] = sorted(set(o["ski_areas"]) | sids)
 
     def derive_activities(self) -> None:
         """Ski areas with no activities inherit the union of member
@@ -395,7 +367,7 @@ class _Region:
             if sid not in dropped:
                 for o in objs:
                     new[o["id"]].add(sid)
-        self.assign(new, polygon=True)
+        self.assign(new)
         self.derive_activities()
 
     def transitive_claims(self, source: str) -> None:
@@ -497,9 +469,11 @@ class _Region:
             names = [s["name"] for s in sms if s["name"] is not None]
             if target["name"] is None and names:
                 target["name"] = min(names)
-            sources = {_source_key(x): x for x in target["sources"]}
+            sources = {_struct_key(x, ("type", "id")): x
+                       for x in target["sources"]}
             for s in sms:
-                sources.update((_source_key(x), x) for x in s["sources"])
+                sources.update((_struct_key(x, ("type", "id")), x)
+                               for x in s["sources"])
             target["sources"] = [sources[k] for k in sorted(sources)]
             target["activities"] = sorted(
                 {*target["activities"], *(a for s in sms
@@ -558,9 +532,12 @@ class _Region:
     def associate_stations(self) -> None:
         """Pass 8 (LiftStationAssociator.ts:97-153): each lift station
         snaps to the nearest lift within 30 m (ties: a shared ski area,
-        then lift id); its position comes from its pre-snap elevation vs
-        the lift's range (:37-54, :186-214).  Orphans go (:88-94)."""
-        kept = []
+        then lift id) and takes its id as ``lift_id``; a station without
+        a ``position`` gets one from its pre-snap elevation vs the lift's
+        range (:37-54, :186-214).  Orphans go (:88-94).  Each lift lists
+        its stations (FeatureExporter.ts:95-114) in Spark's ``array_sort``
+        order."""
+        kept, stations = [], defaultdict(list)
         for o in self.objs:
             if o["spot_type"] != "lift_station":
                 kept.append(o)
@@ -577,14 +554,21 @@ class _Region:
             lid = min(cands)[2]
             line = self.shape(self.obj[lid]["geometry"])
             point = self.shape(o["geometry"])["coordinates"]
-            o["inferred_position"] = geo.infer_station_position(
-                point[2] if len(point) >= 3 else None, line)
+            if o["position"] is None:
+                o["position"] = geo.infer_station_position(
+                    point[2] if len(point) >= 3 else None, line)
             o["geometry"] = _dumps({
                 "coordinates": geo.snap_point_to_line(point, line),
                 "type": "Point"})
-            o["associated_lift_id"] = lid
+            o["lift_id"] = lid
+            stations[lid].append({k: o[k] for k in STATION_FIELDS})
             kept.append(o)
         self.objs = kept
+        for o in self.objs:
+            if o["obj_type"] == "lift":
+                o["stations"] = sorted(
+                    stations[o["id"]],
+                    key=lambda st: _struct_key(st, STATION_FIELDS))
 
     def finish(self) -> None:
         """Passes 9/10: count members and add A2 statistics (null without a
@@ -617,14 +601,14 @@ class _Region:
 def cluster_region(objects, ski_areas, pairs) -> tuple[list, list]:
     """Passes 1–8 and the pass 9/10 clean-up over one region's rows.
 
-    ``objects`` are dicts with the ``OBJECT_COLUMNS`` of
-    ``prepare_objects``, ``ski_areas`` dicts with ``SKI_AREA_COLUMNS``
-    and ``pairs`` the region's ``(a, b, distance_km, covered)`` rows of
-    ``proximity_pairs``.  Returns ``(objects, ski_areas)``: the objects
-    that stay, with ``associated_lift_id`` and ``inferred_position`` added,
-    and the ski areas that stay, with ``n_members`` and ``statistics``
-    added.  Rows are walked in id order, so the result does not depend on
-    input order."""
+    ``objects`` are the region's ``prepare_objects`` rows as dicts,
+    ``ski_areas`` dicts with ``SKI_AREA_COLUMNS`` and ``pairs`` the
+    region's ``(a, b, distance_km, covered)`` rows of ``proximity_pairs``.
+    Returns ``(objects, ski_areas)``: the object rows that stay, with their
+    ``ski_areas``, a station's snapped ``geometry``, ``lift_id`` and
+    ``position`` and a lift's ``stations`` written in, and the ski areas
+    that stay, with ``n_members`` and ``statistics`` added.  Rows are
+    walked in id order, so the result does not depend on input order."""
     region = _Region(objects, ski_areas, pairs)
     region.site_geometry()
     region.polygon_claims()
@@ -653,19 +637,19 @@ def _records(rows: pd.DataFrame, columns) -> list[dict]:
             for vals in rows[list(columns)].itertuples(index=False, name=None)]
 
 
-def _walk_group(rows: pd.DataFrame) -> pd.DataFrame:
-    """``applyInPandas`` body: one region's tagged rows → walked rows."""
-    kind = rows["kind"]
-    pairs = rows[kind == "pair"]
+def _walk_group(rows: pd.DataFrame, object_columns, columns) -> pd.DataFrame:
+    """``applyInPandas`` body: one region's rows → its walked object and
+    ski-area rows, with ``columns``."""
+    obj_type = rows["obj_type"]
+    pairs = rows[obj_type == "pair"]
     objs, sas = cluster_region(
-        _records(rows[kind == "object"], OBJECT_COLUMNS),
-        _records(rows[kind == "ski_area"], SKI_AREA_COLUMNS),
+        _records(rows[~obj_type.isin(("ski_area", "pair"))], object_columns),
+        _records(rows[obj_type == "ski_area"], SKI_AREA_COLUMNS),
         zip(pairs["id"], pairs["other"], pairs["distance_km"].map(float),
             pairs["covered"].map(bool)))
-    out = ([{"kind": "object", **o} for o in objs]
-           + [{"kind": "ski_area", **s} for s in sas])
+    out = objs + [{"obj_type": "ski_area", **s} for s in sas]
     return pd.DataFrame({c: pd.Series([r.get(c) for r in out], dtype=object)
-                         for c in WALK_COLUMNS})
+                         for c in columns})
 
 
 # ---------------------------------------------------------------------------
@@ -674,11 +658,14 @@ def _walk_group(rows: pd.DataFrame) -> pd.DataFrame:
 
 def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
                       lifts: DataFrame, spots: DataFrame) -> dict[str, DataFrame]:
-    """Run passes 1–10; returns the augmented layers.
+    """Run passes 1–10; returns the clustered ``ski_areas``, ``runs``,
+    ``lifts`` and ``spots``.
 
     Inputs are the formatted (and for runs, normalized + site-joined)
-    layers.  ``ski_areas.ski_areas``-style membership lives on the objects
-    (ids of their ski areas), exactly like the reference's working table.
+    layers.  Membership lives on the objects (``ski_areas``: the ids of
+    their ski areas), exactly like the reference's working table.  The
+    region walk carries each run, lift and spot row whole and returns it
+    as the output row, so each output is one cut of the walked rows.
     """
     objs = prepare_objects(runs, lifts, spots)
     sas = ski_areas.select(
@@ -712,76 +699,40 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
                                      F.xxhash64("id").alias("dst"))))
     regions = connected_components(edges)
 
-    # Step 3: passes 1–10 per region.
-    tagged = (objs.withColumn("kind", F.lit("object"))
-              .unionByName(sas.withColumn("kind", F.lit("ski_area")),
+    # Step 3: passes 1–10 per region; ``obj_type`` tells the rows apart.
+    tagged = (objs
+              .unionByName(sas.withColumn("obj_type", F.lit("ski_area")),
                            allowMissingColumns=True)
               .unionByName(pairs.select(
                   F.col("a").alias("id"), F.col("b").alias("other"),
-                  "distance_km", "covered", F.lit("pair").alias("kind")),
+                  "distance_km", "covered", F.lit("pair").alias("obj_type")),
                   allowMissingColumns=True))
     rows = (tagged.join(regions, F.xxhash64("id") == regions["vertex"])
             .withColumnRenamed("component", "region"))
-    types = {f.name: f.dataType for f in (*objs.schema, *sas.schema)}
-    types.update(kind=StringType(), associated_lift_id=StringType(),
-                 inferred_position=StringType(), n_members=LongType(),
+    columns = (*objs.columns, *(c for c in sas.columns if c not in objs.columns),
+               "n_members", "statistics")
+    types = {f.name: f.dataType for f in (*sas.schema, *objs.schema)}
+    types.update(n_members=LongType(),
                  statistics=DataType.fromDDL(STATISTICS_DDL))
+    object_columns = objs.columns   # the closure ships no DataFrame
+
+    def walk(region_rows: pd.DataFrame) -> pd.DataFrame:
+        return _walk_group(region_rows, object_columns, columns)
+
     walked = truncate_lineage(rows.groupBy("region").applyInPandas(
-        _walk_group, StructType([StructField(c, types[c])
-                                 for c in WALK_COLUMNS])))
-    objs = (walked.filter(F.col("kind") == "object")
-            .select(*OBJECT_COLUMNS, *STATION_COLUMNS))
-    sas = (walked.filter(F.col("kind") == "ski_area")
-           .select(*SKI_AREA_COLUMNS, "n_members", "statistics"))
+        walk, StructType([StructField(c, types[c]) for c in columns])))
 
-    # write memberships back to the layers
-    def apply_membership(layer: DataFrame) -> DataFrame:
-        m = objs.select(F.col("id").alias("__oid"), F.col("ski_areas")
-                        .alias("__sa"))
-        return (layer.drop("ski_areas")
-                .join(m, layer["id"] == F.col("__oid"), "left")
-                .withColumn("ski_areas",
-                            F.coalesce("__sa", F.array().cast("array<string>")))
-                .drop("__oid", "__sa"))
-
-    # Station write-back (J5/W3): spots get snapped geometry + liftId +
-    # inferred position, orphans drop; lifts get the stations[] array of
-    # station features (FeatureExporter.ts:95-114).
-    station_assoc = objs.filter(F.col("associated_lift_id").isNotNull())
-    spots_out = (apply_membership(spots).join(
-        station_assoc.select(
-            F.col("id").alias("station_id"),
-            F.col("associated_lift_id").alias("__alift"),
-            F.col("geometry").alias("__snapg"),
-            F.col("inferred_position").alias("__ipos")),
-        F.col("id") == F.col("station_id"), "left")
-        .filter((F.col("spot_type") != "lift_station")
-                | F.col("station_id").isNotNull())
-        .withColumn("geometry", F.coalesce("__snapg", "geometry"))
-        .withColumn("lift_id", F.coalesce("__alift", "lift_id"))
-        .withColumn("position", F.coalesce("position", "__ipos"))
-        .drop("station_id", "__alift", "__snapg", "__ipos"))
-
-    station_structs = (
-        spots_out.filter((F.col("spot_type") == "lift_station")
-                         & F.col("lift_id").isNotNull())
-        .select(F.col("lift_id").alias("__lid"),
-                F.struct("id", "name", "position", "entry", "exit",
-                         "geometry").alias("__st")))
-    lifts_out = (apply_membership(lifts)
-                 .join(station_structs.groupBy("__lid")
-                       .agg(F.array_sort(F.collect_list("__st"))
-                            .alias("__sts")),
-                       F.col("id") == F.col("__lid"), "left")
-                 .withColumn("stations",
-                             F.coalesce("__sts",
-                                        F.array().cast(STATION_ARRAY_DDL)))
-                 .drop("__lid", "__sts"))
+    def cut(obj_type: str, layer: DataFrame) -> DataFrame:
+        # ``ski_areas`` goes last: exported features list their
+        # properties in column order, memberships after the layer's own
+        return (walked.filter(F.col("obj_type") == obj_type)
+                .select(*(c for c in layer.columns if c != "ski_areas"),
+                        "ski_areas"))
 
     return {
-        "ski_areas": sas,
-        "runs": apply_membership(runs),
-        "lifts": lifts_out,
-        "spots": spots_out,
-        "objects": objs.drop("inferred_position"),
+        "ski_areas": walked.filter(F.col("obj_type") == "ski_area")
+        .select(*SKI_AREA_COLUMNS, "n_members", "statistics"),
+        "runs": cut("run", runs),
+        "lifts": cut("lift", lifts),
+        "spots": cut("spot", spots),
     }

@@ -65,8 +65,10 @@ def _empty_str_array() -> Column:
 
 # Station features attached to lifts by clustering pass 8
 # (FeatureExporter.ts:95-114: geometry + spot properties per station).
-STATION_ARRAY_DDL = ("array<struct<id:string,name:string,position:string,"
-                     "entry:boolean,exit:boolean,geometry:string>>")
+STATION_FIELDS = {"id": "string", "name": "string", "position": "string",
+                  "entry": "boolean", "exit": "boolean", "geometry": "string"}
+STATION_ARRAY_DDL = "array<struct<{}>>".format(
+    ",".join(f"{k}:{t}" for k, t in STATION_FIELDS.items()))
 
 
 def _websites(tags: Column) -> Column:

@@ -93,9 +93,8 @@ def prepare(spark: SparkSession,
         spots = checkpoint(add_elevation(spots, *elevation_caches),
                            "spots_elevation")
 
-    out = cluster_ski_areas(ski_areas, runs, lifts, spots)
-    del out["objects"]      # clustering's working table; no sink reads it
-    out = attach_viewport_hints(out)
+    out = attach_viewport_hints(
+        cluster_ski_areas(ski_areas, runs, lifts, spots))
     return {k: checkpoint(v, f"output_{k}") for k, v in out.items()}
 
 
